@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.report import hours_passed
+from .transform import LINEAGE_COLS
+
 AD_LINK_PREFIX = "https://www.facebook.com/ads/library/?id="
 
 
@@ -39,9 +42,9 @@ def generate_report(curated: DataFrame, as_of: str) -> DataFrame:
         F.unix_timestamp(F.lit(as_of).cast("timestamp")) - F.col("start_date_ts"),
     )
     return (
-        curated.withColumn("hours_passed", F.bround(seconds_passed / 3600.0, 0).cast("long"))
+        curated.withColumn("hours_passed", hours_passed(seconds_passed))
         .filter(F.col("is_active"))
-        .orderBy(F.desc("hours_passed"), F.asc("__group_idx"), F.asc("__pos"))
+        .orderBy(F.desc("hours_passed"), *LINEAGE_COLS)
         .limit(10)
         .select(
             "ad_id",

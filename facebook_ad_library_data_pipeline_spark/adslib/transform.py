@@ -10,17 +10,18 @@ declarative plan. Operator-by-operator parity map (SURVEY.md §2.A):
                                    position (the reference relies on
                                    Python list order)
 * P3  flat projection/rename     → select/alias (ad_archive_id→ad_id …)
-* P4  running max in group       → max().over(rowsBetween) — the
-                                   reference's prefix-max accumulator
+* P4  running max in group       → max().over(rowsBetween) per
+                                   (file, group) — the reference's
+                                   prefix-max accumulator
                                    (transform_raw_data.py:114-116), NOT
                                    a group max
 * P5  media_mix classification   → exists() over cards + when/otherwise
 * P6  ad_text with fallback      → element_at(cards,1).body vs
                                    body.text, coalesce to ''
-* P7  language detection         → Arrow-batched pandas_udf (langdetect
-                                   if importable, seeded; else the
-                                   stopword heuristic) — the ONLY
-                                   Python in the pipeline
+* P7  language detection         → functions.text.detected_col, the
+                                   native stopword-overlap detector
+                                   shared with q_lang_id (empty text →
+                                   'undetected')
 * V1/V2 validate + split         → validation_error via concat_ws of
                                    failed checks; two filters
 * D1-D3 keep-first dedups        → row_number windows ordered by
@@ -34,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import detected_col, tokens_col
 from ..operators.dedup import dedup_keep_first
 from ..operators.quality import validation_error_column
 from .schemas import AD_SCHEMA, TS_MAX, TS_MIN
@@ -45,15 +47,17 @@ LINEAGE_COLS = ["__group_idx", "__pos"]
 
 def read_raw_ads(spark: SparkSession, path: str) -> DataFrame:
     """S6: one JSON file (array of ad groups) → one row per ad with
-    lineage (group_idx, pos). wholetext mirrors the reference's
+    lineage (file, group_idx, pos). wholetext mirrors the reference's
     json.load-the-file contract (transform_raw_data.py:193-194); with
-    many raw files this parallelizes per file."""
+    many raw files this parallelizes per file. group_idx restarts in
+    every file, so the file path rides along from the same scan."""
     raw = spark.read.text(path, wholetext=True)
     groups = raw.select(
-        F.posexplode(F.from_json(F.col("value"), RAW_JSON_TYPE)).alias("__group_idx", "ads")
+        F.col("_metadata.file_path").alias("__file"),
+        F.posexplode(F.from_json(F.col("value"), RAW_JSON_TYPE)).alias("__group_idx", "ads"),
     )
     return groups.select(
-        "__group_idx", F.posexplode("ads").alias("__pos", "ad")
+        "__file", "__group_idx", F.posexplode("ads").alias("__pos", "ad")
     )
 
 
@@ -85,47 +89,9 @@ def _media_mix(has_video: Column, has_image: Column) -> Column:
     )
 
 
-@F.pandas_udf(T.StringType())
-def detect_lang_udf(texts):  # type: ignore[no-untyped-def]
-    """P7: the reference's langdetect call (transform_raw_data.py:132-134)
-    as an Arrow-batched pandas UDF. langdetect is seeded for determinism
-    when present; otherwise a deterministic stopword-overlap heuristic
-    (same fallback contract: empty text → 'undetected')."""
-    try:
-        from langdetect import DetectorFactory, detect
-
-        DetectorFactory.seed = 0
-
-        def one(t: str) -> str:
-            if not t:
-                return "undetected"
-            try:
-                return detect(t)
-            except Exception:
-                return "undetected"
-
-    except ImportError:
-        from ..functions.text import STOPWORDS
-
-        def one(t: str) -> str:
-            if not t:
-                return "undetected"
-            toks = set(t.split(" "))
-            scores = {
-                lang: len(toks & set(ws)) for lang, ws in sorted(STOPWORDS.items())
-            }
-            best = max(scores.values())
-            if best == 0:
-                return "undetected"
-            return min(lang for lang, s in scores.items() if s == best)
-
-    return texts.map(one)
-
-
 def parse_ads(exploded: DataFrame) -> DataFrame:
     """P3-P7: one select from the nested ad struct to the flat curated
-    shape (+ lineage). The language UDF sees only ad_text (projection
-    kept tight around the Catalyst-opaque column)."""
+    shape (+ lineage)."""
     ad = F.col("ad")
     fmt = ad["snapshot"]["display_format"]
     cards = ad["snapshot"]["cards"]
@@ -144,11 +110,12 @@ def parse_ads(exploded: DataFrame) -> DataFrame:
     # P4: running (prefix) max of coalesce(collation_count, 0) in group
     # order — parity with the mutable accumulator at
     # transform_raw_data.py:114-116 incl. its quirk of NOT being the
-    # group max when counts decrease mid-group.
+    # group max when counts decrease mid-group. group_idx restarts in
+    # every file, so the partition is (file, group).
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy("__group_idx")
+        Window.partitionBy("__file", "__group_idx")
         .orderBy("__pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -170,7 +137,7 @@ def parse_ads(exploded: DataFrame) -> DataFrame:
         _media_mix(has_video, has_image).alias("media_mix"),
         ad_text.alias("ad_text"),
     )
-    return parsed.withColumn("ad_lang_code", detect_lang_udf("ad_text"))
+    return parsed.withColumn("ad_lang_code", detected_col(tokens_col("ad_text")))
 
 
 def _validity_rules() -> list[tuple[str, Column]]:

@@ -1,6 +1,6 @@
 """Text-analysis operators for the LLM-data pipeline (north-star
 surface; the reference's only text ops are the ad_text extraction P6
-and langdetect P7, ``transform_raw_data.py:121-134``).
+and language detection P7, ``transform_raw_data.py:121-134``).
 
 All operators are native column expressions (codegen'd, zero Python):
 language-ID is a stopword-overlap heuristic with the reference's

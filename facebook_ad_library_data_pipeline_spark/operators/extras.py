@@ -1,15 +1,16 @@
 """Remaining operator surface: unpivot/stack, grouped-map pandas
-(applyInPandas), sampling, ingest ids, and the pandas-UDF language
-detector as a registry query.
+(applyInPandas), sampling, ingest ids, and a scalar pandas-UDF twin of
+the native language detector as a registry query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..adslib.transform import detect_lang_udf
 from ..catalog import load_table
+from ..functions.text import _LANG_ORACLE, STOPWORDS
 from ..registry import query
 
 _UNPIVOT_ORACLE = """
@@ -93,35 +94,33 @@ def q_grouped_pandas_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Conditional oracle, resolved at import time IN THE RUNNING ENV: when
-# langdetect is absent the UDF runs its deterministic stopword-overlap
-# fallback, which is semantically identical to the native q_lang_id
-# (same alphabetical tie-break — equivalence asserted in
-# tests/test_extras.py), so the native oracle applies verbatim. When
-# langdetect IS installed the UDF returns real langdetect labels and
-# the query is rows-only by nature — exactly what the reference's P7
-# is. The registration sees the same env the driver runs in, so the
-# oracle can never be attached to the wrong path.
-try:  # pragma: no cover - environment probe
-    import langdetect  # noqa: F401
+@F.pandas_udf(T.StringType())
+def _stopword_lang_udf(texts):  # type: ignore[no-untyped-def]
+    """Per-row Python reference of functions/text.detected_col: argmax
+    of distinct-token stopword overlap, all-zero → 'undetected', ties
+    alphabetical."""
 
-    _LANG_UDF_ORACLE = None
-except ImportError:
-    from ..functions.text import _LANG_ORACLE as _NATIVE_LANG_ORACLE
+    def one(t: str | None) -> str:
+        toks = set((t or "").split(" "))
+        scores = {lang: len(toks & set(ws)) for lang, ws in sorted(STOPWORDS.items())}
+        best = max(scores.values())
+        if best == 0:
+            return "undetected"
+        return min(lang for lang, s in scores.items() if s == best)
 
-    _LANG_UDF_ORACLE = (
-        f"SELECT doc_id, detected_lang FROM ({_NATIVE_LANG_ORACLE}) t"
-    )
+    return texts.map(one)
+
+
+_LANG_UDF_ORACLE = f"SELECT doc_id, detected_lang FROM ({_LANG_ORACLE}) t"
 
 
 @query("q_lang_id_udf", oracle=_LANG_UDF_ORACLE, tags=("pandas-udf", "llm", "text"))
 def q_lang_id_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7 as an Arrow-batched pandas UDF (the reference's langdetect
-    path; deterministic heuristic fallback when langdetect is absent —
-    oracle-backed on the fallback path via the conditional registration
-    above, rows-only when real langdetect is present)."""
+    """The stopword language ID as an Arrow-batched scalar pandas UDF —
+    the Python twin the native q_lang_id is checked against
+    (tests/test_extras.py); same labels, so the same oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", detect_lang_udf("text").alias("detected_lang"))
+    return docs.select("doc_id", _stopword_lang_udf("text").alias("detected_lang"))
 
 
 SAMPLE_FRACTIONS = {"en": 0.25, "de": 1.0, "fr": 1.0, "es": 1.0, "zh": 1.0}

@@ -8,7 +8,7 @@ engine-specific → rows-only checks with determinism/soundness tests in
 tests/test_extras.py; the count-distinct they estimate is checked
 against exact counts in tests. The grouped-agg pandas UDF (IQR) is the
 one pandas-UDF flavor the rest of the repo didn't already cover
-(scalar: adslib.transform.detect_lang_udf; grouped map:
+(scalar: extras.q_lang_id_udf; grouped map:
 operators/extras; mapInPandas: multimodal/media; stateful:
 streaming/stateful).
 """

@@ -80,6 +80,22 @@ def test_running_max_is_prefix_not_group_max(pipeline_result):
     assert by_id["A4"].grouped_ads_count == 0
 
 
+def test_running_max_restarts_per_file(spark, tmp_path):
+    """group_idx restarts in every file: group 0 of file a and group 0
+    of file b are different groups, each with its own prefix max."""
+    files = {
+        "a.json": [[_ad("F1", coll="H1", cnt=5, text="f one"),
+                    _ad("F2", coll="H2", text="f two")]],
+        "b.json": [[_ad("F3", coll="H3", cnt=1, text="f three"),
+                    _ad("F4", coll="H4", cnt=2, text="f four")]],
+    }
+    for name, groups in files.items():
+        (tmp_path / name).write_text(json.dumps(groups))
+    curated, _ = transform_raw_ads(spark, str(tmp_path))
+    got = {r.ad_id: r.grouped_ads_count for r in curated.collect()}
+    assert got == {"F1": 5, "F2": 5, "F3": 1, "F4": 2}
+
+
 def test_media_mix_all_four(pipeline_result):
     curated, _, _ = pipeline_result
     by_id = {r.ad_id: r for r in curated}

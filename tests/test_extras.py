@@ -12,12 +12,6 @@ REGISTRY = load_all()
 
 
 def test_lang_udf_matches_native_heuristic(spark, sf_dir):
-    try:
-        import langdetect  # noqa: F401
-
-        return  # real langdetect present → values legitimately differ
-    except ImportError:
-        pass
     udf_rows = {
         r.doc_id: r.detected_lang
         for r in REGISTRY["q_lang_id_udf"].fn(spark, sf_dir).collect()

@@ -41,6 +41,21 @@ def test_global_topk_never_full_sorts(spark, sf_dir):
     assert has_node(REGISTRY["q_flagship"].fn(spark, sf_dir), "TakeOrderedAndProject")
 
 
+def test_ads_pipeline_runs_no_python(spark, tmp_path):
+    # P7 language ID is the native detector: neither output frame of
+    # the ad pipeline may evaluate a Python UDF
+    import json
+
+    from facebook_ad_library_data_pipeline_spark.adslib.transform import transform_raw_ads
+
+    ad = {"ad_archive_id": "A1", "is_active": True, "start_date": 1700000000,
+          "snapshot": {"display_format": "VIDEO", "body": {"text": "the ad"}}}
+    (tmp_path / "raw.json").write_text(json.dumps([[ad]]))
+    for df in transform_raw_ads(spark, str(tmp_path / "raw.json")):
+        assert not has_node(df, "ArrowEvalPython")
+        assert not has_node(df, "BatchEvalPython")
+
+
 def test_inverted_index_join_not_broadcast(spark, sf_dir):
     # the exploded shingle self-join must shuffle, not broadcast.
     # Built from jaccard_pairs directly: the registered query returns
