@@ -172,16 +172,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view for the SQL API."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+def register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
+    """Register the named tables as temp views for the SQL API; a query
+    names only the tables its SQL reads."""
+    for name in tables:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:

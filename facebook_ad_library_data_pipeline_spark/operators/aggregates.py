@@ -139,7 +139,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (c_mktsegment), ())
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API (same Catalyst plan as the
     DataFrame rollup/cube path)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders", "customer")
     return spark.sql(
         """
         SELECT o_orderstatus,

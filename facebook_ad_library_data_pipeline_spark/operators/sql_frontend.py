@@ -41,7 +41,7 @@ def q_sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same text run by DuckDB. nation auto-broadcasts (under the
     10 MB threshold) without hints — the SQL front end inherits every
     Catalyst physical strategy."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "orders", "customer", "nation")
     return spark.sql(_SQL_REVENUE_BY_NATION)
 
 
@@ -71,7 +71,7 @@ def q_sql_top_customer_per_segment(spark: SparkSession, sf_dir: str) -> DataFram
     """SQL window-over-aggregate (top-3 spenders per segment) with a
     c_custkey tie-break so row_number is total-ordered — the same
     determinism rule every DataFrame-side window query here follows."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_TOP_CUSTOMER_PER_SEGMENT)
 
 
@@ -96,7 +96,7 @@ def q_sql_cte_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     The single-partition window is fine HERE because `yearly` is
     year-cardinality (≤ 10 rows) — the same pattern over a fact table
     would need a partition key."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_SQL_CTE_YOY)
 
 
@@ -122,7 +122,7 @@ def q_sql_lateral_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     window/aggregate join, NOT an O(customers × orders) nested loop;
     (o_orderdate, o_orderkey) DESC makes the pick total-ordered so both
     engines choose the same row."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_LATERAL_LATEST)
 
 
@@ -145,7 +145,7 @@ def q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside-out clause nesting. Must hit identical physical plans and
     identical results as the ANSI form: pipe syntax is sugar over the
     same logical plan, which the shared oracle proves."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         FROM orders
@@ -211,7 +211,7 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the anchor's partitioning carries through the loop). Integer div
     is the only arithmetic, so DuckDB's WITH RECURSIVE replays the
     recursion bit-for-bit."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer")
     return spark.sql(_SQL_RECURSIVE_SPARK)
 
 
@@ -244,7 +244,7 @@ def q_sql_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the group's representative variant is engine-chosen.
     At scale collation rides the same hash shuffle as any group-by —
     the collation key is computed scan-side."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "documents")
     return spark.sql(
         """
         WITH mixed AS (
@@ -285,7 +285,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing changes nothing about the answer. Each statement is still
     a full Catalyst-planned distributed query — scripting sequences
     plans, it does not row-loop."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         BEGIN
@@ -328,7 +328,7 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay inside WholeStageCodegen with zero serialization boundary,
     which is why they're the right tool for shareable business logic
     at 100 TB; the oracle replays the expanded expressions directly."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION margin_cents(p DOUBLE)
@@ -378,7 +378,7 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning still see them, unlike string concatenation
     which risks both injection and plan-cache misses). The oracle
     inlines the same constants."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderpriority,

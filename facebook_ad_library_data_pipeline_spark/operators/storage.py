@@ -919,16 +919,16 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
         restated = events.filter(
             (F.col("event_type") == DPO_TOUCHED) & (F.col("value") >= 1.0)
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # mode("overwrite") + dynamic: only partitions present in
-            # `restated` (just event_type=purchase) are replaced; the
-            # other four directories are never listed, touched, or
-            # rewritten (asserted byte-identical in tests/test_plans.py)
-            restated.write.partitionBy("event_type").mode("overwrite").parquet(out)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # mode("overwrite") + dynamic: only partitions present in
+        # `restated` (just event_type=purchase) are replaced; the other
+        # four directories are never listed, touched, or rewritten
+        # (asserted byte-identical in tests/test_plans.py)
+        (
+            restated.write.partitionBy("event_type")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(out)
+        )
         _DPO_AUDIT[key] = {"before": before, "after": _dpo_snapshot(out)}
         _PART_CACHE[("dpo",) + key] = out
     return out

@@ -18,14 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, register_views
 from ..functions.money import money_sum, money_sum_sql
 from ..registry import query
-
-
-def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 _EXISTS_ORACLE = """
@@ -42,7 +37,7 @@ WHERE EXISTS (
 def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS → Catalyst rewrites to a LEFT SEMI hash join
     (RewritePredicateSubquery); never a per-row probe."""
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_EXISTS_ORACLE)
 
 
@@ -63,7 +58,7 @@ def q_subquery_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     set empties the result) — NOT EXISTS sidesteps the trap and is the
     form that scales (null-aware anti join is a broadcast-only
     strategy in Spark)."""
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_NOT_EXISTS_ORACLE)
 
 
@@ -81,7 +76,7 @@ WHERE s_nationkey IN (
 def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested IN subqueries (region → nation → supplier): both levels
     become semi joins; the tiny inner sides broadcast."""
-    _views(spark, sf_dir, "supplier", "nation", "region")
+    register_views(spark, sf_dir, "supplier", "nation", "region")
     return spark.sql(_IN_ORACLE)
 
 
@@ -97,7 +92,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: the 1-row aggregate runs once as
     its own tiny job and is broadcast into the filter — O(n) + O(1),
     not O(n²)."""
-    _views(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, "customer")
     return spark.sql(_SCALAR_ORACLE)
 
 
@@ -116,7 +111,7 @@ def q_subquery_corr_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelated into a per-custkey aggregate joined back on the
     correlation key — one shuffle on o_custkey, not a per-row rescan
     of orders."""
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_CORR_SCALAR_ORACLE)
 
 

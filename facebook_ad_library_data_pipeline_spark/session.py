@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the one owner of session policy.
 
 Reference behavior being replaced: a single-process pandas pipeline
 (``/root/reference/main.py:13-25``) with UTC-pinned datetimes
@@ -7,17 +7,62 @@ Spark session timezone to UTC so timestamp semantics match both the
 reference and the DuckDB oracle (UTC-naive timestamps).
 
 Scale posture: AQE on (runtime coalesce + skew-join splitting),
-shuffle partitions sized to local cores (on a real cluster this is
-``2-3 × total executor cores`` — set via SPARK_GRAFT_SHUFFLE_PARTITIONS).
+shuffle partitions = task slots (on a real cluster this is
+``2-3 × total executor cores``). Slots and heap are sized to the host
+(``default_cpus``/``default_driver_mem``); ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` override them.
+
+Session contract: a query never leaves the caller's conf changed. A
+query-local setting goes on a ``newSession()`` child or a reader/writer
+option; a stream start that needs one uses ``conf_scope``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> str:
+    """Task slots: every CPU this process may run on."""
+    return str(len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """Driver heap: a quarter of physical memory, clamped to 1-16g.
+
+    NOT the biggest heap that fits: with an oversized heap (90g) GC
+    almost never runs, so the GC-triggered ContextCleaner never purges
+    finished broadcasts/shuffle state — profiled 2-50× degradation over
+    a 67-query session. The 16g cap keeps GC regular."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(16 * 1024, max(1024, kib // 4 // 1024))}m"
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Apply ``settings`` to ``spark``'s conf for the body, then restore
+    each key exactly: its old value, or ``unset`` if it had none (a
+    get-then-set restore would turn "unset" into an explicit value).
+
+    For stream starts only: ``DataStreamWriter.start()`` clones the
+    session, so the started query keeps the settings and the caller's
+    conf is back as it was before the drain begins."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> SparkSession:
@@ -25,10 +70,9 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
 
     All knobs are configuration, not custom Catalyst code (SURVEY.md §4):
     UTC session tz, AQE + partition coalescing + skew-join handling,
-    Arrow for pandas interchange, shuffle partitions ≈ cores for local.
+    Arrow for pandas interchange, shuffle partitions = task slots.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or default_cpus()
     # Task retries: local mode takes maxFailures from the MASTER STRING
     # (local[N] pins it to 1; spark.task.maxFailures is ignored), so
     # retry-path tests/evidence (injected first-attempt task failures —
@@ -52,17 +96,15 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # NOT the biggest heap that fits: with an oversized heap (90g)
-        # GC almost never runs, so the GC-triggered ContextCleaner never
-        # purges finished broadcasts/shuffle state — profiled 2-50×
-        # degradation over a 67-query session. 16g keeps GC regular and
-        # the whole bench stable.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # UI off for bench/test hygiene; scripts/scale_evidence.py flips
         # it on to read measured shuffle metrics from the REST API
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
@@ -90,11 +132,8 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
         # Unix-domain sockets for every JVM<->Python channel (Spark 4.1):
         # workers, Arrow batches, the tws state server. Same-host IPC
         # without loopback-TCP handshake/port churn — measured A/B in
-        # OPTIMIZATION_r16.md. Env-gated for re-measure.
-        .config(
-            "spark.python.unix.domain.socket.enabled",
-            os.environ.get("SPARK_GRAFT_PY_UDS") or "true",
-        )
+        # OPTIMIZATION_r16.md §8.
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

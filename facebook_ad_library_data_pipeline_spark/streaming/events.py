@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..catalog import SCHEMAS, _events_nanos_schema, events_ts_unit, load_table
 from ..functions.money import money_sum
 from ..registry import query
+from ..session import conf_scope
 
 # ------------------------------------------------------------- batch twins
 
@@ -172,6 +173,24 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(SCHEMAS["events"]).parquet(str(stream_dir))
 
 
+def rocksdb_changelog_session(spark: SparkSession) -> SparkSession:
+    """Child session on the RocksDB state-store provider with changelog
+    checkpointing: commits append a changelog and snapshot upload is
+    maintenance work (~10x less per-commit work on the typed-state
+    family, OPTIMIZATION_r16.md §7). The one definition of the pair for
+    every RocksDB stream and checkpoint builder."""
+    scoped = spark.newSession()
+    scoped.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    scoped.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
+    )
+    return scoped
+
+
 def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -201,8 +220,6 @@ def run_stream_to_memory(
     # stateful query after 70 batch queries). One explicit GC before
     # stream start is ~100ms on a 16g heap.
     spark.sparkContext._jvm.System.gc()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint_location is not None:
         # callers that re-open the checkpoint afterwards (the
@@ -213,7 +230,10 @@ def run_stream_to_memory(
         # ITSELF — the backfill path; await its self-termination
         # instead of processAllAvailable.
         writer = writer.trigger(availableNow=True)
-    q = writer.start()
+    # start() clones the session: the query keeps its partitions and
+    # the caller's conf is restored before the drain begins
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": partitions}):
+        q = writer.start()
     try:
         if drained is not None:
             # Operators in ProcessingTime time mode (state TTL, timers)
@@ -246,7 +266,6 @@ def run_stream_to_memory(
             q.processAllAvailable()
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @query("q_stream_tumbling", oracle=_TUMBLING_ORACLE, tags=("streaming",))
@@ -493,18 +512,7 @@ def q_stream_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure configuration (session-scoped here via a child session, so a
     registry query never mutates the caller's conf), and the identical
     hash proves the swap changes durability mechanics, not results."""
-    scoped = spark.newSession()
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # the changelog mode the docstring describes (and the tws family
-    # measured ~10x cheaper per-commit, scripts/tws_commit_metrics.py):
-    # commits append a changelog; snapshot upload is maintenance work
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
+    scoped = rocksdb_changelog_session(spark)
     events = load_events_stream(scoped, sf_dir).withWatermark("ts", "1 hour")
     agg = tumbling_counts(events)
     run_stream_to_memory(agg, "stream_tumbling_rocksdb_out")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import conf_scope
 
 N_SOURCE_FILES = 4
 
@@ -237,18 +238,16 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import shutil
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        stream.writeStream.foreachBatch(append_partial)
-        .option("checkpointLocation", str(run_dir / "_checkpoint"))
-        .start()
-    )
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+        q = (
+            stream.writeStream.foreachBatch(append_partial)
+            .option("checkpointLocation", str(run_dir / "_checkpoint"))
+            .start()
+        )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     try:
         partials = spark.read.parquet(sink)  # epoch= dirs discovered as a column
@@ -307,22 +306,16 @@ def _write_reload_batch(df: DataFrame, batch_id: int, sink: str) -> None:
     a batch's rows INTERLEAVE with other batches' inside shared day
     partitions, which only engine-level dynamic overwrite can splice).
 
-    The conf is set on the BATCH's own session: Structured Streaming
-    executes foreachBatch against a cloned SparkSession whose conf was
-    snapshotted at stream start, so setting it on the outer session
-    after .start() would silently not apply."""
-    sess = df.sparkSession
-    prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            _reload_projection(df, batch_id)
-            .write.partitionBy("day", "batch_id")
-            .mode("overwrite")
-            .parquet(sink)
-        )
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    Dynamic mode is a writer option, not a session conf: Structured
+    Streaming runs foreachBatch against a session cloned at stream
+    start, and the option scopes the mode to this one write."""
+    (
+        _reload_projection(df, batch_id)
+        .write.partitionBy("day", "batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(sink)
+    )
 
 
 @query(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.quality import with_validation_error
+from ..session import conf_scope
 from .events import load_events_stream
 
 
@@ -43,19 +44,17 @@ def split_sink_batch(out_dir: str):
 
 def run_streaming_quality_split(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Drive the bounded events stream through the dual-sink split."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    q = (
-        load_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(split_sink_batch(out_dir))
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .start()
-    )
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "32"}):
+        q = (
+            load_events_stream(spark, sf_dir)
+            .writeStream.foreachBatch(split_sink_batch(out_dir))
+            .option("checkpointLocation", f"{out_dir}/_checkpoint")
+            .start()
+        )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def observed_validation_counts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:

@@ -30,6 +30,7 @@ from ..registry import query
 from .events import (
     _TUMBLING_ORACLE,
     load_events_stream,
+    rocksdb_changelog_session,
     run_stream_to_memory,
     tumbling_counts,
 )
@@ -254,26 +255,6 @@ def q_state_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- state CHANGE FEED
 
 
-
-def _rocksdb_changelog_session(spark: SparkSession) -> SparkSession:
-    """Child session pinned to the RocksDB provider WITH changelog
-    checkpointing — the conf pair every changelog-consuming checkpoint
-    builder needs (change feed, per-shard snapshot restore); one
-    helper so a provider/conf rename is fixed once, not per builder."""
-    scoped = spark.newSession()
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    scoped.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        "true",
-    )
-    return scoped
-
-
 def changelog_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the tumbling agg over the EXACT-ntile 4-slice source with
     RocksDB changelog checkpointing on, so the per-batch state deltas
@@ -284,7 +265,7 @@ def changelog_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     ckpt = _CKPT_CACHE.get(key)
     if ckpt is None:
         ckpt = tempfile.mkdtemp(prefix="state_read_cdf_ckpt_")
-        scoped = _rocksdb_changelog_session(spark)
+        scoped = rocksdb_changelog_session(spark)
         src = split_events_dir_ntile(scoped, sf_dir)
         schema = scoped.read.parquet(src).schema
         ev = (
@@ -383,23 +364,11 @@ def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     if ckpt is None:
         ensure_protobuf(spark)
         ckpt = tempfile.mkdtemp(prefix="state_read_tws_ckpt_")
-        scoped = spark.newSession()
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        # commits append changelogs instead of uploading full snapshots
-        # (~10x less per-commit work, scripts/tws_commit_metrics.py);
         # the statestore/state-metadata readers replay changelogs from
         # the empty store, including the batchId=1 time-travel read
         # q_state_reshard does — same mechanics changelog_checkpoint
-        # (below) has always exercised.
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+        # has always exercised.
+        scoped = rocksdb_changelog_session(spark)
         src = split_events_dir_ntile(scoped, sf_dir)
         schema = scoped.read.parquet(src).schema
         ev = (
@@ -710,7 +679,7 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     ckpt = _CKPT_CACHE.get(key)
     if ckpt is None:
         ckpt = tempfile.mkdtemp(prefix="state_read_snap_ckpt_")
-        scoped = _rocksdb_changelog_session(spark)
+        scoped = rocksdb_changelog_session(spark)
         # queue a snapshot on EVERY commit (the maintenance tick then
         # uploads whichever version is queued when it fires)
         scoped.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")

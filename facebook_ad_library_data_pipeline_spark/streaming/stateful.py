@@ -11,7 +11,6 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable
 
 from typing import TYPE_CHECKING
@@ -39,7 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
-from .events import load_events_stream, run_stream_to_memory
+from .events import load_events_stream, rocksdb_changelog_session, run_stream_to_memory
 
 
 class _RowEmitter:
@@ -549,8 +548,8 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
 
     Sharing contract (r10-advice hardening): the family's correctness
     depends on SEQUENTIAL use — two family streams running concurrently
-    would race on shuffle.partitions (set per run_stream_to_memory
-    call) and could collide on sink view names. That invariant was
+    would race on shuffle.partitions (set around each
+    run_stream_to_memory start) and could collide on sink view names. That invariant was
     implicit in the harness (driver and bench both run queries one at a
     time); it is now ASSERTED at entry — any active streaming query on
     the shared session raises before a second stream can start. Sink
@@ -573,30 +572,14 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     scoped = _TWS_SESSION_CACHE.get(key)
     if scoped is None:
         ensure_protobuf(spark)
-        scoped = spark.newSession()
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+        # changelog checkpointing measured at sf0.1 in
+        # OPTIMIZATION_r16.md §7: warm batches drop from ckptLat
+        # 300-2000ms / syncMs 4-30s (summed over 16 partition commits)
+        # to ckptLat 0 / syncMs 0.8-2s
+        scoped = rocksdb_changelog_session(spark)
         scoped.conf.set(
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
             "false",
-        )
-        # Changelog checkpointing: commit = append a small changelog
-        # instead of flush+checkpoint+upload a full RocksDB snapshot
-        # (snapshots move to the background maintenance task). Measured
-        # per-batch with scripts/tws_commit_metrics.py at sf0.1: warm
-        # batches drop from ckptLat 300-2000ms / flushLat 100-700ms /
-        # syncMs 4-30s (summed over 16 partition commits) to ckptLat 0 /
-        # flushLat 0 / syncMs 0.8-2s — ~10x less commit work per batch
-        # on every tws query probed. This is also the production
-        # posture for state-heavy streams (snapshot upload off the
-        # per-batch critical path). Env override for A/B re-measure.
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            os.environ.get("SPARK_GRAFT_TWS_CHANGELOG") or "true",
         )
         _TWS_SESSION_CACHE[key] = scoped
     else:

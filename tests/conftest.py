@@ -18,8 +18,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("tests")
     yield s
 

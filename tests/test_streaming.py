@@ -1092,6 +1092,35 @@ def test_checkpoint_pins_shuffle_partitions(spark, sf_dir, tmp_path):
     assert sink == want
 
 
+def test_stream_partitions_scoped_to_start(spark, sf_dir, tmp_path):
+    """run_stream_to_memory sets shuffle partitions only around
+    writer.start(): the started query (which clones the session) keeps
+    them — its first offset log records "3" — while the caller's conf
+    is the same after the drain as before it."""
+    import json
+
+    from facebook_ad_library_data_pipeline_spark.streaming.events import (
+        load_events_stream,
+        run_stream_to_memory,
+        tumbling_counts,
+    )
+
+    before = dict(spark.conf.getAll)
+    agg = tumbling_counts(load_events_stream(spark, sf_dir).withWatermark("ts", "1 hour"))
+    ckpt = tmp_path / "ckpt"
+    try:
+        run_stream_to_memory(
+            agg, "partitions_scope_out", partitions="3", checkpoint_location=str(ckpt)
+        )
+        assert spark.table("partitions_scope_out").count() > 0
+    finally:
+        spark.catalog.dropTempView("partitions_scope_out")
+    # offset log: a version line, then the batch metadata JSON
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "3"
+    assert dict(spark.conf.getAll) == before
+
+
 def test_split_sources_deterministic_and_complete(spark, sf_dir):
     """The derived stream-source dirs underpin oracle replay; pin their
     contracts: (a) the ntile split's file i holds EXACTLY the rows
