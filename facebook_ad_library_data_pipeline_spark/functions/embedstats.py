@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
+from ..operators.kmeans import _tdiv
 from ..registry import query
 
 EMBED_DIM = 64
@@ -257,15 +258,6 @@ _POW_STEP = (
 
 def _pow_step_sql(div: str, one: str) -> str:
     return _POW_STEP.replace("{DIV}", div).replace("{ONE}", one)
-
-
-def _tdiv(a: int, b: int) -> int:
-    """Truncation-toward-zero integer division — the Python mirror of
-    Spark SQL `div` and DuckDB `//` (Python's // floors, which differs
-    on negative dividends: -7//2 = -4 but -7 div 2 = -3). Same mirror
-    as operators/kmeans.py; b > 0 at every call site here."""
-    q = abs(a) // abs(b)
-    return -q if (a < 0) != (b < 0) else q
 
 
 def _bitlen1(m: int) -> int:

@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load_table
+from ..catalog import fan_out
 from ..registry import query
-from .similarity import QUERY_VEC_ID, cosine
+from .similarity import QUERY_VEC_ID, _emb_double, cosine
 
 N_CELLS = 16
 N_PROBE = 4
@@ -166,11 +166,6 @@ def assign_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
         ),
     )
     return fan_out(emb).withColumn("cell", F.array_min(cand)["cell"])
-
-
-def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
 
 
 def train_assign_cells(

@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load_table
+from ..catalog import fan_out
 from ..registry import query
-from .similarity import QUERY_VEC_ID, cosine
+from .similarity import QUERY_VEC_ID, _emb_double, cosine
 
 M_SUBSPACES = 8
 K_CODES = 16
@@ -40,11 +40,6 @@ RERANK_N = 50
 
 # (sf_dir) -> list[M][K][subdim] codebooks
 _CODEBOOK_CACHE: dict[str, list[list[list[float]]]] = {}
-
-
-def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
 
 
 def _kmeans(x, k: int, seed: int):

@@ -14,7 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
-from ..functions.money import money_sum, money_sum_sql
+from ..functions.money import (
+    dec_sum,
+    dec_sum_sql,
+    det_round,
+    det_round_sql,
+    money_sum,
+    money_sum_sql,
+)
 from ..registry import query
 
 _Q1_ORACLE = """
@@ -56,12 +63,12 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STATS_ORACLE = """
+_STATS_ORACLE = f"""
 SELECT c_mktsegment,
        count(*)                       AS n_customers,
        count(DISTINCT c_nationkey)    AS n_nations,
-       round(sum(c_acctbal), 2)       AS sum_bal,
-       round(avg(c_acctbal), 4)       AS avg_bal,
+       {money_sum_sql("c_acctbal")} AS sum_bal,
+       {det_round_sql(dec_sum_sql("c_acctbal") + " / count(*)", 4)} AS avg_bal,
        round(min(c_acctbal), 2)       AS min_bal,
        round(max(c_acctbal), 2)       AS max_bal
 FROM customer
@@ -73,13 +80,18 @@ GROUP BY c_mktsegment
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count / countDistinct / sum / avg / min / max in one pass.
     countDistinct expands to a two-phase aggregate (expand + merge) —
-    still a single logical pass, no driver involvement."""
+    still a single logical pass, no driver involvement. sum and avg
+    go through the exact decimal sum: a double sum depends on the
+    partial-sum order, which flips avg_bal's last digit on a half-way
+    tie (167633.53 / 40 = 4190.83825)."""
     c = load_table(spark, sf_dir, "customer")
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.countDistinct("c_nationkey").alias("n_nations"),
-        F.round(F.sum("c_acctbal"), 2).alias("sum_bal"),
-        F.round(F.avg("c_acctbal"), 4).alias("avg_bal"),
+        money_sum(F.col("c_acctbal")).alias("sum_bal"),
+        det_round(dec_sum(F.col("c_acctbal")).cast("double") / F.count(F.lit(1)), 4).alias(
+            "avg_bal"
+        ),
         F.round(F.min("c_acctbal"), 2).alias("min_bal"),
         F.round(F.max("c_acctbal"), 2).alias("max_bal"),
     )

@@ -11,18 +11,16 @@ pruned scans — the two table-layout levers that matter most at 100 TB.
   files. `PartitionFilters` in the plan is the proof (enforced in
   tests/test_plans.py).
 
-Both layouts are built once per session from the testdata (tiny,
-seconds) and cached; the QUERIES against them are the operators under
-test. All layout artifacts live under the system temp dir — bucketed
-tables as EXTERNAL locations (the managed default would land in the
-caller's cwd/spark-warehouse) and the partitioned parquet alongside —
-never in /root/testdata.
+Both layouts are built once per application from the testdata (tiny,
+seconds); the QUERIES against them are the operators under test. All
+layout artifacts live under the application's work dir
+(session.work_dir) — bucketed tables as EXTERNAL locations (the managed
+default would land in the caller's cwd/spark-warehouse) and the
+partitioned parquet alongside — never in the testdata dir.
 """
 
 from __future__ import annotations
 
-import re
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,56 +29,34 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.money import money_sum, money_sum_sql
 from ..registry import query
+from ..session import build_once, sf_tag, work_dir
 
 N_BUCKETS = 8
 
 _BUCKET_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-# Keyed by (applicationId, sf_dir) or (applicationId, sf_dir, artifact).
-_PART_CACHE: dict[tuple[str, ...], str] = {}
-
-
-def _sf_tag(sf_dir: str) -> str:
-    return re.sub(r"[^0-9a-z]+", "_", Path(sf_dir).name.lower())
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(orders_table, customer_table) bucketed by custkey into
-    N_BUCKETS, written once per (session, sf_dir). sortBy within
+    N_BUCKETS, written once per (application, sf_dir). sortBy within
     buckets so the merge join needs no sort either."""
     key = (spark.sparkContext.applicationId, sf_dir)
     names = _BUCKET_CACHE.get(key)
     if names is None:
-        import shutil
-
-        # Scope BOTH the catalog name and the external location to this
-        # Spark application: two concurrent sessions (e.g. bench and
-        # pytest) otherwise race — one session's DROP TABLE + rmtree
-        # deletes the directory the other session's catalog entry still
-        # points at, failing its bucketed scans mid-run.
-        app = re.sub(r"[^0-9a-z]+", "_", spark.sparkContext.applicationId.lower())
-        tag = f"{_sf_tag(sf_dir)}_{app}"
+        tag = sf_tag(sf_dir)
         o_name, c_name = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
-        # EXTERNAL locations under the system temp dir: bucketing needs
-        # a catalog entry (saveAsTable), but the default MANAGED
-        # location is <caller cwd>/spark-warehouse — wherever the
-        # harness happens to run from. Pin the bytes to tmp instead.
-        base = Path(tempfile.gettempdir()) / "spark_graft_bkt"
         for name, src, col in (
             (o_name, "orders", "o_custkey"),
             (c_name, "customer", "c_custkey"),
         ):
-            # a previous SESSION may have left the location behind while
-            # this session's catalog has no table entry — overwrite
-            # can't reconcile that, so clear both catalog and location
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            path = base / name
-            if path.exists():
-                shutil.rmtree(path)
+            # EXTERNAL location in the work dir: bucketing needs a
+            # catalog entry (saveAsTable), but the default MANAGED
+            # location is <caller cwd>/spark-warehouse
             (
                 load_table(spark, sf_dir, src)
                 .write.bucketBy(N_BUCKETS, col)
                 .sortBy(col)
-                .option("path", str(path))
+                .option("path", str(work_dir(spark) / name))
                 .mode("overwrite")
                 .saveAsTable(name)
             )
@@ -121,27 +97,12 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events re-laid-out as parquet partitioned by event_type, once
-    per (session, sf_dir); stamped with the source file's mtime so a
-    regenerated testdata file invalidates the layout."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"{_sf_tag(sf_dir)}_{src_mtime}"
-            / "events"
-        )
-        if not Path(out, "_SUCCESS").exists():
-            (
-                load_table(spark, sf_dir, "events")
-                .write.partitionBy("event_type")
-                .mode("overwrite")
-                .parquet(out)
-            )
-        _PART_CACHE[key] = out
-    return out
+    per (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        load_table(spark, sf_dir, "events").write.partitionBy("event_type").parquet(str(out))
+
+    return build_once(spark, f"part_events_{sf_tag(sf_dir)}", build)
 
 
 _PRUNED_ORACLE = """
@@ -254,84 +215,17 @@ _DPP_TIERS = {"purchase": "gold", "click": "gold", "view": "bronze",
               "signup": "bronze", "refund": "bronze"}
 
 
-def _publish_atomic(out: Path, prefix: str, build) -> None:
-    """Build a shared layout dir under a unique staged path and
-    atomically rename() it into `out`. Concurrent-app safe: two apps
-    racing both produce identical bytes and the loser discards its
-    staged copy — but ONLY after verifying the winner's copy is
-    complete (`_SUCCESS` present). A rename failure against a partial
-    `out` (a crashed writer from before this protocol, an interrupted
-    external copy) clears the corpse and retries once, restoring the
-    self-heal the old mode('overwrite') path had; anything still
-    failing raises rather than caching a corrupt path forever."""
-    import os
-    import shutil
-
-    if Path(out, "_SUCCESS").exists():
-        return
-    base = out.parent
-    base.mkdir(parents=True, exist_ok=True)
-    stage = Path(tempfile.mkdtemp(prefix=prefix, dir=base))
-    build(stage)
-    try:
-        os.rename(stage, out)
-        return
-    except OSError:
-        if Path(out, "_SUCCESS").exists():
-            # a concurrent app won the race with a COMPLETE copy
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        # Partial/corrupt dir at the target: move the corpse ASIDE with a
-        # single atomic rename rather than rmtree-ing it in place. rmtree
-        # is check-then-act — a concurrent publisher can install a
-        # COMPLETE copy between the _SUCCESS probe above and the delete,
-        # and the file-by-file removal opens a window where a reader of
-        # `out` (e.g. a Spark scan already planned over the path) sees a
-        # half-deleted tree. rename never destroys whatever sits at the
-        # target: a corpse, or a copy completed after the probe
-        # (identical bytes by contract), survives intact under the
-        # quarantine name until reclaimed below.
-        quarantine = Path(tempfile.mkdtemp(prefix=prefix + "corpse-", dir=base))
-        try:
-            os.rename(out, quarantine / "c")
-        except FileNotFoundError:
-            pass  # another racing loser already quarantined it
-    try:
-        os.rename(stage, out)
-        shutil.rmtree(quarantine, ignore_errors=True)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        if Path(out, "_SUCCESS").exists():
-            shutil.rmtree(quarantine, ignore_errors=True)
-            return
-        raise
-
-
 def tier_dim_dir(spark: SparkSession, sf_dir: str) -> str:
     """Tiny (event_type, tier) dim as a parquet table — DPP needs a
     runtime build side; an in-memory LocalRelation can constant-fold
-    away the very subquery under test. The path embeds a digest of the
-    tier map itself (the same staleness guard partitioned_events_dir
-    gets from the source mtime): editing _DPP_TIERS must rewrite the
-    parquet, or the oracle's inline VALUES would diverge from a stale
-    cached dim. Published via _publish_atomic (see there for the
-    race/corruption contract)."""
-    import hashlib
+    away the very subquery under test. Built once per application."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, "tier_dim")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        digest = hashlib.md5(repr(sorted(_DPP_TIERS.items())).encode()).hexdigest()[:10]
-        out = str(Path(tempfile.gettempdir()) / "spark_graft_part" / f"tier_dim_{digest}")
+    def build(out: Path) -> None:
+        spark.createDataFrame(
+            sorted(_DPP_TIERS.items()), ["event_type", "tier"]
+        ).coalesce(1).write.parquet(str(out))
 
-        def build(stage: Path) -> None:
-            spark.createDataFrame(
-                sorted(_DPP_TIERS.items()), ["event_type", "tier"]
-            ).coalesce(1).write.mode("overwrite").parquet(str(stage))
-
-        _publish_atomic(Path(out), f"tier_dim_{digest}_stage_", build)
-        _PART_CACHE[key] = out
-    return out
+    return build_once(spark, "tier_dim", build)
 
 
 _DPP_ORACLE = f"""
@@ -427,41 +321,27 @@ def zorder_benefit_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     N_LAYOUT_FILES parquet files — linear clustered by x only (a
     lexicographic sort's layout), z-ordered clustered by the Morton
     bucket so each file's min/max stats are tile-bounded in BOTH dims.
-    Built once per (app, sf_dir, source-mtime), published via
-    _publish_atomic (see there for the race/corruption contract)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "zorder_benefit")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/orders.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"zbenefit_{_sf_tag(sf_dir)}_{src_mtime}"
+    Built once per (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        dims = _order_dims(spark, sf_dir)
+        (
+            dims.repartitionByRange(N_LAYOUT_FILES, "x")
+            .sortWithinPartitions("x")
+            .write.parquet(str(out / "linear"))
+        )
+        zb = F.expr(
+            f"({_z_terms('x', 'y').replace('//', 'div')}) div {2 ** Z_BUCKET_SHIFT}"
+        )
+        (
+            dims.withColumn("zbucket", zb)
+            .repartitionByRange(N_LAYOUT_FILES, "zbucket")
+            .sortWithinPartitions("zbucket")
+            .drop("zbucket")
+            .write.parquet(str(out / "zorder"))
         )
 
-        def build(stage: Path) -> None:
-            dims = _order_dims(spark, sf_dir)
-            (
-                dims.repartitionByRange(N_LAYOUT_FILES, "x")
-                .sortWithinPartitions("x")
-                .write.mode("overwrite")
-                .parquet(str(stage / "linear"))
-            )
-            zb = F.expr(
-                f"({_z_terms('x', 'y').replace('//', 'div')}) div {2 ** Z_BUCKET_SHIFT}"
-            )
-            (
-                dims.withColumn("zbucket", zb)
-                .repartitionByRange(N_LAYOUT_FILES, "zbucket")
-                .sortWithinPartitions("zbucket")
-                .drop("zbucket")
-                .write.mode("overwrite")
-                .parquet(str(stage / "zorder"))
-            )
-            (stage / "_SUCCESS").touch()
-
-        _publish_atomic(Path(out), "zbenefit_stage_", build)
-        _PART_CACHE[key] = out
+    out = build_once(spark, f"zbenefit_{sf_tag(sf_dir)}", build)
     return f"{out}/linear", f"{out}/zorder"
 
 
@@ -546,12 +426,11 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no key semantics — is the same."""
     import shutil
     import tempfile
-    from pathlib import Path
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    work = Path(tempfile.mkdtemp(prefix="compact_"))
+    work = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     try:
         small = work / "small"
         o.repartition(COMPACT_SMALL_FILES).write.parquet(str(small))
@@ -607,45 +486,30 @@ def zcompaction_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
       round-robin repartition (q_compaction's shape) — which DESTROYS
       clustering; kept as the measured control in tests/test_plans.py.
 
-    Built once per (app, sf_dir, source-mtime); published via
-    _publish_atomic (see there for the race/corruption contract)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "zcompaction")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/orders.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"zcompact_{_sf_tag(sf_dir)}_{src_mtime}"
+    Built once per (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        dims = _with_z(_order_dims(spark, sf_dir))
+        (
+            dims.repartitionByRange(ZCOMPACT_SMALL_FILES, "z")
+            .sortWithinPartitions("z")
+            .drop("z")
+            .write.parquet(str(out / "fragmented"))
+        )
+        frag = _with_z(spark.read.parquet(str(out / "fragmented")))
+        (
+            frag.repartitionByRange(ZCOMPACT_TARGET_FILES, "z")
+            .sortWithinPartitions("z")
+            .drop("z")
+            .write.parquet(str(out / "zcompacted"))
+        )
+        (
+            frag.drop("z")
+            .repartition(ZCOMPACT_TARGET_FILES)
+            .write.parquet(str(out / "rrcompacted"))
         )
 
-        def build(stage: Path) -> None:
-            dims = _with_z(_order_dims(spark, sf_dir))
-            (
-                dims.repartitionByRange(ZCOMPACT_SMALL_FILES, "z")
-                .sortWithinPartitions("z")
-                .drop("z")
-                .write.mode("overwrite")
-                .parquet(str(stage / "fragmented"))
-            )
-            frag = _with_z(spark.read.parquet(str(stage / "fragmented")))
-            (
-                frag.repartitionByRange(ZCOMPACT_TARGET_FILES, "z")
-                .sortWithinPartitions("z")
-                .drop("z")
-                .write.mode("overwrite")
-                .parquet(str(stage / "zcompacted"))
-            )
-            (
-                frag.drop("z")
-                .repartition(ZCOMPACT_TARGET_FILES)
-                .write.mode("overwrite")
-                .parquet(str(stage / "rrcompacted"))
-            )
-            (stage / "_SUCCESS").touch()
-
-        _publish_atomic(Path(out), "zcompact_stage_", build)
-        _PART_CACHE[key] = out
+    out = build_once(spark, f"zcompact_{sf_tag(sf_dir)}", build)
     return (f"{out}/fragmented", f"{out}/zcompacted", f"{out}/rrcompacted")
 
 
@@ -761,42 +625,26 @@ def evolved_epoch_dirs(spark: SparkSession, sf_dir: str) -> str:
     - ``epoch=2`` (after evolution): ``o_orderkey`` widened to INT64
       and a NEW column ``o_orderpriority STRING`` — odd order keys.
 
-    Built once per (session, sf_dir) under the temp dir, mtime-stamped
-    against the source parquet and published via _publish_atomic (same
-    staleness/race contract as the other layout builders)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "evolved")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/orders.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"evolved_{_sf_tag(sf_dir)}_{src_mtime}"
+    Built once per (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        (
+            orders.filter("o_orderkey % 2 = 0")
+            .selectExpr("cast(o_orderkey AS int) AS o_orderkey", "o_totalprice")
+            .write.parquet(str(out / "epoch=1"))
+        )
+        (
+            orders.filter("o_orderkey % 2 = 1")
+            .selectExpr(
+                "cast(o_orderkey AS bigint) AS o_orderkey",
+                "o_totalprice",
+                "o_orderpriority",
+            )
+            .write.parquet(str(out / "epoch=2"))
         )
 
-        def build(stage: Path) -> None:
-            orders = load_table(spark, sf_dir, "orders")
-            (
-                orders.filter("o_orderkey % 2 = 0")
-                .selectExpr("cast(o_orderkey AS int) AS o_orderkey", "o_totalprice")
-                .write.parquet(str(stage / "epoch=1"))
-            )
-            (
-                orders.filter("o_orderkey % 2 = 1")
-                .selectExpr(
-                    "cast(o_orderkey AS bigint) AS o_orderkey",
-                    "o_totalprice",
-                    "o_orderpriority",
-                )
-                .write.parquet(str(stage / "epoch=2"))
-            )
-            # top-level _SUCCESS: the per-epoch writes each leave one,
-            # but the publish/staleness contract probes the root
-            (stage / "_SUCCESS").touch()
-
-        _publish_atomic(Path(out), "evolved_stage_", build)
-        _PART_CACHE[key] = out
-    return out
+    return build_once(spark, f"evolved_{sf_tag(sf_dir)}", build)
 
 
 _EVOLVED_ORACLE = """
@@ -900,9 +748,7 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
     rows restated from source with sub-$1 noise rows dropped, so the
     overwrite genuinely changes data.
 
-    Built (and mutated) once per (session, sf_dir) under a PRIVATE
-    temp dir — unlike the shared layout builders this dir is written
-    twice, so it is never shared across concurrent apps. Both file
+    Built (and mutated) once per (application, sf_dir). Both file
     snapshots (before/after the overwrite) land in ``_DPO_AUDIT`` for
     the immutability assertion in tests/test_plans.py.
 
@@ -910,11 +756,11 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
     handoff (``main.py:13-25``, ``utils/base.py:4-8``) — the engine
     upgrade is overwriting only the touched partition."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    out = _PART_CACHE.get(("dpo",) + key)
-    if out is None:
-        out = tempfile.mkdtemp(prefix="spark_graft_dpo_")
+
+    def build(path: Path) -> None:
+        out = str(path)
         events = load_table(spark, sf_dir, "events")
-        events.write.partitionBy("event_type").mode("overwrite").parquet(out)
+        events.write.partitionBy("event_type").parquet(out)
         before = _dpo_snapshot(out)
         restated = events.filter(
             (F.col("event_type") == DPO_TOUCHED) & (F.col("value") >= 1.0)
@@ -930,8 +776,8 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
             .parquet(out)
         )
         _DPO_AUDIT[key] = {"before": before, "after": _dpo_snapshot(out)}
-        _PART_CACHE[("dpo",) + key] = out
-    return out
+
+    return build_once(spark, f"dpo_events_{sf_tag(sf_dir)}", build)
 
 
 # The oracle splices the post-reload relation relationally:
@@ -995,44 +841,30 @@ def bloom_benefit_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     writes a parquet column bloom filter on o_orderkey
     (``parquet.bloom.filter.enabled#o_orderkey``), the probabilistic
     per-row-group membership index that works regardless of layout.
-    Built once per (app, sf_dir, source-mtime); published via
-    _publish_atomic (see there for the race/corruption contract)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bloom_benefit")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/orders.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"bloombenefit_{_sf_tag(sf_dir)}_{src_mtime}"
+    Built once per (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        scattered = (
+            load_table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+            .withColumn("scatter", F.xxhash64("o_orderkey"))
+            .repartition(N_BLOOM_FILES)
+            .sortWithinPartitions("scatter")
+            .drop("scatter")
+        )
+        base = scattered.write.option("parquet.block.size", BLOOM_BLOCK_BYTES).option(
+            "parquet.page.size", BLOOM_BLOCK_BYTES // 4
+        )
+        base.parquet(str(out / "plain"))
+        (
+            base.option("parquet.bloom.filter.enabled#o_orderkey", "true")
+            # NDV sized for the LARGEST SF the layout is built at;
+            # oversizing only costs bloom bytes, never correctness.
+            .option("parquet.bloom.filter.expected.ndv#o_orderkey", "200000")
+            .parquet(str(out / "bloom"))
         )
 
-        def build(stage: Path) -> None:
-            scattered = (
-                load_table(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-                .withColumn("scatter", F.xxhash64("o_orderkey"))
-                .repartition(N_BLOOM_FILES)
-                .sortWithinPartitions("scatter")
-                .drop("scatter")
-            )
-            base = (
-                scattered.write.option("parquet.block.size", BLOOM_BLOCK_BYTES)
-                .option("parquet.page.size", BLOOM_BLOCK_BYTES // 4)
-                .mode("overwrite")
-            )
-            base.parquet(str(stage / "plain"))
-            (
-                base.option("parquet.bloom.filter.enabled#o_orderkey", "true")
-                # NDV sized for the LARGEST SF the layout is built at;
-                # oversizing only costs bloom bytes, never correctness.
-                .option("parquet.bloom.filter.expected.ndv#o_orderkey", "200000")
-                .parquet(str(stage / "bloom"))
-            )
-            (stage / "_SUCCESS").touch()
-
-        _publish_atomic(Path(out), "bloombenefit_stage_", build)
-        _PART_CACHE[key] = out
+    out = build_once(spark, f"bloombenefit_{sf_tag(sf_dir)}", build)
     return f"{out}/plain", f"{out}/bloom"
 
 
@@ -1081,30 +913,18 @@ def lineage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     sorted by ts WITHIN each file (repartition("event_type") puts each
     type in exactly one task, so each partition directory gets exactly
     one file — pinned by the query's n_files column). Built once per
-    (app, sf_dir, source-mtime); published via _publish_atomic."""
-    key = (spark.sparkContext.applicationId, sf_dir, "meta_lineage")
-    out = _PART_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_part"
-            / f"metalineage_{_sf_tag(sf_dir)}_{src_mtime}"
+    (application, sf_dir)."""
+
+    def build(out: Path) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .repartition("event_type")
+            .sortWithinPartitions("ts")
+            .write.partitionBy("event_type")
+            .parquet(str(out))
         )
 
-        def build(stage: Path) -> None:
-            (
-                load_table(spark, sf_dir, "events")
-                .repartition("event_type")
-                .sortWithinPartitions("ts")
-                .write.partitionBy("event_type")
-                .parquet(str(stage / "t"))
-            )
-            (stage / "_SUCCESS").touch()
-
-        _publish_atomic(Path(out), "metalineage_stage_", build)
-        _PART_CACHE[key] = out
-    return f"{out}/t"
+    return build_once(spark, f"metalineage_{sf_tag(sf_dir)}", build)
 
 
 _LINEAGE_ORACLE = f"""

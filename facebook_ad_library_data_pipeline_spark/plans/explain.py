@@ -37,44 +37,6 @@ def scan_column_counts(df: DataFrame) -> list[int]:
     return [s.count(":") for s in read_schemas(df)]
 
 
-def scan_ancestors(plan: str, leaf_pattern: str) -> list[str]:
-    """Node names on the path from the first tree line matching
-    ``leaf_pattern`` up to the root of the formatted-plan tree —
-    the data path a leaf's rows flow through, so a test can assert
-    order constraints ("partial HashAggregate BEFORE the Exchange")
-    without depending on node numbers. The formatted tree encodes
-    parenthood purely by the marker column: a node's parent is the
-    nearest earlier line whose ``+-``/``:-`` marker sits strictly
-    left of its own."""
-    tree = plan.split("\n\n")[0]
-    lines = tree.splitlines()
-
-    def marker_col(line: str) -> int:
-        for m in re.finditer(r"[+:]-", line):
-            return m.start()
-        return -2  # the root line has no marker
-
-    def node_name(line: str) -> str:
-        body = re.sub(r"^[\s+:|-]*", "", line)
-        return re.sub(r"\s*\(\d+\)\s*$", "", body)
-
-    start = next(
-        (i for i, ln in enumerate(lines) if leaf_pattern in ln), None
-    )
-    if start is None:
-        raise AssertionError(f"{leaf_pattern!r} not found in plan tree")
-    chain: list[str] = []
-    col = marker_col(lines[start])
-    for i in range(start - 1, -1, -1):
-        c = marker_col(lines[i])
-        if c < col:
-            chain.append(node_name(lines[i]))
-            col = c
-            if c == -2:
-                break
-    return chain
-
-
 def simple_plan(df: DataFrame) -> str:
     """queryExecution().simpleString() — carries scan details
     (SelectedBucketsCount, Bucketed:) that formatted mode elides."""

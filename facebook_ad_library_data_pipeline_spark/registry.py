@@ -468,7 +468,6 @@ _PRIORITY = [
     # (q_stream_tws_initial_state moved to the round-10 window above)
     # Queries whose implementation or oracle changed this round (the
     # r07-advice fixes) — re-prove through the driver:
-    # Publish-path dependents of the quarantine-rename _publish_atomic:
     # ---- round-7 window ----
     # The 7 queries with zero driver rows after six rounds (VERDICT r06
     # item 1) — the final rotation: with these, all registered queries

@@ -15,14 +15,22 @@ shuffle partitions = task slots (on a real cluster this is
 Session contract: a query never leaves the caller's conf changed. A
 query-local setting goes on a ``newSession()`` child or a reader/writer
 option; a stream start that needs one uses ``conf_scope``.
+
+Scratch files live under ``work_dir``: one dir per Spark application,
+inside Spark's own per-application files root, so Spark removes it at
+stop and no two applications ever share a scratch path.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-from collections.abc import Iterator
+import shutil
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from pathlib import Path
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 
@@ -41,6 +49,43 @@ def default_driver_mem() -> str:
     with open("/proc/meminfo") as f:
         kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     return f"{min(16 * 1024, max(1024, kib // 4 // 1024))}m"
+
+
+def work_dir(spark: SparkSession) -> Path:
+    """This application's scratch dir, created on first use.
+
+    It sits under the driver's files root
+    (``<spark.local.dir>/spark-<uuid>/userFiles-<uuid>``), which the
+    SparkContext creates at start-up, also on a session the caller
+    built, and deletes at ``stop()``. Every path the package writes
+    that the caller did not name goes here."""
+    d = Path(SparkFiles.getRootDirectory()) / "spark_graft"
+    d.mkdir(exist_ok=True)
+    return d
+
+
+def sf_tag(sf_dir: str) -> str:
+    """Digest of the absolute ``sf_dir``, for naming what is built from
+    it: two data dirs that share a basename get separate layouts."""
+    return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+
+
+# Paths under some application's work_dir that a build completed. The
+# path names the application (its files root is per SparkContext), so
+# a new application never finds an old one's entry.
+_BUILT: set[Path] = set()
+
+
+def build_once(spark: SparkSession, name: str, build: Callable[[Path], None]) -> str:
+    """``work_dir(spark) / name``, written by ``build(path)`` the first
+    time this application asks for it. The path is cleared before the
+    build, so a retry after a failed build starts clean."""
+    out = work_dir(spark) / name
+    if out not in _BUILT:
+        shutil.rmtree(out, ignore_errors=True)
+        build(out)
+        _BUILT.add(out)
+    return str(out)
 
 
 @contextmanager

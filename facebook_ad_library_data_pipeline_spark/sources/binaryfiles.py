@@ -27,7 +27,6 @@ Spark reader for that layout.
 from __future__ import annotations
 
 import tempfile
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import work_dir
 
 # doc_id % _STRIDE == 0 bounds the fixture to ~5 files at sf0.001 and
 # ~516 at sf0.1 — enough files to exercise distributed listing, few
@@ -89,9 +89,7 @@ def q_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file with no shuffle until the (absent) aggregate."""
     import shutil
 
-    run_dir = str(
-        Path(tempfile.gettempdir()) / "spark_graft_blobs" / uuid.uuid4().hex
-    )
+    run_dir = tempfile.mkdtemp(dir=work_dir(spark))
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _STRIDE == 0
     )

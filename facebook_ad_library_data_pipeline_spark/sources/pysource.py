@@ -37,6 +37,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..registry import query
+from ..session import work_dir
 
 SYNTH_SHARDS = 8
 SYNTH_ROWS_PER_SHARD = 20_000
@@ -468,7 +469,7 @@ def q_python_datasink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_synth_source(spark)
     register_synth_sink(spark)
-    run_dir = Path(tempfile.mkdtemp(prefix="pysink_"))
+    run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     try:
         out = run_dir / "rows"
         df = (
@@ -719,7 +720,7 @@ def q_python_datasink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_synth_stream_sink(spark)
     src = split_events_dir_ntile(spark, sf_dir)
-    run_dir = Path(tempfile.mkdtemp(prefix="pysink_stream_"))
+    run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     try:
         out = run_dir / "rows"
         out.mkdir()

@@ -18,7 +18,6 @@ round-trip to a different last ulp.
 from __future__ import annotations
 
 import tempfile
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +26,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import work_dir
 from .writers import write_orc, write_parquet, write_raw_json
 
 _RT_SCHEMA = T.StructType(
@@ -66,7 +66,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates exactly (4 formats × event types)."""
     import shutil
 
-    run_dir = Path(tempfile.gettempdir()) / "spark_graft_sink" / uuid.uuid4().hex
+    run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     src = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",

@@ -14,16 +14,13 @@ windows shuffle on the session key only.
 
 from __future__ import annotations
 
-import tempfile
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, _events_nanos_schema, events_ts_unit, load_table
 from ..functions.money import money_sum
 from ..registry import query
-from ..session import conf_scope
+from ..session import conf_scope, sf_tag, work_dir
 
 # ------------------------------------------------------------- batch twins
 
@@ -161,8 +158,8 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (catalog.events_ts_unit)."""
     # The file source requires a directory; expose the single events
     # file through a symlink dir (no data copied, testdata untouched).
-    stream_dir = Path(tempfile.gettempdir()) / "spark_graft_stream" / Path(sf_dir).name
-    stream_dir.mkdir(parents=True, exist_ok=True)
+    stream_dir = work_dir(spark) / f"stream_{sf_tag(sf_dir)}"
+    stream_dir.mkdir(exist_ok=True)
     link = stream_dir / "events.parquet"
     if not link.exists():
         link.symlink_to(f"{sf_dir}/events.parquet")

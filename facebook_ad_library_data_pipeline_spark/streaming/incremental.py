@@ -15,8 +15,9 @@ integer cents, so partial merging is order-independent.
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,31 +25,19 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from ..session import conf_scope
+from ..session import build_once, conf_scope, sf_tag, work_dir
 
 N_SOURCE_FILES = 4
 
-_SPLIT_CACHE: dict[tuple[str, str], str] = {}
-
 
 def split_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events re-written as N files (once per session, mtime-stamped),
-    so maxFilesPerTrigger=1 yields N real micro-batches."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split"
-            / f"{Path(sf_dir).name}_{src_mtime}"
-        )
-        if not Path(out, "_SUCCESS").exists():
-            load_table(spark, sf_dir, "events").repartition(N_SOURCE_FILES).write.mode(
-                "overwrite"
-            ).parquet(out)
-        _SPLIT_CACHE[key] = out
-    return out
+    """events re-written as N files (once per application), so
+    maxFilesPerTrigger=1 yields N real micro-batches."""
+
+    def build(out: Path) -> None:
+        load_table(spark, sf_dir, "events").repartition(N_SOURCE_FILES).write.parquet(str(out))
+
+    return build_once(spark, f"split_{sf_tag(sf_dir)}", build)
 
 
 SENTINEL_USER_ID = -1
@@ -62,47 +51,36 @@ def split_events_dir_ntile(spark: SparkSession, sf_dir: str) -> str:
     names the micro-batch each row arrives in. The shape a
     change-feed oracle needs (which batch touched which group), where
     the range-partitioned variant above is NOT replayable in SQL
-    (Spark picks sampled range boundaries)."""
-    import os
+    (Spark picks sampled range boundaries). Slice i gets mtime base+i,
+    so the file source (which admits files by mtime) consumes the
+    slices in order."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ntile")
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split_ntile"
-            / f"{Path(sf_dir).name}_{src_mtime}"
+    def build(out: Path) -> None:
+        from pyspark.sql import Window
+
+        base = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
+        events = load_table(spark, sf_dir, "events").withColumn(
+            "__slice",
+            F.ntile(N_SOURCE_FILES).over(Window.orderBy("ts", "event_id")),
         )
-        if not Path(out, "_DONE").exists():
-            from pyspark.sql import Window
-
-            events = load_table(spark, sf_dir, "events").withColumn(
-                "__slice",
-                F.ntile(N_SOURCE_FILES).over(Window.orderBy("ts", "event_id")),
+        events.persist()
+        out.mkdir()
+        for i in range(1, N_SOURCE_FILES + 1):
+            part = out / f"__part_{i:02d}"
+            (
+                events.filter(F.col("__slice") == i)
+                .drop("__slice")
+                .coalesce(1)
+                .write.parquet(str(part))
             )
-            events.persist()
-            Path(out).mkdir(parents=True, exist_ok=True)
-            for i in range(1, N_SOURCE_FILES + 1):
-                part = Path(out) / f"__part_{i:02d}"
-                (
-                    events.filter(F.col("__slice") == i)
-                    .drop("__slice")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(str(part))
-                )
-                (src_file,) = list(part.glob("part-*.parquet"))
-                dest = Path(out) / f"slice-{i:02d}.parquet"
-                os.replace(src_file, dest)
-                os.utime(dest, (src_mtime + i, src_mtime + i))
-                import shutil
+            (src_file,) = list(part.glob("part-*.parquet"))
+            dest = out / f"slice-{i:02d}.parquet"
+            os.replace(src_file, dest)
+            os.utime(dest, (base + i, base + i))
+            shutil.rmtree(part, ignore_errors=True)
+        events.unpersist()
 
-                shutil.rmtree(part, ignore_errors=True)
-            events.unpersist()
-            (Path(out) / "_DONE").touch()
-        _SPLIT_CACHE[key] = out
-    return out
+    return build_once(spark, f"split_ntile_{sf_tag(sf_dir)}", build)
 
 
 def split_events_dir_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
@@ -123,63 +101,43 @@ def split_events_dir_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
     range partition i lands in lexicographically-ordered part-0000i
     files AND gets an explicitly bumped mtime, so consumption order ==
     ts order on both keys."""
-    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ts-ordered")
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        src_mtime = int(Path(f"{sf_dir}/events.parquet").stat().st_mtime)
-        out = str(
-            Path(tempfile.gettempdir())
-            / "spark_graft_split_ts"
-            / f"{Path(sf_dir).name}_{src_mtime}"
+    def build(out: Path) -> None:
+        events = load_table(spark, sf_dir, "events")
+        (
+            events.repartitionByRange(N_SOURCE_FILES, "ts")
+            .sortWithinPartitions("ts")
+            .write.parquet(str(out))
         )
-        # _READY (not Spark's _SUCCESS) gates reuse: _SUCCESS lands
-        # after the parquet write but BEFORE the sentinel/mtime steps,
-        # so a build that died in between must not be mistaken for
-        # complete by a later session
-        if not Path(out, "_READY").exists():
-            events = load_table(spark, sf_dir, "events")
+        # bounded scalar: single max over one small table
+        max_ts = events.agg(F.max("ts")).collect()[0][0]
+        sentinel = events.limit(1).select(
+            F.lit(-1).cast("bigint").alias("event_id"),
             (
-                events.repartitionByRange(N_SOURCE_FILES, "ts")
-                .sortWithinPartitions("ts")
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-            # bounded scalar: single max over one small table
-            max_ts = events.agg(F.max("ts")).collect()[0][0]
-            sentinel = events.limit(1).select(
-                F.lit(-1).cast("bigint").alias("event_id"),
-                (
-                    F.lit(max_ts).cast("timestamp")
-                    + F.expr(f"make_interval(0, 0, 0, {SENTINEL_OFFSET_DAYS}, 12, 0, 0)")
-                ).alias("ts"),
-                F.lit(SENTINEL_USER_ID).cast("bigint").alias("user_id"),
-                F.lit("sentinel").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            tmp_sent = out + "_sentinel_tmp"
-            sentinel.coalesce(1).write.mode("overwrite").parquet(tmp_sent)
-            (src,) = [
-                p for p in Path(tmp_sent).glob("part-*.parquet")
-            ]
-            os.replace(src, Path(out) / "zz-sentinel.parquet")
-            import shutil
+                F.lit(max_ts).cast("timestamp")
+                + F.expr(f"make_interval(0, 0, 0, {SENTINEL_OFFSET_DAYS}, 12, 0, 0)")
+            ).alias("ts"),
+            F.lit(SENTINEL_USER_ID).cast("bigint").alias("user_id"),
+            F.lit("sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        tmp_sent = out / "_sentinel_tmp"
+        sentinel.coalesce(1).write.parquet(str(tmp_sent))
+        (src,) = list(tmp_sent.glob("part-*.parquet"))
+        os.replace(src, out / "zz-sentinel.parquet")
+        shutil.rmtree(tmp_sent, ignore_errors=True)
+        # consumption order: bump mtimes in ts-range order
+        base = int((out / "_SUCCESS").stat().st_mtime)
+        parts = sorted(out.glob("part-*.parquet"))
+        for i, p in enumerate(parts):
+            os.utime(p, (base + i, base + i))
+        os.utime(
+            out / "zz-sentinel.parquet",
+            (base + len(parts) + 1, base + len(parts) + 1),
+        )
 
-            shutil.rmtree(tmp_sent, ignore_errors=True)
-            # consumption order: bump mtimes in ts-range order
-            base = int(Path(out, "_SUCCESS").stat().st_mtime)
-            parts = sorted(Path(out).glob("part-*.parquet"))
-            for i, p in enumerate(parts):
-                os.utime(p, (base + i, base + i))
-            os.utime(
-                Path(out) / "zz-sentinel.parquet",
-                (base + len(parts) + 1, base + len(parts) + 1),
-            )
-            (Path(out) / "_READY").touch()
-        _SPLIT_CACHE[key] = out
-    return out
+    return build_once(spark, f"split_ts_{sf_tag(sf_dir)}", build)
 
 
 def _partial_rollup(batch: DataFrame) -> DataFrame:
@@ -218,7 +176,7 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to exactly the batch rollup (the oracle). Fresh sink+checkpoint per
     call keeps the result deterministic under repetition."""
     src = split_events_dir(spark, sf_dir)
-    run_dir = Path(tempfile.gettempdir()) / "spark_graft_incr" / uuid.uuid4().hex
+    run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     sink = str(run_dir / "partials")
     schema = spark.read.parquet(src).schema
     stream = (
@@ -235,8 +193,6 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _partial_rollup(batch_df).write.mode("overwrite").parquet(
             f"{sink}/epoch={epoch_id}"
         )
-
-    import shutil
 
     with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
@@ -257,7 +213,7 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize (days x event-types, ~150 rows) so the per-call
         # sink + checkpoint can be deleted before returning instead of
-        # leaking one uuid dir per invocation.
+        # leaking one dir per invocation.
         rows = merged.collect()
         return spark.createDataFrame(rows, merged.schema)
     finally:
@@ -337,8 +293,6 @@ def q_stream_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions would move their sums. n_days > 1 per batch is what
     makes the case non-trivial: each batch's rows interleave with
     other batches' inside the same day partitions."""
-    import shutil
-
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     cached = _IDEMPOTENT_CACHE.get(cache_key)
     if cached is not None:
@@ -346,7 +300,7 @@ def q_stream_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
     src = split_events_dir_ntile(spark, sf_dir)
-    run_dir = Path(tempfile.gettempdir()) / "spark_graft_reload" / uuid.uuid4().hex
+    run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     sink = str(run_dir / "table")
     schema = spark.read.parquet(src).schema
     stream = (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import _ERR_SQL, with_validation_error
 from ..registry import query
+from ..session import work_dir
 from .incremental import split_events_dir_ntile
 
 # Batch membership is the exact ntile(4) the split builder wrote
@@ -93,7 +94,7 @@ def q_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rows_quarantined"
         ),
     )
-    ckpt = tempfile.mkdtemp(prefix="stream_observe_ckpt_")
+    ckpt = tempfile.mkdtemp(dir=work_dir(spark))
     try:
         q = (
             observed.writeStream.format("noop")

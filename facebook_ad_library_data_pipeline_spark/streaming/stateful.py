@@ -542,9 +542,9 @@ _TWS_SESSION_CACHE: dict[str, SparkSession] = {}
 def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     """One RocksDB-scoped child session shared by the whole typed-state
     family (cached per SparkContext, the same amortization pattern as
-    incremental._SPLIT_CACHE and state_reader._CKPT_CACHE): the family's
-    queries are conf-identical, so cloning a fresh SessionState per
-    query run buys no isolation and re-pays the vendor-path wiring.
+    session.build_once): the family's queries are conf-identical, so
+    cloning a fresh SessionState per query run buys no isolation and
+    re-pays the vendor-path wiring.
 
     Sharing contract (r10-advice hardening): the family's correctness
     depends on SEQUENTIAL use — two family streams running concurrently

@@ -444,58 +444,6 @@ def test_agg_pushdown_reaches_parquet_footer(spark, sf_dir):
         assert frag in plan, frag
 
 
-def test_publish_atomic_heals_partial_target(tmp_path):
-    """_publish_atomic must self-heal a partial directory at the
-    target (a crashed pre-protocol writer left bytes but no _SUCCESS):
-    the staged good copy wins, not the corpse — the r07-review fix for
-    silently caching a corrupt path forever."""
-    from facebook_ad_library_data_pipeline_spark.operators.storage import _publish_atomic
-
-    out = tmp_path / "layout"
-    out.mkdir()
-    (out / "part-corrupt.parquet").write_bytes(b"half a row group")
-
-    def build(stage):
-        (stage / "data.txt").write_text("good")
-        (stage / "_SUCCESS").touch()
-
-    _publish_atomic(out, "heal_test_", build)
-    assert (out / "_SUCCESS").exists()
-    assert (out / "data.txt").read_text() == "good"
-    assert not (out / "part-corrupt.parquet").exists()
-    # the corpse is quarantined by atomic rename (never rmtree'd in
-    # place, which could destroy a complete copy landing after the
-    # probe) and the quarantine dir is reclaimed after the publish
-    assert not [p for p in tmp_path.iterdir() if "corpse" in p.name]
-
-    # idempotent: a complete target short-circuits without rebuilding
-    def explode(stage):
-        raise AssertionError("must not rebuild a complete target")
-
-    _publish_atomic(out, "heal_test_", explode)
-
-
-def test_publish_atomic_loser_keeps_winner(tmp_path):
-    """If a COMPLETE copy appears at the target (a concurrent app won
-    the race), the loser discards its stage and keeps the winner."""
-    import os
-
-    from facebook_ad_library_data_pipeline_spark.operators.storage import _publish_atomic
-
-    out = tmp_path / "layout"
-
-    def build_then_race(stage):
-        (stage / "data.txt").write_text("loser")
-        (stage / "_SUCCESS").touch()
-        # the "winner" publishes while we were building
-        os.mkdir(out)
-        (out / "data.txt").write_text("winner")
-        (out / "_SUCCESS").touch()
-
-    _publish_atomic(out, "race_test_", build_then_race)
-    assert (out / "data.txt").read_text() == "winner"
-
-
 def test_schema_evolution_merge_vs_declared(spark, sf_dir):
     """Documents WHY q_schema_evolution_read reads through a DECLARED
     unified schema instead of mergeSchema: (a) mergeSchema=true union

@@ -1,9 +1,14 @@
-"""Session policy without a JVM: host-sized defaults and the exact
-restore of ``conf_scope``."""
+"""Session policy: host-sized defaults and the exact restore of
+``conf_scope`` (no JVM), and the lifetime of ``work_dir`` (one
+subprocess application)."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -12,6 +17,7 @@ from facebook_ad_library_data_pipeline_spark.session import (
     conf_scope,
     default_cpus,
     default_driver_mem,
+    sf_tag,
 )
 
 
@@ -55,3 +61,57 @@ def test_conf_scope_restores_exactly_even_on_error():
     # the set key gets its old value back; the unset key is unset again,
     # not pinned to its default
     assert spark.conf.settings == {"spark.sql.shuffle.partitions": "4"}
+
+
+def test_sf_tag_names_the_absolute_dir(tmp_path, monkeypatch):
+    """Layouts are named by the whole data dir, not its basename: two
+    dirs named alike get different names, one dir spelled two ways
+    the same."""
+    a, b = tmp_path / "a" / "sf0.001", tmp_path / "b" / "sf0.001"
+    assert sf_tag(str(a)) != sf_tag(str(b))
+    monkeypatch.chdir(tmp_path)
+    assert sf_tag("a/sf0.001") == sf_tag(str(a))
+
+
+def test_stop_removes_work_dir(sf_dir):
+    """Layouts land in the application's work dir, and stopping the
+    session removes it, but not the data a symlink in it points to.
+    Run in a child process: the test session's own SparkContext must
+    not be stopped."""
+    script = textwrap.dedent(
+        """
+        import sys
+        from pathlib import Path
+
+        from facebook_ad_library_data_pipeline_spark.operators.storage import partitioned_events_dir
+        from facebook_ad_library_data_pipeline_spark.session import get_spark, work_dir
+        from facebook_ad_library_data_pipeline_spark.streaming.events import load_events_stream
+        from facebook_ad_library_data_pipeline_spark.streaming.incremental import split_events_dir
+
+        spark = get_spark("work_dir_lifetime")
+        d = work_dir(spark)
+        for layout in (partitioned_events_dir, split_events_dir):
+            out = Path(layout(spark, sys.argv[1]))
+            assert out.parent == d and any(out.iterdir()), (layout.__name__, out, d)
+        # the stream source is a symlink into sf_dir: removing the work
+        # dir must not follow it
+        load_events_stream(spark, sys.argv[1])
+        spark.stop()
+        assert not d.exists(), d
+        assert Path(sys.argv[1], "events.parquet").is_file()
+        print("stopped", d)
+        """
+    )
+    repo = Path(__file__).resolve().parent.parent
+    path = os.pathsep.join(filter(None, [str(repo), os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, PYTHONPATH=path, SPARK_GRAFT_CPUS="2")
+    run = subprocess.run(
+        [sys.executable, "-c", script, sf_dir],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    assert "stopped" in run.stdout
