@@ -78,19 +78,23 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_lsh_oracle() -> str:
-    flips = ", ".join(
-        ["qb"] + [f"xor(qb, {2**p})" for p in range(N_PLANES)]
-    )
+    # The bucket is computed once per corpus row (a 512-term expression;
+    # in a CROSS JOIN filter DuckDB evaluated it per pair and per IN
+    # item, peaking at ~7.7 GB), and the 9 probes join on it, as the
+    # Spark plan does.
+    flips = ", ".join(["b"] + [f"xor(b, {2**p})" for p in range(N_PLANES)])
     return f"""
-WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe,
-                  {_bucket_sql("(embedding::DOUBLE[])")} AS qb
-           FROM embeddings WHERE vec_id < {KNN_QUERIES}),
+WITH e AS MATERIALIZED (
+    SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+           {_bucket_sql("(embedding::DOUBLE[])")} AS b
+    FROM embeddings),
+probes AS (SELECT vec_id AS q_id, emb AS qe, unnest([{flips}]) AS pb
+           FROM e WHERE vec_id < {KNN_QUERIES}),
 scored AS (
-    SELECT q.q_id, e.vec_id, e.label,
-           round(list_cosine_similarity(e.embedding::DOUBLE[], q.qe), 6) AS cos_sim
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.q_id
-      AND {_bucket_sql("(e.embedding::DOUBLE[])")} IN ({flips})
+    SELECT p.q_id, e.vec_id, e.label,
+           round(list_cosine_similarity(e.emb, p.qe), 6) AS cos_sim
+    FROM e JOIN probes p ON e.b = p.pb
+    WHERE e.vec_id <> p.q_id
 ),
 ranked AS (
     SELECT *, row_number() OVER (PARTITION BY q_id

@@ -44,15 +44,17 @@ PR_CHECKPOINT_EVERY = 4
 # The edge derivation is dedup_near's shared shingle->pairs CTE chain
 # VERBATIM (one definition — a change to the shingle rule or the
 # threshold updates this oracle with it), extended with the graph CTEs.
+# sym, deg and nn are MATERIALIZED: every unrolled round reads them, and
+# inlined they re-ran the shingle chain in each round (~28 s per oracle).
 _EDGES_CTE = f"""
 {_SHINGLE_EXPLODED_SQL},
 edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
           JOIN sizes sa ON d1 = sa.doc_id
           JOIN sizes sb ON d2 = sb.doc_id
           WHERE inter * 1.0 / (sa.n + sb.n - inter) >= {JACCARD_THRESHOLD}),
-sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-deg AS (SELECT src AS node, count(*) AS deg FROM sym GROUP BY src),
-nn AS (SELECT count(*) AS n FROM deg),
+sym AS MATERIALIZED (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+deg AS MATERIALIZED (SELECT src AS node, count(*) AS deg FROM sym GROUP BY src),
+nn AS MATERIALIZED (SELECT count(*) AS n FROM deg),
 r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS r FROM deg)
 """
 
