@@ -40,13 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import fan_out, load_table
 from ..registry import query
+from ..session import once
 from .ivf import bounded_sample_values
 
 N_MERGES = 200
 MAX_FIT_DOCS = 2000
-
-# (sf_dir) -> {pair: rank}
-_MERGE_CACHE: dict[str, dict[tuple[str, str], int]] = {}
 
 
 def train_bpe_merges(texts, n_merges: int = N_MERGES) -> dict[tuple[str, str], int]:
@@ -153,20 +151,16 @@ def apply_in_training_order(word: str, ordered_merges) -> list[str]:
 
 
 def fit_merges(spark: SparkSession, sf_dir: str) -> dict[tuple[str, str], int]:
-    cached = _MERGE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    docs = load_table(spark, sf_dir, "documents")
-    # cache_key=None: the MERGE TABLE is the cached artifact; caching
-    # the 2000 raw texts too would pin dead data in driver memory.
-    texts = [
-        t
-        for t in bounded_sample_values(docs, "text", None, max_rows=MAX_FIT_DOCS)
-        if t
-    ]
-    merges = train_bpe_merges(texts)
-    _MERGE_CACHE[sf_dir] = merges
-    return merges
+    """{pair: rank}, trained once per application and table. Only the
+    merge table is kept: the 2000 raw sample texts are dead once it is
+    built."""
+
+    def build() -> dict[tuple[str, str], int]:
+        docs = load_table(spark, sf_dir, "documents")
+        sample = bounded_sample_values(docs, "text", max_rows=MAX_FIT_DOCS)
+        return train_bpe_merges([t for t in sample if t])
+
+    return once(spark, (__name__, sf_dir), build)
 
 
 _BPE_ORACLE = """

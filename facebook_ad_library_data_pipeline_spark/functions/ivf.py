@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import fan_out
 from ..registry import query
+from ..session import once
 from .similarity import QUERY_VEC_ID, _emb_double, cosine
 
 N_CELLS = 16
@@ -33,80 +34,47 @@ N_PROBE = 4
 # Train on at most this many vectors (at 100 TB you NEVER fit on all rows).
 MAX_FIT_ROWS = 100_000
 
-# One set of centroids per (sf_dir, k) per process — building the index
-# once and querying it many times is the point of IVF; refitting per
-# query would be like rebuilding a B-tree per lookup.
-_CENTROID_CACHE: dict[tuple[str, int], list[list[float]]] = {}
-# The bounded driver-side sample is shared by every fitter (IVF
-# centroids here, PQ codebooks in functions/pq.py, BPE merges in
-# functions/bpe.py): one count job + one collect per (process, table,
-# column), not one per fitter.
-_FIT_SAMPLE_CACHE: dict[tuple[str, str], "object"] = {}
 
-
-def bounded_sample_values(
-    df: DataFrame,
-    column: str,
-    cache_key: str | None,
-    max_rows: int = MAX_FIT_ROWS,
-) -> list:
+def bounded_sample_values(df: DataFrame, column: str, max_rows: int = MAX_FIT_ROWS) -> list:
     """≤max_rows values of `column` collected driver-side — the ONE
     sampling protocol every trained-artifact fitter uses (same seed,
     same bound semantics), so the fitters can't drift apart on how
-    their O(1)-in-corpus-size input is drawn. The cache key includes
-    max_rows: two fitters sampling the same column with different
-    bounds draw different samples and must never silently share one.
-    Callers whose DERIVED artifact is itself cached (numpy array,
-    merge table) should pass cache_key=None — caching the raw Python
-    values alongside the artifact would pin both in driver memory for
-    the process lifetime."""
-    key = (cache_key, column, max_rows) if cache_key else None
-    if key is not None and key in _FIT_SAMPLE_CACHE:
-        return _FIT_SAMPLE_CACHE[key]
+    their O(1)-in-corpus-size input is drawn. Fitters memo what they
+    derive from it (numpy array, merge table), not the raw values."""
     n = df.count()
     sample = df.select(column)
     if n > max_rows:
         sample = sample.sample(max_rows / n, seed=42)
-    vals = [r[0] for r in sample.collect()]
-    if key is not None:
-        _FIT_SAMPLE_CACHE[key] = vals
-    return vals
+    return [r[0] for r in sample.collect()]
 
 
-def fit_sample(emb: DataFrame, cache_key: str | None):
-    """≤MAX_FIT_ROWS embedding rows as a numpy array, cached per table
-    (the array ONLY — the raw row list is not separately cached; IVF
-    and PQ share this one array, one count + one collect per table)."""
+def fit_sample(spark: SparkSession, sf_dir: str):
+    """≤MAX_FIT_ROWS embedding rows as a numpy array, once per
+    application and table: IVF and PQ share this one array, one count
+    + one collect per table."""
     import numpy as np
 
-    key = (cache_key, "__emb_np__") if cache_key else None
-    if key is not None and key in _FIT_SAMPLE_CACHE:
-        return _FIT_SAMPLE_CACHE[key]
-    x = np.array(bounded_sample_values(emb, "emb", None), dtype=np.float64)
-    if key is not None:
-        _FIT_SAMPLE_CACHE[key] = x
-    return x
+    return once(
+        spark,
+        (__name__, "fit_sample", sf_dir),
+        lambda: np.array(
+            bounded_sample_values(_emb_double(spark, sf_dir), "emb"), dtype=np.float64
+        ),
+    )
 
 
-def _fit_centroids(emb: DataFrame, k: int, cache_key: str | None) -> list[list[float]]:
-    """k-means++ init + Lloyd's, vectorized numpy, deterministic seed.
-    Input is a bounded sample collected to the driver (O(1) in corpus
-    size by construction)."""
-    cached = _CENTROID_CACHE.get((cache_key, k)) if cache_key else None
-    if cached is not None:
-        return cached
-
+def _kmeans(x, k: int, seed: int):
+    """k-means++ init + Lloyd's, vectorized numpy, deterministic seed —
+    the one routine behind the IVF centroids (full-dim) and the PQ
+    codebooks (per subspace). Input is a bounded sample collected to
+    the driver (O(1) in corpus size by construction)."""
     import numpy as np
 
-    x = fit_sample(emb, cache_key)
-
-    rng = np.random.default_rng(42)
+    rng = np.random.default_rng(seed)
     # k-means++ seeding
     centers = [x[rng.integers(len(x))]]
     for _ in range(1, k):
-        d2 = np.min(
-            np.stack([((x - c) ** 2).sum(axis=1) for c in centers]), axis=0
-        )
+        d2 = np.min(np.stack([((x - c) ** 2).sum(axis=1) for c in centers]), axis=0)
         probs = d2 / d2.sum() if d2.sum() > 0 else None
         centers.append(x[rng.choice(len(x), p=probs)])
     c = np.stack(centers)
@@ -121,10 +89,21 @@ def _fit_centroids(emb: DataFrame, k: int, cache_key: str | None) -> list[list[f
         c = new_c
         if shift < 1e-9:
             break
-    result = [[float(v) for v in row] for row in c]
-    if cache_key:
-        _CENTROID_CACHE[(cache_key, k)] = result
-    return result
+    return c
+
+
+def _fit_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """N_CELLS IVF centroids, fitted once per application and table —
+    building the index once and querying it many times is the point of
+    IVF; refitting per query would be like rebuilding a B-tree per
+    lookup."""
+    return once(
+        spark,
+        (__name__, "centroids", sf_dir),
+        lambda: [
+            [float(v) for v in row] for row in _kmeans(fit_sample(spark, sf_dir), N_CELLS, seed=42)
+        ],
+    )
 
 
 def _centroid_lit(centroids: list[list[float]]) -> Column:
@@ -168,14 +147,6 @@ def assign_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     return fan_out(emb).withColumn("cell", F.array_min(cand)["cell"])
 
 
-def train_assign_cells(
-    emb: DataFrame, k: int = N_CELLS, cache_key: str | None = None
-) -> tuple[DataFrame, list[list[float]]]:
-    """Fit (bounded driver-side sample) then assign (distributed map)."""
-    centroids = _fit_centroids(emb, k, cache_key)
-    return assign_cells(emb, centroids), centroids
-
-
 @query("q_ann_ivf_topk", oracle=None, tags=("llm", "similarity", "topk", "ml"))
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-10 for the query vector: probe the 4 (of 16) cells whose
@@ -183,7 +154,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (centroids are engine state); soundness asserted in
     tests."""
     emb = _emb_double(spark, sf_dir)
-    assigned, centroids = train_assign_cells(emb, cache_key=sf_dir)
+    centroids = _fit_centroids(spark, sf_dir)
+    assigned = assign_cells(emb, centroids)
 
     centers = spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
@@ -219,8 +191,7 @@ def ivf_cell_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution kills the probe-fraction win). Cell ids are
     engine-trained state, so the detail stays out of the registered
     query's hash-checked output; tests read it here."""
-    emb = _emb_double(spark, sf_dir)
-    assigned, _ = train_assign_cells(emb, cache_key=sf_dir)
+    assigned = assign_cells(_emb_double(spark, sf_dir), _fit_centroids(spark, sf_dir))
     return assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
 
 

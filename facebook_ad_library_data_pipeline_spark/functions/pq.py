@@ -30,63 +30,31 @@ from pyspark.sql import functions as F
 
 from ..catalog import fan_out
 from ..registry import query
+from ..session import once
+from .ivf import _fit_centroids, _kmeans, assign_cells, fit_sample
 from .similarity import QUERY_VEC_ID, _emb_double, cosine
 
 M_SUBSPACES = 8
 K_CODES = 16
-MAX_FIT_ROWS = 100_000
 N_PROBE = 4
 RERANK_N = 50
 
-# (sf_dir) -> list[M][K][subdim] codebooks
-_CODEBOOK_CACHE: dict[str, list[list[list[float]]]] = {}
 
+def fit_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """M per-subspace codebooks from the bounded driver-side sample
+    shared with the IVF centroid fit (one collect per table), fitted
+    once per application and table."""
 
-def _kmeans(x, k: int, seed: int):
-    """Vectorized numpy Lloyd's with k-means++ init (same routine shape
-    as functions/ivf.py — duplicated deliberately: the IVF fit is
-    full-dim, this one runs per subspace with its own seed)."""
-    import numpy as np
+    def build() -> list[list[list[float]]]:
+        x = fit_sample(spark, sf_dir)
+        subdim = x.shape[1] // M_SUBSPACES
+        books = []
+        for m in range(M_SUBSPACES):
+            c = _kmeans(x[:, m * subdim : (m + 1) * subdim], K_CODES, seed=42 + m)
+            books.append([[float(v) for v in row] for row in c])
+        return books
 
-    rng = np.random.default_rng(seed)
-    centers = [x[rng.integers(len(x))]]
-    for _ in range(1, k):
-        d2 = np.min(np.stack([((x - c) ** 2).sum(axis=1) for c in centers]), axis=0)
-        probs = d2 / d2.sum() if d2.sum() > 0 else None
-        centers.append(x[rng.choice(len(x), p=probs)])
-    c = np.stack(centers)
-    for _ in range(25):
-        dists = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        labels = dists.argmin(axis=1)
-        new_c = np.stack(
-            [x[labels == i].mean(axis=0) if (labels == i).any() else c[i] for i in range(k)]
-        )
-        shift = float(((new_c - c) ** 2).sum())
-        c = new_c
-        if shift < 1e-9:
-            break
-    return c
-
-
-def fit_codebooks(emb: DataFrame, cache_key: str | None = None) -> list[list[list[float]]]:
-    """M per-subspace codebooks from a bounded driver-side sample
-    (shared with the IVF centroid fit — one collect per table)."""
-    cached = _CODEBOOK_CACHE.get(cache_key) if cache_key else None
-    if cached is not None:
-        return cached
-    from .ivf import fit_sample
-
-    x = fit_sample(emb, cache_key)
-    dim = x.shape[1]
-    subdim = dim // M_SUBSPACES
-    books = []
-    for m in range(M_SUBSPACES):
-        sub = x[:, m * subdim : (m + 1) * subdim]
-        c = _kmeans(sub, K_CODES, seed=42 + m)
-        books.append([[float(v) for v in row] for row in c])
-    if cache_key:
-        _CODEBOOK_CACHE[cache_key] = books
-    return books
+    return once(spark, (__name__, "codebooks", sf_dir), build)
 
 
 def _sub_slice(emb: Column, m: int, subdim: int) -> Column:
@@ -173,7 +141,7 @@ def pq_codes_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-trained state (codebooks), so the detail stays out of the
     registered query's hash-checked output; tests read it here."""
     emb = _emb_double(spark, sf_dir)
-    books = fit_codebooks(emb, cache_key=sf_dir)
+    books = fit_codebooks(spark, sf_dir)
     return encode(emb, spark, books).select("vec_id", "label", "code", "recon_sq_error")
 
 
@@ -201,7 +169,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     skeleton of "the corpus compressed losslessly in count and sanely
     in value". Per-vector codes: pq_codes_detail (tests/test_pq.py)."""
     emb = _emb_double(spark, sf_dir)
-    books = fit_codebooks(emb, cache_key=sf_dir)
+    books = fit_codebooks(spark, sf_dir)
     enc = encode(emb, spark, books)
     norm2 = F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x)
     return enc.agg(
@@ -211,21 +179,14 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (sf_dir) -> checkpointed (vec_id, label, emb, cell, code) index frame
-_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _coded_index(spark, sf_dir, emb, centroids, books) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _INDEX_CACHE.get(key)
-    if df is None:
-        from .ivf import assign_cells
-
-        df = encode(assign_cells(emb, centroids), spark, books).localCheckpoint(
-            eager=False
-        )
-        _INDEX_CACHE[key] = df
-    return df
+    """Checkpointed (vec_id, label, emb, cell, code) index frame, once
+    per application and table."""
+    return once(
+        spark,
+        (__name__, "index", sf_dir),
+        lambda: encode(assign_cells(emb, centroids), spark, books).localCheckpoint(eager=False),
+    )
 
 
 @query("q_ann_ivf_pq_topk", oracle=None, tags=("llm", "similarity", "topk", "ml"))
@@ -236,11 +197,9 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine rerank of the shortlist only. The exact pass reads 50 rows
     where brute force reads the corpus. Rows-only; recall vs brute
     force asserted in tests/test_pq.py."""
-    from .ivf import N_CELLS, _fit_centroids
-
     emb = _emb_double(spark, sf_dir)
-    centroids = _fit_centroids(emb, N_CELLS, cache_key=sf_dir)
-    books = fit_codebooks(emb, cache_key=sf_dir)
+    centroids = _fit_centroids(spark, sf_dir)
+    books = fit_codebooks(spark, sf_dir)
 
     # The (cell, code) table is the INDEX — at 100 TB it is built once
     # and persisted, not derived per query. localCheckpoint stands in

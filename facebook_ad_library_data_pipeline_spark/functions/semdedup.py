@@ -107,7 +107,7 @@ def prune_within_clusters(assigned: DataFrame) -> DataFrame:
 
     # The assignment feeds both the pair stage and the final verdict
     # join — materialize the E-step once instead of re-running the
-    # Arrow matmul per consumer (the state-reshard _RESULT_CACHE
+    # Arrow matmul per consumer (the state-reshard result-reuse
     # discipline; bounded: N×(d+3) longs).
     assigned = assigned.localCheckpoint(eager=True)
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.dedup_near import JACCARD_THRESHOLD, SHINGLE_DF_CAP, shared_jaccard_pairs
 from ..registry import query
+from ..session import once
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -147,27 +148,23 @@ GROUP BY node
 
 # Component labels are consumed by q_neardup_components AND
 # q_neardup_dedup_transitive; the label-propagation loop (several jobs)
-# runs once per session/table.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# runs once per application/table.
 def shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component) over the shared Jaccard edge set, computed
-    once per session/table."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CC_CACHE.get(key)
-    if df is None:
+    once per application/table."""
+
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         nodes = docs.select(F.col("doc_id").alias("node"))
         edges = shared_jaccard_pairs(spark, sf_dir).select(
             F.col("d1").alias("src"), F.col("d2").alias("dst")
         )
         cc = connected_components(nodes, edges)
-        df = cc.select(F.col("node").alias("doc_id"), "component").localCheckpoint(
+        return cc.select(F.col("node").alias("doc_id"), "component").localCheckpoint(
             eager=False
         )
-        _CC_CACHE[key] = df
-    return df
+
+    return once(spark, (__name__, sf_dir), build)
 
 
 @query("q_neardup_components", oracle=_CC_ORACLE, tags=("llm", "dedup", "iterative"))

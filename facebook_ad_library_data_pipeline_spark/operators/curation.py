@@ -89,10 +89,11 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["doc_id"],
     ).drop("digest")
 
-    # Shared edge set (dedup_near._EDGE_CACHE): the Jaccard inverted-
-    # index join is the expensive stage of this pipeline; computing it
-    # privately here re-ran it for q_curate_corpus AND q_corpus_mix on
-    # top of the near-dup family's own copy.
+    # Shared edge set (dedup_near.shared_jaccard_pairs, once per
+    # application): the Jaccard inverted-index join is the expensive
+    # stage of this pipeline; computing it privately here re-ran it for
+    # q_curate_corpus AND q_corpus_mix on top of the near-dup family's
+    # own copy.
     losers = (
         shared_jaccard_pairs(spark, sf_dir, JACCARD_THRESHOLD)
         .select(F.col("d2").alias("doc_id"))

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..catalog import fan_out, load_table
 from ..functions.text import shingles_col, tokens_col
 from ..registry import query
+from ..session import once
 
 JACCARD_THRESHOLD = 0.6
 # Drop shingles appearing in more docs than this from the candidate
@@ -163,43 +164,34 @@ def jaccard_pairs(
 
 # The Jaccard edge set feeds FOUR queries (pairs, pair-wise dedup,
 # connected components, transitive dedup). r02 computed it three times
-# over; one lazily-checkpointed copy per (session, sf_dir, threshold)
-# is computed on first use and reused for the rest of the session.
-# Keyed by applicationId so a driver that restarts the context can
-# never see a stale DataFrame.
-_EDGE_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+# over; one lazily-checkpointed copy per (application, sf_dir,
+# threshold) is computed on first use and reused through session.once.
 
 
 def shared_jaccard_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
-    """(d1, d2, jaccard) near-dup edges, computed once per session/table
-    and shared across every consumer (VERDICT r02 item #4)."""
-    key = (spark.sparkContext.applicationId, sf_dir, float(threshold))
-    df = _EDGE_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = jaccard_pairs(docs, threshold).localCheckpoint(eager=False)
-        _EDGE_CACHE[key] = df
-    return df
-
-
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
+    """(d1, d2, jaccard) near-dup edges, computed once per application
+    and table and shared across every consumer (VERDICT r02 item #4)."""
+    return once(
+        spark,
+        (__name__, "jaccard", sf_dir, float(threshold)),
+        lambda: jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold)
+        .localCheckpoint(eager=False),
+    )
 
 
 def shared_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached pre-threshold candidate pairs over the documents
-    table — the same one-copy-per-session discipline as
-    shared_jaccard_pairs, so a session scoring BOTH Jaccard and
-    containment builds the inverted index and runs the pair self-join
-    once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIR_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = candidate_pairs(docs).localCheckpoint(eager=False)
-        _PAIR_CACHE[key] = df
-    return df
+    """Pre-threshold candidate pairs over the documents table, once per
+    application like shared_jaccard_pairs, so an application scoring
+    BOTH Jaccard and containment builds the inverted index and runs the
+    pair self-join once."""
+    return once(
+        spark,
+        (__name__, "candidates", sf_dir),
+        lambda: candidate_pairs(load_table(spark, sf_dir, "documents"))
+        .localCheckpoint(eager=False),
+    )
 
 
 @query("q_ngram_jaccard_pairs", oracle=_JACCARD_ORACLE, tags=("llm", "dedup", "neardup"))
@@ -282,18 +274,14 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
 
 
 # Signatures feed q_minhash_signatures AND the LSH band join (both
-# sides) — one minhash aggregation per session/table.
-_MINHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# sides) — one minhash aggregation per application/table.
 def shared_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _MINHASH_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = minhash_signatures(docs).localCheckpoint(eager=False)
-        _MINHASH_CACHE[key] = df
-    return df
+    return once(
+        spark,
+        (__name__, "minhash", sf_dir),
+        lambda: minhash_signatures(load_table(spark, sf_dir, "documents"))
+        .localCheckpoint(eager=False),
+    )
 
 
 # Shared CTE chain: shingles -> portable base hash -> 32 component
@@ -498,18 +486,14 @@ def simhash_col(docs: DataFrame) -> DataFrame:
 
 # Fingerprints are consumed by q_simhash_fingerprints AND the pair
 # query's band self-join (both sides) — one tokenize+pack aggregation
-# per session/table, same pattern as the Jaccard edge cache.
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# per application/table, same pattern as the Jaccard edge set.
 def shared_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIMHASH_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = simhash_col(docs).localCheckpoint(eager=False)
-        _SIMHASH_CACHE[key] = df
-    return df
+    return once(
+        spark,
+        (__name__, "simhash", sf_dir),
+        lambda: simhash_col(load_table(spark, sf_dir, "documents"))
+        .localCheckpoint(eager=False),
+    )
 
 
 def _simhash_nibble_sql(j: int) -> str:

@@ -108,7 +108,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dev feeds both the MAD aggregate and the final census —
     # materialize once instead of re-scanning events per consumer
-    # (the semdedup/_RESULT_CACHE bounded-reuse discipline; at scale
+    # (the semdedup/q_state_reshard bounded-reuse discipline; at scale
     # this is a persist of N×3 narrow columns, standard for two-pass
     # robust statistics). cents is dead after adev — drop it before
     # the snapshot.

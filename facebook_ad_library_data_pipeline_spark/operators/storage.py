@@ -29,20 +29,17 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.money import money_sum, money_sum_sql
 from ..registry import query
-from ..session import build_once, sf_tag, work_dir
+from ..session import build_once, once, sf_tag, work_dir
 
 N_BUCKETS = 8
-
-_BUCKET_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(orders_table, customer_table) bucketed by custkey into
     N_BUCKETS, written once per (application, sf_dir). sortBy within
     buckets so the merge join needs no sort either."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    names = _BUCKET_CACHE.get(key)
-    if names is None:
+
+    def build() -> tuple[str, str]:
         tag = sf_tag(sf_dir)
         o_name, c_name = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
         for name, src, col in (
@@ -60,9 +57,9 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .mode("overwrite")
                 .saveAsTable(name)
             )
-        names = (o_name, c_name)
-        _BUCKET_CACHE[key] = names
-    return names
+        return o_name, c_name
+
+    return once(spark, (__name__, sf_dir), build)
 
 
 _BUCKETED_ORACLE = f"""
@@ -715,10 +712,10 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ dynamic partition overwrite
 
-# (applicationId, sf_dir) -> {"before": snap, "after": snap} file-level
+# dpo_events_dir's path -> {"before": snap, "after": snap} file-level
 # audit of the overwrite, consumed by tests/test_plans.py to pin the
 # untouched-partition immutability contract.
-_DPO_AUDIT: dict[tuple[str, str], dict] = {}
+_DPO_AUDIT: dict[str, dict] = {}
 
 DPO_TOUCHED = "purchase"  # the one partition the daily reload rewrites
 
@@ -755,7 +752,6 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
     Reference anchor: the reference's per-run whole-artifact overwrite
     handoff (``main.py:13-25``, ``utils/base.py:4-8``) — the engine
     upgrade is overwriting only the touched partition."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def build(path: Path) -> None:
         out = str(path)
@@ -775,7 +771,7 @@ def dpo_events_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .parquet(out)
         )
-        _DPO_AUDIT[key] = {"before": before, "after": _dpo_snapshot(out)}
+        _DPO_AUDIT[out] = {"before": before, "after": _dpo_snapshot(out)}
 
     return build_once(spark, f"dpo_events_{sf_tag(sf_dir)}", build)
 

@@ -390,7 +390,7 @@ _PRIORITY = [
     "q_arrow_group_stats",  # applyInArrow: exact per-group median via numpy on zero-copy columns
     # Queries whose implementation changed this round (shared-session
     # active-query guard + sink snap-and-drop in the tws family;
-    # _SNAP_SHARDS single-sourcing and the _RESULT_CACHE'd reshard
+    # _SNAP_SHARDS single-sourcing and the once-per-application reshard
     # continuation in state_reader) — re-prove through the driver:
     "q_state_reshard",
     "q_state_snapshot_shard",

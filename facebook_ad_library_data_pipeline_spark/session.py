@@ -18,7 +18,8 @@ option; a stream start that needs one uses ``conf_scope``.
 
 Scratch files live under ``work_dir``: one dir per Spark application,
 inside Spark's own per-application files root, so Spark removes it at
-stop and no two applications ever share a scratch path.
+stop and no two applications ever share a scratch path. In-memory
+reuse lives in ``once``, one application's lifetime.
 """
 
 from __future__ import annotations
@@ -26,12 +27,15 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Hashable, Iterator
 from contextlib import contextmanager
 from pathlib import Path
+from typing import TypeVar
 
 from pyspark import SparkFiles
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_cpus() -> str:
@@ -70,10 +74,27 @@ def sf_tag(sf_dir: str) -> str:
     return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
 
 
-# Paths under some application's work_dir that a build completed. The
-# path names the application (its files root is per SparkContext), so
-# a new application never finds an old one's entry.
-_BUILT: set[Path] = set()
+# The one in-memory memo: values built for the application _memo_app.
+# PySpark runs one SparkContext per process, so entries of an earlier
+# application are dead (stopped frames, a stopped session's children)
+# and are dropped when a new one first asks.
+_memo: dict[tuple, object] = {}
+_memo_app: str | None = None
+
+
+def once(spark: SparkSession, key: tuple[Hashable, ...], build: Callable[[], T]) -> T:
+    """``build()`` the first time this application asks for ``key``,
+    the stored value after that. ``key`` starts with the owning
+    module's ``__name__``, so modules cannot collide. A ``build`` that
+    raises stores nothing; a ``None`` result is stored like any other."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _memo.clear()
+        _memo_app = app
+    if key not in _memo:
+        _memo[key] = build()
+    return _memo[key]  # type: ignore[return-value]
 
 
 def build_once(spark: SparkSession, name: str, build: Callable[[Path], None]) -> str:
@@ -81,10 +102,12 @@ def build_once(spark: SparkSession, name: str, build: Callable[[Path], None]) ->
     time this application asks for it. The path is cleared before the
     build, so a retry after a failed build starts clean."""
     out = work_dir(spark) / name
-    if out not in _BUILT:
+
+    def clear_and_build() -> None:
         shutil.rmtree(out, ignore_errors=True)
         build(out)
-        _BUILT.add(out)
+
+    once(spark, (__name__, name), clear_and_build)
     return str(out)
 
 

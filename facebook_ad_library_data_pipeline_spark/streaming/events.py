@@ -14,13 +14,15 @@ windows shuffle on the session key only.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, _events_nanos_schema, events_ts_unit, load_table
 from ..functions.money import money_sum
 from ..registry import query
-from ..session import conf_scope, sf_tag, work_dir
+from ..session import build_once, conf_scope, sf_tag
 
 # ------------------------------------------------------------- batch twins
 
@@ -158,16 +160,16 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (catalog.events_ts_unit)."""
     # The file source requires a directory; expose the single events
     # file through a symlink dir (no data copied, testdata untouched).
-    stream_dir = work_dir(spark) / f"stream_{sf_tag(sf_dir)}"
-    stream_dir.mkdir(exist_ok=True)
-    link = stream_dir / "events.parquet"
-    if not link.exists():
-        link.symlink_to(f"{sf_dir}/events.parquet")
+    def link(stream_dir: Path) -> None:
+        stream_dir.mkdir()
+        (stream_dir / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
+
+    stream_dir = build_once(spark, f"stream_{sf_tag(sf_dir)}", link)
     if events_ts_unit(sf_dir) == "ns":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.readStream.schema(_events_nanos_schema()).parquet(str(stream_dir))
+        raw = spark.readStream.schema(_events_nanos_schema()).parquet(stream_dir)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.readStream.schema(SCHEMAS["events"]).parquet(str(stream_dir))
+    return spark.readStream.schema(SCHEMAS["events"]).parquet(stream_dir)
 
 
 def rocksdb_changelog_session(spark: SparkSession) -> SparkSession:

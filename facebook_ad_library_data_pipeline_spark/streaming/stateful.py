@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
+from ..session import once
 from .events import load_events_stream, rocksdb_changelog_session, run_stream_to_memory
 
 
@@ -110,6 +111,20 @@ def keep_latest_per_user(latest: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def all_counted(scoped: SparkSession, view: str, keys: Iterable[str], total: int) -> bool:
+    """The drain fixpoint of the queries whose own clock never lets the
+    stream quiesce: every source row is counted once its group's
+    largest n_events in the sink ``view`` is in, so the per-group
+    maxima sum to ``total``. Max per group before summing: idempotent
+    under a replayed batch re-appending a group's row (a raw sum would
+    overshoot ``total`` and the == fixpoint would never be reached)."""
+    got = scoped.sql(
+        "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
+        f"FROM {view} GROUP BY {', '.join(keys)})"
+    ).collect()[0][0]
+    return got == total
 
 
 OUTPUT_SCHEMA = StructType(
@@ -356,21 +371,14 @@ def q_stream_group_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = user_timeout_stream(events)
     total = scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
 
-    def all_sessions_closed() -> bool:
-        # dedup by (user, session) first: idempotent under a replayed
-        # batch re-appending a session row
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_group_timeout_out GROUP BY user_id, session_id)"
-        ).collect()[0][0]
-        return got == total
-
     run_stream_to_memory(
         out,
         "stream_group_timeout_out",
         output_mode="update",
         partitions="8",
-        drained=all_sessions_closed,
+        drained=lambda: all_counted(
+            scoped, "stream_group_timeout_out", ("user_id", "session_id"), total
+        ),
     )
     sessions = (
         scoped.table("stream_group_timeout_out")
@@ -536,15 +544,12 @@ def tws_runtime_available() -> bool:
         return False
 
 
-_TWS_SESSION_CACHE: dict[str, SparkSession] = {}
-
-
 def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     """One RocksDB-scoped child session shared by the whole typed-state
-    family (cached per SparkContext, the same amortization pattern as
-    session.build_once): the family's queries are conf-identical, so
-    cloning a fresh SessionState per query run buys no isolation and
-    re-pays the vendor-path wiring.
+    family, built once per application through session.once: the
+    family's queries are conf-identical, so cloning a fresh
+    SessionState per query run buys no isolation and re-pays the
+    vendor-path wiring.
 
     Sharing contract (r10-advice hardening): the family's correctness
     depends on SEQUENTIAL use — two family streams running concurrently
@@ -568,10 +573,11 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     """
     from ..vendorpath import ensure_protobuf
 
-    key = spark.sparkContext.applicationId
-    scoped = _TWS_SESSION_CACHE.get(key)
-    if scoped is None:
-        ensure_protobuf(spark)
+    # on every call: a no-op after the first, it re-asserts the worker
+    # env in case the caller's context was rebuilt under the same app id
+    ensure_protobuf(spark)
+
+    def build() -> SparkSession:
         # changelog checkpointing measured at sf0.1 in
         # OPTIMIZATION_r16.md §7: warm batches drop from ckptLat
         # 300-2000ms / syncMs 4-30s (summed over 16 partition commits)
@@ -581,11 +587,9 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
             "false",
         )
-        _TWS_SESSION_CACHE[key] = scoped
-    else:
-        # no-op after the first call; re-asserts the worker env in case
-        # the caller's context was rebuilt under the same app id
-        ensure_protobuf(scoped)
+        return scoped
+
+    scoped = once(spark, (__name__, "tws_session"), build)
     active = [q.name or q.id for q in scoped.streams.active]
     if active:
         raise RuntimeError(
@@ -774,19 +778,12 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source row count (n_events is strictly increasing per emit).
     total = scoped.read.parquet(src).count()
 
-    def all_rows_folded() -> bool:
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_tws_list_out GROUP BY user_id)"
-        ).collect()[0][0]
-        return got == total
-
     run_stream_to_memory(
         out,
         "stream_tws_list_out",
         output_mode="update",
         partitions="16",
-        drained=all_rows_folded,
+        drained=lambda: all_counted(scoped, "stream_tws_list_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_list_out")
     return keep_latest_per_user(latest)
@@ -909,19 +906,12 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = user_timer_finalize_tws(events)
     total = scoped.read.parquet(src).count()
 
-    def all_rows_finalized() -> bool:
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM (SELECT max(n_events) AS n "
-            "FROM stream_tws_timer_out GROUP BY user_id)"
-        ).collect()[0][0]
-        return got == total
-
     run_stream_to_memory(
         out,
         "stream_tws_timer_out",
         output_mode="update",
         partitions="16",
-        drained=all_rows_finalized,
+        drained=lambda: all_counted(scoped, "stream_tws_timer_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_timer_out")
     return keep_latest_per_user(latest)
@@ -1114,23 +1104,14 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
     )
 
-    def all_windows_closed() -> bool:
-        # max-per-window before summing: idempotent under a replayed
-        # batch re-appending a window's row (a raw sum would overshoot
-        # `total` and the == fixpoint would never be reached)
-        got = scoped.sql(
-            "SELECT coalesce(sum(n), 0) FROM ("
-            "  SELECT max(n_events) AS n FROM stream_tws_event_timer_out"
-            "  GROUP BY user_id, window_start)"
-        ).collect()[0][0]
-        return got == total
-
     run_stream_to_memory(
         out,
         "stream_tws_event_timer_out",
         output_mode="update",
         partitions="16",
-        drained=all_windows_closed,
+        drained=lambda: all_counted(
+            scoped, "stream_tws_event_timer_out", ("user_id", "window_start"), total
+        ),
     )
     # each window fires exactly once, so this grouping is a no-op on a
     # clean run — it exists to absorb a replayed batch's duplicate

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -17,7 +19,32 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def private_tmp():
+    """One private temp dir for the run, set before the JVM starts: the
+    driver JVM (``java.io.tmpdir``), this process and every child it
+    starts write their temp files there, so a temp-dir check sees only
+    what the run itself adds, not what other processes do in /tmp.
+    Short, because Unix-domain socket paths under it are limited to
+    107 bytes."""
+    d = tempfile.mkdtemp(prefix="sg", dir="/tmp")
+    saved = {k: os.environ.get(k) for k in ("TMPDIR", "JAVA_TOOL_OPTIONS")}
+    os.environ["TMPDIR"] = d
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        filter(None, [saved["JAVA_TOOL_OPTIONS"], f"-Djava.io.tmpdir={d}"])
+    )
+    saved_tempdir, tempfile.tempdir = tempfile.tempdir, d
+    yield d
+    tempfile.tempdir = saved_tempdir
+    for k, v in saved.items():
+        if v is None:
+            os.environ.pop(k, None)
+        else:
+            os.environ[k] = v
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def spark(private_tmp):
     s = get_spark("tests")
     yield s
 

@@ -507,8 +507,7 @@ def test_dynamic_partition_overwrite_immutability(spark, sf_dir):
         dpo_events_dir,
     )
 
-    dpo_events_dir(spark, sf_dir)  # build + overwrite (cached)
-    audit = _DPO_AUDIT[(spark.sparkContext.applicationId, sf_dir)]
+    audit = _DPO_AUDIT[dpo_events_dir(spark, sf_dir)]  # build + overwrite, once
     before, after = audit["before"], audit["after"]
     touched = f"event_type={DPO_TOUCHED}"
     assert touched in before and touched in after

@@ -41,7 +41,7 @@ def _zero_code_errors(spark, sf_dir):
     )
 
     emb = _emb_double(spark, sf_dir)
-    books = fit_codebooks(emb, cache_key=sf_dir)
+    books = fit_codebooks(spark, sf_dir)
     joined = with_books(emb, spark, books)
     err = _recon_sq_error(F.col("emb"), F.col("books"), F.lit(0).cast("long"), 64)
     return [r.e for r in joined.select(err.alias("e")).collect()]

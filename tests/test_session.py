@@ -1,6 +1,6 @@
-"""Session policy: host-sized defaults and the exact restore of
-``conf_scope`` (no JVM), and the lifetime of ``work_dir`` (one
-subprocess application)."""
+"""Session policy: host-sized defaults, the exact restore of
+``conf_scope`` and the per-application memo ``once`` (no JVM), and the
+lifetime of ``work_dir`` (one subprocess application)."""
 
 from __future__ import annotations
 
@@ -13,10 +13,12 @@ from types import SimpleNamespace
 
 import pytest
 
+from facebook_ad_library_data_pipeline_spark import session
 from facebook_ad_library_data_pipeline_spark.session import (
     conf_scope,
     default_cpus,
     default_driver_mem,
+    once,
     sf_tag,
 )
 
@@ -61,6 +63,69 @@ def test_conf_scope_restores_exactly_even_on_error():
     # the set key gets its old value back; the unset key is unset again,
     # not pinned to its default
     assert spark.conf.settings == {"spark.sql.shuffle.partitions": "4"}
+
+
+def _app(app_id: str) -> SimpleNamespace:
+    """The slice of SparkSession ``once`` reads: the application id."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+@pytest.fixture
+def memo(monkeypatch):
+    """An empty memo for the test, so fake application ids never drop
+    the entries of the test session's real application."""
+    monkeypatch.setattr(session, "_memo", {})
+    monkeypatch.setattr(session, "_memo_app", None)
+
+
+def _counting(value):
+    """A build that returns ``value`` and counts its calls."""
+
+    def build():
+        build.calls += 1
+        return value
+
+    build.calls = 0
+    return build
+
+
+def test_once_builds_once_per_key(memo):
+    spark, build = _app("app-1"), _counting([1, 2])
+    first = once(spark, (__name__, "a"), build)
+    assert once(spark, (__name__, "a"), build) is first
+    assert build.calls == 1
+    once(spark, (__name__, "b"), build)
+    assert build.calls == 2
+
+
+def test_once_stores_nothing_when_build_raises(memo):
+    spark = _app("app-1")
+
+    def failing():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        once(spark, (__name__, "retry"), failing)
+    build = _counting("built")
+    assert once(spark, (__name__, "retry"), build) == "built"
+    assert build.calls == 1
+
+
+def test_once_drops_entries_of_a_previous_application(memo):
+    build = _counting(object())
+    once(_app("app-1"), (__name__, "x"), build)
+    once(_app("app-2"), (__name__, "x"), build)
+    assert build.calls == 2
+    # app-1's entry went when app-2 first asked
+    once(_app("app-1"), (__name__, "x"), build)
+    assert build.calls == 3
+
+
+def test_once_memoizes_none(memo):
+    spark, build = _app("app-1"), _counting(None)
+    assert once(spark, (__name__, "none"), build) is None
+    assert once(spark, (__name__, "none"), build) is None
+    assert build.calls == 1
 
 
 def test_sf_tag_names_the_absolute_dir(tmp_path, monkeypatch):
