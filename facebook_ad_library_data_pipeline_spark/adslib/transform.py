@@ -27,17 +27,23 @@ declarative plan. Operator-by-operator parity map (SURVEY.md §2.A):
 * D1-D3 keep-first dedups        → row_number windows ordered by
                                    (group_idx, pos); null keys collapse
                                    (pandas parity, replicated knowingly)
+* U2  stage row counts           → Observations on the curated frame,
+                                   filled by the job that writes it
+                                   (the reference logs them while its
+                                   transform runs,
+                                   transform_raw_data.py:201,216-218,233)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import detected_col, tokens_col
 from ..operators.dedup import dedup_keep_first
-from ..operators.quality import validation_error_column
+from ..operators.quality import validation_counts, validation_error_column
+from ..session import once
 from .schemas import AD_SCHEMA, TS_MAX, TS_MIN
 
 RAW_JSON_TYPE = T.ArrayType(T.ArrayType(AD_SCHEMA))
@@ -49,16 +55,33 @@ def read_raw_ads(spark: SparkSession, path: str) -> DataFrame:
     """S6: one JSON file (array of ad groups) → one row per ad with
     lineage (file, group_idx, pos). wholetext mirrors the reference's
     json.load-the-file contract (transform_raw_data.py:193-194); with
-    many raw files this parallelizes per file. group_idx restarts in
-    every file, so the file path rides along from the same scan."""
-    raw = spark.read.text(path, wholetext=True)
-    groups = raw.select(
+    many raw files this parallelizes per file."""
+    return _explode_files(spark.read.text(path, wholetext=True))
+
+
+def _explode_files(files: DataFrame) -> DataFrame:
+    """One wholetext row per file → one row per ad. group_idx restarts
+    in every file, so the file path rides along from the same scan."""
+    groups = files.select(
         F.col("_metadata.file_path").alias("__file"),
         F.posexplode(F.from_json(F.col("value"), RAW_JSON_TYPE)).alias("__group_idx", "ads"),
     )
     return groups.select(
         "__file", "__group_idx", F.posexplode("ads").alias("__pos", "ad")
     )
+
+
+def _input_fingerprint() -> list[Column]:
+    """Which files a scan read: their number and the XOR of one hash
+    per file over (path, size, modification time). bit_xor, not sum:
+    an ANSI sum of xxhash64 values overflows."""
+    meta = F.col("_metadata")
+    return [
+        F.count(F.lit(1)).alias("files"),
+        F.bit_xor(
+            F.xxhash64(meta["file_path"], meta["file_size"], meta["file_modification_time"])
+        ).alias("files_hash"),
+    ]
 
 
 def _detect_media(fmt: Column, cards: Column) -> tuple[Column, Column]:
@@ -160,19 +183,25 @@ def _validity_rules() -> list[tuple[str, Column]]:
 
 def flag_invalid(parsed: DataFrame) -> DataFrame:
     """Attach the validation_error column — the ONE place the rule set
-    is wired, shared by the split and the stage-count reconciliation so
-    they can never diverge."""
+    is wired, shared by the split and the stage counts so they can
+    never diverge."""
     return parsed.withColumn(
         "validation_error", validation_error_column(_validity_rules())
     )
 
 
+def _valid_rows(flagged: DataFrame) -> DataFrame:
+    return flagged.filter(F.col("validation_error").isNull()).drop("validation_error")
+
+
+def _invalid_rows(flagged: DataFrame) -> DataFrame:
+    return flagged.filter(F.col("validation_error").isNotNull())
+
+
 def validate_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """V2: one pass → (valid, quarantine-with-error-string)."""
     flagged = flag_invalid(parsed)
-    valid = flagged.filter(F.col("validation_error").isNull()).drop("validation_error")
-    invalid = flagged.filter(F.col("validation_error").isNotNull())
-    return valid, invalid
+    return _valid_rows(flagged), _invalid_rows(flagged)
 
 
 def dedup_ads(valid: DataFrame) -> DataFrame:
@@ -185,41 +214,72 @@ def dedup_ads(valid: DataFrame) -> DataFrame:
     return dedup_keep_first(d2, ["ad_text"], LINEAGE_COLS)
 
 
+def _latest_observations(spark: SparkSession) -> dict[str, dict[str, Observation]]:
+    """raw_path → the Observations of the latest ``transform_raw_ads``
+    over it, for this application."""
+    return once(spark, (__name__, "stage_observations"), dict)
+
+
 def transform_raw_ads(spark: SparkSession, raw_path: str) -> tuple[DataFrame, DataFrame]:
     """The whole E2 stage: raw JSON path → (curated, quarantine).
     Curated keeps lineage cols for the report's deterministic tie-break;
-    drop them at write time."""
-    exploded = read_raw_ads(spark, raw_path)
-    parsed = parse_ads(exploded)
-    valid, invalid = validate_split(parsed)
-    return dedup_ads(valid), invalid
+    drop them at write time.
+
+    Curated carries fresh Observations, filled by the first job that
+    materializes it: the input fingerprint on the wholetext scan,
+    total/valid/invalid on the flagged rows before the valid filter,
+    and post_dedup on the result. ``pipeline_stage_counts`` reads them.
+    Quarantine shares the observed scan: if it is written first, its
+    job records the fingerprint, and a file changed between the two
+    writes then fails the fingerprint check, so the counts are rerun."""
+    obs = {name: Observation() for name in ("files", "stages", "curated")}
+    files = spark.read.text(raw_path, wholetext=True).observe(obs["files"], *_input_fingerprint())
+    flagged = flag_invalid(parse_ads(_explode_files(files)))
+    staged = flagged.observe(obs["stages"], *validation_counts())
+    curated = dedup_ads(_valid_rows(staged)).observe(
+        obs["curated"], F.count(F.lit(1)).alias("post_dedup")
+    )
+    _latest_observations(spark)[raw_path] = obs
+    return curated, _invalid_rows(flagged)
+
+
+def _arrived(obs: dict[str, Observation]) -> bool:
+    """Whether every Observation has its metrics. They reach the driver
+    asynchronously after the action that fills them; ``getRowOrEmpty``
+    waits for them at most 100 ms."""
+    return not any(o._jo.getRowOrEmpty().isEmpty() for o in obs.values())
+
+
+def _files_now(spark: SparkSession, raw_path: str) -> dict:
+    """The input fingerprint of ``raw_path`` as it is now, from a
+    binaryFile scan that selects no ``content`` and so reads no file
+    bytes. coalesce(1): the aggregate then needs no shuffle, and the
+    check is one job."""
+    files = spark.read.format("binaryFile").load(raw_path).coalesce(1)
+    return files.select(*_input_fingerprint()).collect()[0].asDict()
 
 
 def pipeline_stage_counts(spark: SparkSession, raw_path: str) -> dict[str, int]:
     """U2 parity (reference utils/logging.py:6-31 + the reconciliation
     log lines at transform_raw_data.py:201,216-218,233): per-stage row
-    counts parsed/valid/invalid/post-dedup. The reference re-counts
-    three materialized lists; here parsed/valid/invalid ride an
-    ``observe()`` on the SAME job that materializes the deduped result —
-    one pass over the data, four counts."""
-    from pyspark.sql import Observation
+    counts parsed/valid/invalid/post-dedup.
 
-    exploded = read_raw_ads(spark, raw_path)
-    parsed = parse_ads(exploded)
-    flagged = flag_invalid(parsed)
-    obs = Observation("pipeline_stages")
-    observed = flagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("parsed"),
-        F.count(F.when(F.col("validation_error").isNull(), 1)).alias("valid"),
-        F.count(F.when(F.col("validation_error").isNotNull(), 1)).alias("invalid"),
-    )
-    valid = observed.filter(F.col("validation_error").isNull()).drop("validation_error")
-    post_dedup = dedup_ads(valid).count()  # the single action; fires the observe
-    metrics = obs.get
+    Counts of the latest materialized transform over ``raw_path`` whose
+    input files are unchanged, else a fresh run. Like the reference,
+    which logs them while its transform runs, they come from the job
+    that wrote the curated frame: the Observations ``transform_raw_ads``
+    attached to it, used when they have arrived and a metadata-only
+    scan of ``raw_path`` gives the fingerprint that job recorded. A
+    fresh run counts a new transform, which fills its own."""
+    obs = _latest_observations(spark).get(raw_path)
+    if obs is None or not _arrived(obs) or obs["files"].get != _files_now(spark, raw_path):
+        curated, _ = transform_raw_ads(spark, raw_path)
+        obs = _latest_observations(spark)[raw_path]
+        curated.count()
+    stages = obs["stages"].get
     return {
-        "parsed": int(metrics["parsed"]),
-        "valid": int(metrics["valid"]),
-        "invalid": int(metrics["invalid"]),
-        "post_dedup": int(post_dedup),
+        "parsed": int(stages["total"]),
+        "valid": int(stages["valid"]),
+        "invalid": int(stages["invalid"]),
+        "post_dedup": int(obs["curated"].get["post_dedup"]),
     }

@@ -158,8 +158,10 @@ def _events_nanos_schema() -> T.StructType:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan with declared schema — pushdown/pruning friendly."""
-    # Defensive against a driver-built session: timestamp semantics
-    # must be UTC (DuckDB oracle is UTC-naive). Runtime-settable.
+    # The session contract's one exception (session.py): timestamp
+    # semantics must be UTC (DuckDB oracle is UTC-naive) on a
+    # driver-built session too, and neither this nor nanosAsLong below
+    # has a reader-option form. Both are no-ops on a get_spark session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events" and events_ts_unit(sf_dir) == "ns":
         # TIMESTAMP(NANOS) is unreadable as Spark TimestampType: read

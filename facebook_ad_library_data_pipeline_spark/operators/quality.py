@@ -34,6 +34,18 @@ def validation_error_column(rules: list[tuple[str, Column]]) -> Column:
     return F.when(err == "", F.lit(None).cast("string")).otherwise(err)
 
 
+def validation_counts() -> list[Column]:
+    """Observed-metric columns over a frame with ``validation_error``:
+    its rows in total, the valid ones (no error) and the invalid ones,
+    aliased total/valid/invalid."""
+    err = F.col("validation_error")
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(err.isNull(), 1)).alias("valid"),
+        F.count(F.when(err.isNotNull(), 1)).alias("invalid"),
+    ]
+
+
 def _event_rules() -> list[tuple[str, Column]]:
     return [
         ("value_out_of_range", F.col("value") < 250.0),
@@ -138,22 +150,10 @@ def q_observe_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     obs = Observation()
-    observed = with_validation_error(events).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.count(F.when(F.col("validation_error").isNull(), 1)).alias("rows_valid"),
-        F.count(F.when(F.col("validation_error").isNotNull(), 1)).alias("rows_invalid"),
-    )
+    observed = with_validation_error(events).observe(obs, *validation_counts())
     observed.write.format("noop").mode("overwrite").save()  # the one action
     m = obs.get
     return spark.createDataFrame(
-        [
-            (
-                m["rows_total"],
-                m["rows_valid"],
-                m["rows_invalid"],
-                m["rows_valid"] + m["rows_invalid"] == m["rows_total"],
-            )
-        ],
+        [(m["total"], m["valid"], m["invalid"], m["valid"] + m["invalid"] == m["total"])],
         "rows_total long, rows_valid long, rows_invalid long, reconciled boolean",
     )

@@ -14,7 +14,13 @@ shuffle partitions = task slots (on a real cluster this is
 
 Session contract: a query never leaves the caller's conf changed. A
 query-local setting goes on a ``newSession()`` child or a reader/writer
-option; a stream start that needs one uses ``conf_scope``.
+option; a stream start that needs one uses ``conf_scope``. The one
+exception: ``catalog.load_table`` and ``events.load_events_stream`` set
+``spark.sql.session.timeZone=UTC`` and
+``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's session.
+Neither setting has a reader-option form, the frames they return carry
+the caller's session (so a child session would not do), and
+``get_spark`` sets both at build, so on its sessions they are no-ops.
 
 Scratch files live under ``work_dir``: one dir per Spark application,
 inside Spark's own per-application files root, so Spark removes it at

@@ -166,6 +166,8 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream_dir = build_once(spark, f"stream_{sf_tag(sf_dir)}", link)
     if events_ts_unit(sf_dir) == "ns":
+        # The session contract's one exception (session.py): no
+        # reader-option form; a no-op on a get_spark session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.readStream.schema(_events_nanos_schema()).parquet(stream_dir)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

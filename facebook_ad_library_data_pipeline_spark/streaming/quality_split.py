@@ -2,10 +2,6 @@
 as a continuous pipeline: a single stream forked inside foreachBatch to
 two sinks (curated parquet + quarantine json), exactly-once per
 micro-batch. This is S3 (incremental listener append) + V1/V2 fused.
-
-Also: `observe()` metrics — the engine-side version of the reference's
-reconciliation log lines (parsed/valid/invalid counts,
-transform_raw_data.py:216-218) without a second pass over the data.
 """
 
 from __future__ import annotations
@@ -13,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from ..operators.quality import with_validation_error
 from ..session import conf_scope
 from .events import load_events_stream
@@ -55,18 +50,3 @@ def run_streaming_quality_split(spark: SparkSession, sf_dir: str, out_dir: str) 
         q.processAllAvailable()
     finally:
         q.stop()
-
-
-def observed_validation_counts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
-    """U2 mapping: attach an observe() to the curated write path; the
-    valid/invalid/total counts come back with the SAME job, no second
-    scan (the reference re-counts with len() three times)."""
-    events = load_table(spark, sf_dir, "events")
-    flagged = with_validation_error(events)
-    observed = flagged.observe(
-        "validation_metrics",
-        F.count(F.lit(1)).alias("n_total"),
-        F.count(F.when(F.col("validation_error").isNull(), 1)).alias("n_valid"),
-        F.count(F.when(F.col("validation_error").isNotNull(), 1)).alias("n_invalid"),
-    )
-    return observed, "validation_metrics"

@@ -133,6 +133,60 @@ def test_stage_counts_reconcile(spark, tmp_path_factory):
     assert counts["parsed"] == counts["valid"] + counts["invalid"]
 
 
+FIXTURE_COUNTS = {"parsed": 10, "valid": 8, "invalid": 2, "post_dedup": 4}
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it ran, tracked under a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = "test_adslib_golden.stage_counts"
+    sc.setJobGroup(group, "pipeline_stage_counts under test")
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return result, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_stage_counts_come_from_the_curated_write(spark, tmp_path):
+    """Once the curated frame has been written, the counts are the
+    Observations that write filled: the lookup runs at most one job
+    (the metadata-only fingerprint scan), not a second parse."""
+    path = tmp_path / "raw.json"
+    path.write_text(json.dumps(FIXTURE))
+    curated, _ = transform_raw_ads(spark, str(path))
+    curated.write.parquet(str(tmp_path / "curated"))
+    counts, jobs = _jobs_of(spark, lambda: pipeline_stage_counts(spark, str(path)))
+    assert counts == FIXTURE_COUNTS
+    assert len(jobs) <= 1, jobs
+
+
+def test_stage_counts_follow_a_rewritten_file(spark, tmp_path):
+    """A raw file rewritten after the write (new size) makes the counts
+    those of the new content, not the write's."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "a.json").write_text(json.dumps(FIXTURE))
+    (raw / "b.json").write_text(json.dumps([[]]))
+    curated, _ = transform_raw_ads(spark, str(raw))
+    curated.write.parquet(str(tmp_path / "curated"))
+    assert pipeline_stage_counts(spark, str(raw)) == FIXTURE_COUNTS
+    (raw / "b.json").write_text(json.dumps([[_ad("B1", coll="GB", text="brand new words")]]))
+    assert pipeline_stage_counts(spark, str(raw)) == {
+        "parsed": 11, "valid": 9, "invalid": 2, "post_dedup": 5,
+    }
+
+
+def test_unmaterialized_transform_does_not_block_stage_counts(spark, tmp_path):
+    """A transform that was built but never run has no metrics to wait
+    for: the counts come from a fresh run instead."""
+    path = tmp_path / "raw.json"
+    path.write_text(json.dumps(FIXTURE))
+    transform_raw_ads(spark, str(path))
+    assert pipeline_stage_counts(spark, str(path)) == FIXTURE_COUNTS
+
+
 def test_report_golden(pipeline_result, spark):
     _, _, curated = pipeline_result
     rows = generate_report(curated, AS_OF).collect()

@@ -56,6 +56,25 @@ def test_ads_pipeline_runs_no_python(spark, tmp_path):
         assert not has_node(df, "BatchEvalPython")
 
 
+def test_ads_stage_counts_ride_the_curated_plan(spark, tmp_path):
+    # the stage counts are Observations on the curated frame: three
+    # CollectMetrics nodes (input files, validation outcome, post-dedup)
+    # and no extra shuffle — the P4 window and D1-D3 keep 4 exchanges
+    import json
+    import re
+
+    from facebook_ad_library_data_pipeline_spark.adslib.transform import transform_raw_ads
+    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+
+    ad = {"ad_archive_id": "A1", "is_active": True, "start_date": 1700000000,
+          "snapshot": {"display_format": "VIDEO", "body": {"text": "the ad"}}}
+    (tmp_path / "raw.json").write_text(json.dumps([[ad]]))
+    curated, _ = transform_raw_ads(spark, str(tmp_path / "raw.json"))
+    plan = formatted_plan(curated)
+    assert len(re.findall(r"^\(\d+\) CollectMetrics", plan, re.M)) == 3
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 4
+
+
 def test_inverted_index_join_not_broadcast(spark, sf_dir):
     # the exploded shingle self-join must shuffle, not broadcast.
     # Built from jaccard_pairs directly: the registered query returns

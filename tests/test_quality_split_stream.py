@@ -1,15 +1,12 @@
-"""Streaming dual-sink split + observe() metrics tests."""
+"""Streaming dual-sink split tests."""
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import functions as F
 
 from facebook_ad_library_data_pipeline_spark.catalog import load_table
 from facebook_ad_library_data_pipeline_spark.operators.quality import with_validation_error
 from facebook_ad_library_data_pipeline_spark.streaming.quality_split import (
-    observed_validation_counts,
     run_streaming_quality_split,
 )
 
@@ -30,20 +27,3 @@ def test_streaming_split_matches_batch(spark, sf_dir, tmp_path):
     assert quarantine.count() == n_invalid
     assert "validation_error" in quarantine.columns
     assert "validation_error" not in curated.columns
-
-
-def test_observe_metrics_single_pass(spark, sf_dir):
-    observed, name = observed_validation_counts(spark, sf_dir)
-    collected = {}
-
-    from pyspark.sql.streaming import listener  # noqa: F401  (batch observe path)
-
-    # batch observe: metrics are exposed after an action via the
-    # DataFrame's observedMetrics (Spark 3.3+: df.observe + collect →
-    # listener for streams, .observedMetrics via QueryExecution for batch)
-    observed.collect()
-    row = observed._jdf.queryExecution().observedMetrics().get(name).get()
-    n_total, n_valid, n_invalid = row.getLong(0), row.getLong(1), row.getLong(2)
-    assert n_total == n_valid + n_invalid
-    assert n_total == load_table(spark, sf_dir, "events").count()
-    assert n_invalid > 0
