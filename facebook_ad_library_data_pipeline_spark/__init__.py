@@ -15,13 +15,13 @@ Layout
 ------
 ``session``    SparkSession factory (UTC, AQE, tuned shuffle partitions)
 ``catalog``    testdata table loaders / temp-view registration
-``sources``    readers & writers (parquet/json/csv, partitioned writes)
+``sources``    writers (parquet/json/csv/orc, partitioned writes), Python
+               data sources, binaryFile scans
 ``operators``  relational + pipeline operators (transform, quality,
                dedup, joins, aggregates, windows, setops, topk, asof)
 ``functions``  scalar packs: text analysis, similarity, json
 ``streaming``  event-time windowed aggregations, streaming wrappers
 ``multimodal`` binary-column plumbing with stubbed decoders
-``plans``      explain/plan-audit helpers
 """
 
 __version__ = "0.1.0"

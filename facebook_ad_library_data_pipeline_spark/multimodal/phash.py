@@ -23,7 +23,8 @@ replays decode-equivalent pixels, block sums, every bit, and the
 group verdicts.
 
 Scale: decode + hash is a pure map (mapInPandas after fan_out — the
-multimodal codec discipline, measured linear in codec_scale_evidence);
+multimodal codec discipline, measured linear in SCALE_EVIDENCE.md
+"Python-codec family is linear");
 grouping is one shuffle on the 64-bit key. At 100 TB this is exactly
 the production shape: hash every image once, group by hash.
 

@@ -491,7 +491,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-truncate mergeability realized in the physical plan, so the
     exchange carries ≤ partitions·groups·K rows at ANY corpus size —
     measured CONSTANT shuffle records at 10× the rows,
-    scripts/r16_scale_evidence.py), the
+    SCALE_EVIDENCE.md "Round 16 FINAL"), the
     in-sample value ranking, AND the estimate aggregate (same
     partitioning, no second shuffle); the audit is the second corpus
     scan — a broadcast join against the ≤|event_types|-row estimates
@@ -697,7 +697,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     AUDIT-scale shape; the production path keeps only the rank ≤ K
     filter, which compiles to the same map-side partial
     WindowGroupLimit measured constant-shuffle in
-    scripts/r16_scale_evidence.py, and drops the exact count (that
+    SCALE_EVIDENCE.md "Round 16 FINAL", and drops the exact count (that
     being the point of the sketch at 100 TB).
 
     Exactness/portability notes: the composite key user_id·10⁵ + day

@@ -32,8 +32,8 @@ def salted_join(
     buckets as long as any non-key column varies, while staying
     deterministic (same input -> same routing, so re-runs are stable
     and the join OUTPUT is identical either way — the salt only
-    routes). Measured in scripts/skew_evidence.py: the straggler task
-    under a 90%-hot key drops ~SALT-fold."""
+    routes). Measured in SCALE_EVIDENCE.md "Skew mitigation": the
+    straggler task under a 90%-hot key drops ~SALT-fold."""
     salted_dim = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(SALT)]))
     )

@@ -91,40 +91,17 @@ _QUERY_MODULES = [
 ]
 
 
-# Driver-evidence priority: the correctness driver evaluates queries()
-# in registration order with a ~50-entry window, so rounds 1-2 only ever
-# checked the first 50 registrations and 58 oracle-backed queries had
-# zero driver evidence despite passing the same oracles locally.
-# load_all() returns the registry reordered so never-driver-checked
-# oracle-backed queries fill the window first (a name absent from the
-# registry is an error — a typo here would silently shrink the re-prove
-# window; everything else follows in registration order, already
-# double-proven r01/r02 queries last). Rotate this list each round to
-# move the remaining unchecked tail through the window.
+# The correctness driver checks only the first ~50 entries of queries(),
+# in order. load_all() puts these names first, in this order, and the
+# rest after them in registration order.
 _PRIORITY = [
-    # ---- round-16 window ----
-    # Window arithmetic (r15 verdict items 1-2): the driver cuts at 50
-    # rows. 3 new r16 registrations + the 4 below-cut r15 tail
-    # (q_stream_tws_reservoir + q_pca_project had NO driver row ever;
-    # q_lang_id + q_drift_psi were the r15 ADVICE touches proven by
-    # proxy) + the 40 queries whose newest row is r10 + the oldest
-    # r11 rows filling to the cut (the last listed r11 name sits at
-    # position 51, first in line for r17) = exactly 50. After this
-    # window NO
-    # driver row in the registry is older than r11 and no query is
-    # driver-unseen — the evidence ledger's minimum possible state.
-    # New r16 registrations first (changed/new code proves earliest):
-    "q_pca_deflate",  # second principal direction via exact-int rank-1 deflation
-    "q_quantile_sketch",  # portable bottom-k quantile sketch + exact rank audit
-    "q_kmv_distinct",  # portable KMV cardinality sketch + tolerance audit
-    # The four below-cut r15 queries (judge-verified MATCH last
-    # session; zero driver rows for the first two):
+    "q_pca_deflate",
+    "q_quantile_sketch",
+    "q_kmv_distinct",
     "q_stream_tws_reservoir",
     "q_pca_project",
     "q_lang_id",
     "q_drift_psi",
-    # Evidence-freshness rotation: the 40 queries whose newest driver
-    # row is r10 (alphabetical):
     "q_agg_pushdown_scan",
     "q_audio_pcm_stats",
     "q_bpe_tokenize",
@@ -165,40 +142,15 @@ _PRIORITY = [
     "q_video_frame_decode",
     "q_xml_extract",
     "q_zorder_pruned_scan",
-    # ...and the oldest r11 rows fill the window (the driver cuts at
-    # 50, so the last name lands just below it and leads r17):
     "q_agg_stats",
     "q_asof_join",
     "q_classify",
     "q_conditional_pack",
-
-    # ---- round-15 window ----
-    # Window arithmetic (r14 verdict items 1-2): the driver cuts at 50
-    # rows. 1 new r15 registration + 1 r15-ADVICE-changed query + the
-    # 3 never-driver-checked r14 wave-2 additions + the 45 queries
-    # whose newest row is r06-r09 (25+10+6+4) = exactly 50. After this
-    # window NO driver row in the registry is older than r10 — the
-    # standing trajectory target, met. The other two r15 ADVICE
-    # touches do NOT take slots: q_drift_psi's change is import-only
-    # (no plan change) and q_lang_id's NULL-text score pin flows
-    # through the SHARED detector/SQL definitions that in-window
-    # q_label_agreement also compiles (functions/text.py detected_col
-    # + _LANG_SQL_SCORES) — both sit immediately below the cut to
-    # lead r16 with the wave-2 streaming addition.
-    # New r15 registration first (changed/new code proves earliest):
-    "q_gram_power_iter",  # top eigenvector of the Gram: in-plan unrolled int matvec
-    # r15-ADVICE-changed after its r14 row (overflow guard moved to the
-    # shared guard_product_int64 — functions/guards.py):
+    "q_gram_power_iter",
     "q_drift_ks",
-    # The three r14 wave-2 registrations the r14 window cut at exactly
-    # 50 (judge-verified at sf0.01 last session, but zero DRIVER rows;
-    # q_label_agreement also re-proves the r15 NULL-text detector pin
-    # and the shared overflow-guard refactor):
     "q_embedding_int8_quant",
     "q_event_paths_topk",
     "q_label_agreement",
-    # Evidence-freshness rotation: the 25 queries whose newest driver
-    # row is r06 (alphabetical):
     "q_ann_lsh_topk",
     "q_attribution_last_touch",
     "q_embedding_neardup_lsh",
@@ -224,7 +176,6 @@ _PRIORITY = [
     "q_top_terms",
     "q_variant_json",
     "q_zorder_layout",
-    # ...the 10 whose newest row is r07:
     "q_ann_recall",
     "q_approx_distinct",
     "q_bm25_topk",
@@ -235,52 +186,24 @@ _PRIORITY = [
     "q_observe_reconcile",
     "q_percentiles",
     "q_stream_sliding",
-    # ...the 6 whose newest row is r08:
     "q_ann_bucket_stats",
     "q_lang_id_udf",
     "q_minhash_signatures",
     "q_multimodal_features",
     "q_png_pixel_stats",
     "q_simhash_fingerprints",
-    # ...the 4 whose newest row is r09 (window rows 47-50):
     "q_pii_redact",
     "q_sample_deterministic",
     "q_shard_assign",
     "q_weighted_sample",
-    # (The four r15 below-cut entries that used to sit here — the
-    # wave-2/3 additions and the two ADVICE touches — moved into the
-    # r16 window above, as planned.)
-    # ---- round-14 window ----
-    # Window arithmetic (r13 verdict items 1-2): the driver cuts at 50
-    # rows. 2 new r14 registrations + the 4 never-driver-checked r13
-    # additions + the 4 queries whose code/oracle changed in r13 after
-    # their last (r12) driver row + the 39 queries whose newest row is
-    # r05 + 1 r06 row (the bench-adjudication target) = exactly 50.
-    # After this window NO driver row in the registry is older than
-    # r06, and the remaining staleness tail is 25 r06 + 10 r07 + 6 r08
-    # + 4 r09 = 45 rows — it fits r15's window with 5 slots spare, so
-    # "none older than r10 after r15" is reachable on schedule.
-    # New r14 registrations (changed queries go FIRST so an early cut
-    # still proves the code that changed this round):
-    "q_kmeans_lloyd",  # driver-coordinated Lloyd k-means, unrolled-CTE oracle
-    # The four r13 registrations the r13 window cut at exactly 50
-    # (judge-verified at sf0.01 last session, but still zero DRIVER
-    # rows); q_drift_ks and q_domain_affinity additionally changed
-    # this round (overflow guard; corpus-aggregate broadcast dropped):
+    "q_kmeans_lloyd",
     "q_url_canonical_dedup",
     "q_chunk_overlap",
     "q_domain_affinity",
-    # The four r12-ADVICE-changed queries whose newest driver row
-    # (r12) predates the r13 change — close that re-prove gap
-    # (q_binary_file_scan also changed THIS round: single-pass
-    # take-guard):
     "q_containment_pairs",
     "q_negative_sampling",
     "q_bootstrap_ci",
     "q_binary_file_scan",
-    # Evidence-freshness rotation: the 39 queries whose newest driver
-    # row is r05 (alphabetical; includes the 2 by-nature rows-only ANN
-    # top-k queries — their rows-only driver check refreshes too):
     "q_ann_ivf_pq_topk",
     "q_ann_ivf_topk",
     "q_bloom_prefilter",
@@ -320,56 +243,34 @@ _PRIORITY = [
     "q_unpivot",
     "q_window_sliding",
     "q_window_tumbling",
-    # Slot 50: the stalest r06 row AND this round's bench-regression
-    # adjudication target — a fresh driver row closes both:
     "q_dedup_incremental",
-    # Positions 51-53: the r14 wave-2 additions, deliberately BELOW
-    # the 50-row cut so they don't displace the rotation above (the
-    # r13 precedent: pytest- and both-scale-sweep-proven this round,
-    # they lead the r15 window — 3 + the 45-row r06-r09 staleness
-    # tail + up to 2 r15 registrations = 50):
-    # ---- round-13 window (all 50 proven r13; the five r13
-    # registrations the cut excluded now lead the r14 window above;
-    # everything else re-enters via registration order) ----
-    # ---- round-12 window ----
-    # New registrations this round:
-    "q_partition_overwrite_dynamic",  # dynamic-mode single-partition reload, spliced oracle
-    "q_stream_observe",  # per-micro-batch observe() metrics == relational ntile recount
-    "q_stream_idempotent_reload",  # foreachBatch + dynamic overwrite, replay-proven idempotence
-    "q_parquet_bloom_scan",  # column bloom filter: point lookup skips hash-scattered row groups
-    "q_file_metadata_lineage",  # _metadata hidden struct: per-file provenance audit, row_index pinned
-    "q_lm_quality",  # corpus-trained bigram LM likelihood, scaled-integer exact model
-    "q_text_normalize",  # NFD+strip+casefold round trip, oracle pins exact restoration
-    "q_embedding_gram",  # exact quantized-int Gram: d^2-key shuffle independent of N
-    "q_url_host_stats",  # parse_url HOST/PATH/QUERY recovery vs arithmetic oracle
-    # (q_binary_file_scan moved to the round-13 window above)
-    "q_k_anonymity",  # QI-class k-anonymity + l-diversity release gate
-    "q_forget_cascade",  # right-to-be-forgotten cascade + orphan reconciliation
-    "q_conversation_assembly",  # ordered per-user sequence, md5-pinned order
-    "q_semdedup",  # cluster-then-prune semantic dedup, fully SQL-replayed
-    "q_mad_outliers",  # exact median/MAD robust outlier census
-    # (q_bootstrap_ci moved to the round-13 window above)
-    "q_referential_audit",  # warehouse-wide FK dangling-key audit
-    "q_blocklist_filter",  # dictionary content gate, shuffle-free token match
-    "q_rank_auc",  # exact tie-aware Mann-Whitney AUC, integer-pinned
-    "q_cohort_retention",  # first-week cohort x offset retention matrix
-    "q_event_transitions",  # first-order Markov matrix of user behavior
-    "q_trimmed_mean",  # rank-trimmed robust mean, pinned integer cutoffs
-    "q_token_cooccurrence",  # within-doc pair mining, deterministic top-k
-    "q_image_ahash_dedup",  # perceptual aHash dedup over decoded BMP pixels
-    "q_audio_envelope_dedup",  # envelope-hash dedup over decoded WAV samples
-    # (q_containment_pairs moved to the round-13 window above)
-    # (q_negative_sampling moved to the round-13 window above)
-    "q_mlm_masking_plan",  # portable-hash MLM mask plan, sequence-fp pinned
-    "q_video_clip_dedup",  # ordered per-frame hash clip fingerprint dedup
-    # Queries whose implementation changed this round (stream-sink
-    # commit now publishes BEFORE cleaning the prior attempt; batch
-    # sink manifest write now atomic tmp+replace) — re-prove:
+    "q_partition_overwrite_dynamic",
+    "q_stream_observe",
+    "q_stream_idempotent_reload",
+    "q_parquet_bloom_scan",
+    "q_file_metadata_lineage",
+    "q_lm_quality",
+    "q_text_normalize",
+    "q_embedding_gram",
+    "q_url_host_stats",
+    "q_k_anonymity",
+    "q_forget_cascade",
+    "q_conversation_assembly",
+    "q_semdedup",
+    "q_mad_outliers",
+    "q_referential_audit",
+    "q_blocklist_filter",
+    "q_rank_auc",
+    "q_cohort_retention",
+    "q_event_transitions",
+    "q_trimmed_mean",
+    "q_token_cooccurrence",
+    "q_image_ahash_dedup",
+    "q_audio_envelope_dedup",
+    "q_mlm_masking_plan",
+    "q_video_clip_dedup",
     "q_python_datasink_stream",
     "q_python_datasink_roundtrip",
-    # Evidence-freshness rotation, final tranche (r11 verdict item 1):
-    # the 12 queries whose driver rows still date to round 2 — after
-    # this window, no row in the registry is older than r11:
     "q_text_quality",
     "q_token_count",
     "q_topk_global",
@@ -382,16 +283,9 @@ _PRIORITY = [
     "q_window_distribution",
     "q_window_gap",
     "q_window_pack",
-    # ---- round-11 window ----
-    # New registrations this round:
-    "q_schema_evolution_read",  # declared-schema read across INT32->INT64 widening + added column
-    # (q_python_datasink_stream moved to the round-12 window above)
-    "q_arrow_token_stats",  # mapInArrow: pyarrow.compute features, no pandas conversion
-    "q_arrow_group_stats",  # applyInArrow: exact per-group median via numpy on zero-copy columns
-    # Queries whose implementation changed this round (shared-session
-    # active-query guard + sink snap-and-drop in the tws family;
-    # _SNAP_SHARDS single-sourcing and the once-per-application reshard
-    # continuation in state_reader) — re-prove through the driver:
+    "q_schema_evolution_read",
+    "q_arrow_token_stats",
+    "q_arrow_group_stats",
     "q_state_reshard",
     "q_state_snapshot_shard",
     "q_state_list_read",
@@ -402,12 +296,6 @@ _PRIORITY = [
     "q_stream_tws_initial_state",
     "q_stream_tws_map_spill",
     "q_stream_tws_event_timers",
-    # Evidence-freshness rotation (r10 verdict item 4): every query is
-    # driver-proven and locally re-proven at sf0.1 each round, but 48
-    # queries' DRIVER rows date to round 2 — re-prove the 36 stalest
-    # (alphabetical; the remaining 12, q_text_quality/q_token_count/
-    # q_topk_global onward, rotate through in round 12 — the four
-    # extra r11 registrations took their slots):
     "q_cube",
     "q_date_pack",
     "q_dedup_exact_digest",
@@ -439,67 +327,7 @@ _PRIORITY = [
     "q_stats_moments",
     "q_string_pack",
     "q_text_fallback",
-    # ---- round-10 window ----
-    # New registrations this round:
-    # (q_state_reshard moved to the round-11 window above)
-    # (q_state_snapshot_shard moved to the round-11 window above)
-    # (q_state_list_read moved to the round-11 window above)
-    # (q_state_timers_read moved to the round-11 window above)
-    # Queries whose implementation changed this round (shared tws
-    # scoped session + trackTotalNumberOfRows=false) — re-prove:
-    # (q_stream_transform_with_state moved to the round-11 window above)
-    # (q_stream_tws_list_ttl moved to the round-11 window above)
-    # (q_stream_tws_timers moved to the round-11 window above)
-    # (q_stream_tws_initial_state moved to the round-11 window above)
-    # (q_stream_tws_map_spill moved to the round-11 window above)
-    # (q_stream_tws_event_timers moved to the round-11 window above)
-    # ---- round-9 window ----
-    # New registrations this round:
-    # (q_stream_tws_event_timers moved to the round-10 window above)
-    # Queries whose implementation or oracle changed this round (the
-    # r08-advice fixes) — re-prove through the driver:
-    # (q_stream_tws_map_spill moved to the round-10 window above)
-    # ---- round-8 window ----
-    # New registrations this round:
-    # (q_stream_transform_with_state moved to the round-10 window above)
-    # (q_stream_tws_list_ttl moved to the round-10 window above)
-    # (q_stream_tws_timers moved to the round-10 window above)
-    # (q_stream_tws_map_spill moved to the round-9 window above)
-    # (q_stream_tws_initial_state moved to the round-10 window above)
-    # Queries whose implementation or oracle changed this round (the
-    # r07-advice fixes) — re-prove through the driver:
-    # ---- round-7 window ----
-    # The 7 queries with zero driver rows after six rounds (VERDICT r06
-    # item 1) — the final rotation: with these, all registered queries
-    # have driver evidence:
-    # New round-7 operators:
-    # rows-only -> pinned-invariant oracle upgrades (r07):
-    # Queries whose implementation or oracle changed this round (the
-    # r06-advice mod-2^31 oracle alignment + side-effect-free bucket
-    # lookup + atomic tier-dim write) — re-prove through the driver:
-    # ---- round-6 window (proven r06; follows for re-proof in leftover
-    # slots) ----
-    # The 7 queries with zero driver rows after five rounds (VERDICT r05
-    # item 2) — three of them upgraded this round from rows-only to
-    # oracle-backed (portable md5 hash family; SQL-replayed LCG planes):
-    # r05's one red row, fixed (hist array -> 16 scalar columns) and
-    # since upgraded to a full oracle (exact-integer-moment features):
-    # new round-6 queries:
-    # new round-6 operators (second batch):
-    # approx family upgraded rows-only -> tolerance-flag oracles (r06):
-    # real-stream twins completing the streaming window matrix (r06):
-    # (q_python_datasink_roundtrip moved to the round-12 window above)
-    # new round-6 operators (third batch):
-    # (q_dedup_incremental moved to the round-14 window above)
-    # round-6 streaming outer-join matrix + bounded-state dedup:
-    # re-prove queries whose implementation changed this round (the
-    # last three also newly oracle-backed):
-    # ---- remaining slots: registration order follows, which
-    # front-loads the r01/r02-vintage parity operators (flagship,
-    # transform, quality, dedup, report, joins ...) — re-proving the
-    # oldest evidence against this round's regenerated testdata. ----
 ]
-
 
 
 @dataclass
@@ -539,8 +367,8 @@ def load_all() -> dict[str, Query]:
             if e.name != mod:
                 raise
     # A typo'd _PRIORITY entry would silently drop that query from the
-    # driver's re-prove window (it just wouldn't match REGISTRY), which
-    # defeats the evidence rotation — fail loudly instead.
+    # driver's window (it just wouldn't match REGISTRY) — fail loudly
+    # instead.
     unknown = [n for n in _PRIORITY if n not in REGISTRY]
     if unknown:
         raise ValueError(

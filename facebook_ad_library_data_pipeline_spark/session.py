@@ -179,8 +179,8 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
         )
-        # UI off for bench/test hygiene; scripts/scale_evidence.py flips
-        # it on to read measured shuffle metrics from the REST API
+        # UI off for bench/test hygiene; perfbench --trace 1 flips it
+        # on to read per-stage metrics from the REST API
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Bucketed scans stay bucket-aware even for plain lookups (the

@@ -215,12 +215,6 @@ def run_stream_to_memory(
     override); on a real cluster partitions scale with executors and
     state size, not this default."""
     spark = stream_df.sparkSession
-    # Stateful streaming is the op most sensitive to stale broadcast/
-    # shuffle state: ContextCleaner only purges on GC, and after a long
-    # batch session GC may not have run (measured: 9.1s -> 3.0s for the
-    # stateful query after 70 batch queries). One explicit GC before
-    # stream start is ~100ms on a 16g heap.
-    spark.sparkContext._jvm.System.gc()
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint_location is not None:
         # callers that re-open the checkpoint afterwards (the

@@ -1042,7 +1042,7 @@ class WindowCloseProcessor(StatefulProcessor):
             # keeping an empty-arrays tombstone — live state stays
             # ∝ open windows, not ∝ every key ever seen (measured:
             # final state 1 row vs 1500 without this, see
-            # scripts/event_timer_state_evidence.py)
+            # SCALE_EVIDENCE.md "Watermark finalization shrinks state")
             self._wins.clear()
         if closed:
             yield pd.DataFrame(

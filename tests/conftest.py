@@ -65,3 +65,20 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def oracle_checks(spark, sf_dir, duck):
+    """``oracle_checks(name)``: the outcome of ``oracle_sweep.check_query``
+    for ``name``, computed the first time a test asks for it and shared
+    by ``test_oracle_match`` and ``test_oracle_pandas_dtypes_compatible``."""
+    from .oracle_sweep import check_query
+
+    checked: dict[str, dict] = {}
+
+    def get(name: str) -> dict:
+        if name not in checked:
+            checked[name] = check_query(name, spark, sf_dir, duck)
+        return checked[name]
+
+    return get

@@ -2,7 +2,7 @@
 at 100 TB (filters pushed to the scan, dims broadcast, top-k via
 TakeOrderedAndProject, scans pruned to the referenced columns).
 
-Used by tests/test_plans.py so a regression that silently drops a
+Used by test_plans.py so a regression that silently drops a
 pushdown or flips a broadcast join to SMJ fails CI, not the cluster.
 """
 

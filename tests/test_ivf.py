@@ -1,13 +1,9 @@
 """IVF ANN semantics: probe subset really is a subset, recall against
-brute force is reasonable for the probed fraction, corrupt-JSON reader
-splits clean/corrupt."""
+brute force is reasonable for the probed fraction."""
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
 from facebook_ad_library_data_pipeline_spark.registry import load_all
-from facebook_ad_library_data_pipeline_spark.sources.readers import read_json_with_quarantine
 
 REGISTRY = load_all()
 
@@ -36,21 +32,3 @@ def test_ivf_cells_partition_corpus(spark, sf_dir):
     stats = ivf_cell_detail(spark, sf_dir).collect()
     assert sum(r.n_vectors for r in stats) == load_table(spark, sf_dir, "embeddings").count()
     assert 1 < len(stats) <= 16
-
-
-def test_corrupt_json_quarantine(spark, tmp_path):
-    p = tmp_path / "mixed.json"
-    p.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "{this is not json}\n"
-        '{"id": 2, "name": "fine"}\n'
-        '{"id": "not-a-number", "name": 3}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    clean, corrupt = read_json_with_quarantine(spark, str(p), schema)
-    assert sorted(r.id for r in clean.collect()) == [1, 2]
-    bad = [r._corrupt_record for r in corrupt.collect()]
-    assert len(bad) == 2
-    assert any("not json" in b for b in bad)

@@ -10,71 +10,22 @@ q_tpch_q12 failure in CORRECTNESS_r03. The local harness compares via
 
 This lint runs every registered oracle through ``rel.df()`` (the
 pandas path) and asserts dtype-kind compatibility against the Spark
-query's *lazy* schema (no Spark execution needed — building the plan
-is enough to know the result types).
+query's result schema. The query runs once per session for this lint
+and ``test_oracle_match`` together (the ``oracle_checks`` fixture).
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import types as T
 
-from facebook_ad_library_data_pipeline_spark.registry import load_all
-
-REGISTRY = load_all()
-WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle)
-
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FRACTIONAL = (T.FloatType, T.DoubleType)
+from .oracle_sweep import WITH_ORACLE
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_oracle_pandas_dtypes_compatible(name, spark, sf_dir, duck):
-    q = REGISTRY[name]
-    # Building the plan is enough to read the result schema for most
-    # queries. The streaming/sink/layout queries execute work inside
-    # fn() itself (they materialize through side effects by design) —
-    # at sf0.001 that costs seconds and is accepted for lint coverage.
-    sdf = q.fn(spark, sf_dir)
-    spark_types = {f.name.lower(): f.dataType for f in sdf.schema.fields}
-
-    odf = duck.sql(q.oracle).df()
-    for col in odf.columns:
-        st = spark_types.get(col.lower())
-        assert st is not None, f"{name}: oracle column {col!r} absent from Spark result"
-        kind = odf[col].dtype.kind  # i/u int, f float, O object, M datetime, b bool
-        has_nulls = bool(odf[col].isna().any())
-        if isinstance(st, _INTEGRAL):
-            # pandas legitimately promotes nullable ints to float64 —
-            # the driver sees the same promotion on the Spark side, so
-            # only a null-free float/object oracle column is a real
-            # representation bug (the HUGEINT class).
-            if not has_nulls:
-                assert kind in ("i", "u"), (
-                    f"{name}.{col}: Spark {st.simpleString()} vs oracle pandas "
-                    f"dtype kind {kind!r} with no nulls — cast the oracle "
-                    f"expression (DuckDB HUGEINT/DOUBLE renders differently)"
-                )
-        elif isinstance(st, _FRACTIONAL):
-            assert kind == "f", (
-                f"{name}.{col}: Spark {st.simpleString()} vs oracle pandas "
-                f"dtype kind {kind!r} — cast the oracle to DOUBLE"
-            )
-        elif isinstance(st, T.TimestampType):
-            assert kind == "M" or odf[col].dtype == object, (
-                f"{name}.{col}: Spark timestamp vs oracle dtype {odf[col].dtype}"
-            )
-        elif isinstance(st, T.BooleanType):
-            assert kind == "b" or (has_nulls and kind == "O"), (
-                f"{name}.{col}: Spark boolean vs oracle dtype kind {kind!r}"
-            )
-        elif isinstance(st, T.StringType):
-            assert kind == "O" or odf[col].dtype == "string", (
-                f"{name}.{col}: Spark string vs oracle dtype kind {kind!r}"
-            )
-        # Decimal / array / struct Spark types: representation is
-        # engine-specific on both sides; the value compare (oracle
-        # harness + driver hash) remains the authority there.
+def test_oracle_pandas_dtypes_compatible(name, oracle_checks):
+    failed = oracle_checks(name)["lint"]
+    if failed is not None:
+        raise failed
 
 
 def test_all_oracles_linted():

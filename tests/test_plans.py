@@ -3,12 +3,13 @@ pruning, broadcast, top-k heap) must hold, not just the row values."""
 
 from __future__ import annotations
 
-from facebook_ad_library_data_pipeline_spark.plans.explain import (
+from facebook_ad_library_data_pipeline_spark.registry import load_all
+
+from .plan_helpers import (
     has_node,
     pushed_filters,
     scan_column_counts,
 )
-from facebook_ad_library_data_pipeline_spark.registry import load_all
 
 REGISTRY = load_all()
 
@@ -64,7 +65,7 @@ def test_ads_stage_counts_ride_the_curated_plan(spark, tmp_path):
     import re
 
     from facebook_ad_library_data_pipeline_spark.adslib.transform import transform_raw_ads
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     ad = {"ad_archive_id": "A1", "is_active": True, "start_date": 1700000000,
           "snapshot": {"display_format": "VIDEO", "body": {"text": "the ad"}}}
@@ -177,7 +178,7 @@ def test_dup_span_df_is_windowed_single_exchange(spark, sf_dir):
     # document frequency comes from a whole-partition window over the
     # span hash (one exchange), NOT a groupBy + join-back of the
     # exploded inverted index — and nothing exploded is ever broadcast.
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_dup_span_docs"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -211,7 +212,7 @@ def test_funnel_single_key_partitioning(spark, sf_dir):
     # under the 64 MB threshold — that's size-based and flips to
     # shuffle-on-user_id at real scale; the invariants asserted here
     # are the scale-independent ones.)
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_funnel_steps"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -226,7 +227,7 @@ def test_pixel_stats_is_pure_map(spark, sf_dir):
     # allowed exchange is fan_out's ROUND-ROBIN rebalance of the
     # narrow single-split local scan (a no-op at real scale) — never a
     # keyed shuffle, which would mean the decode stopped being a map.
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     for name in ("q_multimodal_pixel_stats", "q_png_pixel_stats", "q_jpeg_pixel_stats"):
         plan = formatted_plan(REGISTRY[name].fn(spark, sf_dir))
@@ -237,7 +238,7 @@ def test_pixel_stats_is_pure_map(spark, sf_dir):
 def test_bucketed_join_no_exchange_on_key(spark, sf_dir):
     # co-bucketed tables: the SMJ must consume the bucketed scan output
     # directly — no hashpartitioning exchange on either join key.
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_bucketed_join"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -247,7 +248,7 @@ def test_bucketed_join_no_exchange_on_key(spark, sf_dir):
 
 
 def test_partition_pruned_scan_skips_directories(spark, sf_dir):
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_partition_pruned_scan"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -299,7 +300,7 @@ def test_pii_redact_stays_jvm_side(spark, sf_dir):
 def test_kfold_assign_no_pre_agg_shuffle(spark, sf_dir):
     # fold is a scan-side projection: exactly ONE exchange (the rollup
     # itself), never a repartition before it.
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     import re
 
@@ -313,7 +314,7 @@ def test_kfold_assign_no_pre_agg_shuffle(spark, sf_dir):
 def test_dynamic_partition_pruning_fires(spark, sf_dir):
     # the dim's tier filter must inject a runtime partition filter on
     # the fact scan — the 2-of-10,000-partitions star-join mechanism.
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_dynamic_partition_pruning"].fn(spark, sf_dir)
     assert "dynamicpruning" in formatted_plan(df).lower()
@@ -321,7 +322,7 @@ def test_dynamic_partition_pruning_fires(spark, sf_dir):
 
 def test_bucket_pruning_selects_one_bucket(spark, sf_dir):
     from facebook_ad_library_data_pipeline_spark.operators.storage import N_BUCKETS
-    from facebook_ad_library_data_pipeline_spark.plans.explain import simple_plan
+    from .plan_helpers import simple_plan
 
     df = REGISTRY["q_bucket_pruned_lookup"].fn(spark, sf_dir)
     assert f"SelectedBucketsCount: 1 out of {N_BUCKETS}" in simple_plan(df)
@@ -341,7 +342,7 @@ def test_zorder_layout_prunes_nonleading_dim(spark, sf_dir):
         ZPRUNE_Y_LO,
         zorder_benefit_dirs,
     )
-    from facebook_ad_library_data_pipeline_spark.plans.explain import scan_metrics
+    from .plan_helpers import scan_metrics
 
     lin_dir, z_dir = zorder_benefit_dirs(spark, sf_dir)
 
@@ -387,7 +388,7 @@ def test_zorder_compaction_keeps_pruning_roundrobin_loses_it(spark, sf_dir):
         ZPRUNE_Y_LO,
         zcompaction_dirs,
     )
-    from facebook_ad_library_data_pipeline_spark.plans.explain import scan_metrics
+    from .plan_helpers import scan_metrics
 
     frag_dir, z_dir, rr_dir = zcompaction_dirs(spark, sf_dir)
 
@@ -441,7 +442,7 @@ def test_recursive_cte_uses_engine_recursion(spark, sf_dir):
         q_sql_recursive_cte,
     )
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import simple_plan
+    from .plan_helpers import simple_plan
 
     df = q_sql_recursive_cte(spark, sf_dir)
     assert "unionloop" in simple_plan(df).lower()
@@ -454,7 +455,7 @@ def test_agg_pushdown_reaches_parquet_footer(spark, sf_dir):
     holding at plan time this reverts silently to a full scan, which
     is exactly the regression to catch."""
     from facebook_ad_library_data_pipeline_spark.operators.storage import q_agg_pushdown_scan
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = q_agg_pushdown_scan(spark, sf_dir)
     plan = formatted_plan(df)
@@ -559,7 +560,7 @@ def test_parquet_bloom_filter_skips_scattered_row_groups(spark, sf_dir):
         BLOOM_LOOKUP_KEYS,
         bloom_benefit_dirs,
     )
-    from facebook_ad_library_data_pipeline_spark.plans.explain import scan_metrics
+    from .plan_helpers import scan_metrics
 
     plain_dir, bloom_dir = bloom_benefit_dirs(spark, sf_dir)
 
@@ -618,7 +619,7 @@ def test_file_metadata_matches_filesystem(spark, sf_dir):
 def test_blocklist_filter_shuffle_free(spark, sf_dir):
     # the dictionary rides as a literal array into one projection —
     # any exchange means the filter degraded to an explode+join
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     plan = formatted_plan(REGISTRY["q_blocklist_filter"].fn(spark, sf_dir))
     assert "hashpartitioning" not in plan.lower()
@@ -629,7 +630,7 @@ def test_semdedup_pair_stage_single_cluster_shuffle(spark, sf_dir):
     # cluster assignment is a map (broadcast seed matmul); the only
     # keyed exchanges allowed are on cluster_id (the pair stage) and
     # the final verdict join key — never an all-pairs cartesian
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     plan = formatted_plan(REGISTRY["q_semdedup"].fn(spark, sf_dir))
     assert "cartesianproduct" not in plan.lower()
@@ -677,7 +678,7 @@ def test_rank_fusion_retrievers_end_in_topk(spark, sf_dir):
     # both retrieval arms cut to depth-20 via TakeOrderedAndProject
     # BEFORE any window/join; the fused windows run over constant-size
     # lists, so no rangepartitioning (global sort) may appear
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_rank_fusion"].fn(spark, sf_dir)
     assert has_node(df, "TakeOrderedAndProject")
@@ -688,7 +689,7 @@ def test_rank_fusion_retrievers_end_in_topk(spark, sf_dir):
 def test_html_extract_shuffle_free(spark, sf_dir):
     # synth + cascade is one codegen'd projection over the scan — any
     # exchange means a regex step degraded to a shuffle-bearing shape
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     plan = formatted_plan(REGISTRY["q_html_extract"].fn(spark, sf_dir))
     assert "hashpartitioning" not in plan.lower()
@@ -700,7 +701,7 @@ def test_phrase_search_filters_before_exchange(spark, sf_dir):
     # (shuffle volume = matching postings, not the corpus token count),
     # and the posting-list intersection must never broadcast or go
     # cartesian (an exploded index never fits the broadcast budget)
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     plan = formatted_plan(REGISTRY["q_phrase_search"].fn(spark, sf_dir))
     assert "cartesianproduct" not in plan.lower()
@@ -717,7 +718,7 @@ def test_phrase_search_filters_before_exchange(spark, sf_dir):
 def test_url_canonical_dedup_single_exchange(spark, sf_dir):
     # parse/normalize is one codegen'd projection; the ONLY exchange
     # is the groupBy on the canonical key
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     plan = formatted_plan(REGISTRY["q_url_canonical_dedup"].fn(spark, sf_dir))
     assert plan.lower().count("hashpartitioning(") == 1
@@ -750,7 +751,7 @@ def test_drift_psi_single_band_exchange_one_scan(spark, sf_dir):
     # same rows, not a re-derived 1-row aggregate); the whole 20-step
     # integer-log pipeline is projections over that constant-size
     # grid — no joins at all, no range partitioning
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     import re
 
@@ -767,7 +768,7 @@ def test_drift_psi_single_band_exchange_one_scan(spark, sf_dir):
 def test_drift_ks_single_cents_exchange_one_scan(spark, sf_dir):
     # same shape as PSI: one distinct-cents exchange, one fact scan
     # (running sums and totals share the single-partition window pass)
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     import re
 
@@ -783,7 +784,7 @@ def test_kmeans_assignment_is_joinless(spark, sf_dir):
     # stage has no join operator of any kind; the only exchanges are
     # the K-row update aggregates (map-side combined) — never a
     # posexplode shuffle of the corpus
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_kmeans_lloyd"].fn(spark, sf_dir)
     plan = formatted_plan(df).lower()
@@ -797,7 +798,7 @@ def test_int8_quant_single_dim_exchange_one_scan(spark, sf_dir):
     # window's partitioning); one fact scan, no joins
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_embedding_int8_quant"].fn(spark, sf_dir)
     plan = formatted_plan(df).lower()
@@ -810,7 +811,7 @@ def test_event_paths_bounded_agg_and_topk_heap(spark, sf_dir):
     # one user_id exchange for the lead() window, one exchange on the
     # |event_types|^3-bounded path key, and a TakeOrderedAndProject
     # heap — never a global sort
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_event_paths_topk"].fn(spark, sf_dir)
     plan = formatted_plan(df).lower()
@@ -831,7 +832,7 @@ def test_power_iter_returned_plan_is_corpus_free(spark, sf_dir):
     # plan creeping back.)
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_gram_power_iter"].fn(spark, sf_dir)
     plan = formatted_plan(df).lower()
@@ -853,7 +854,7 @@ def test_pca_project_single_map_pass_no_exchange(spark, sf_dir):
     # fails here, not at the bench.
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import (
+    from .plan_helpers import (
         formatted_plan,
     )
 
@@ -927,7 +928,7 @@ def test_pca_deflate_returned_plan_is_corpus_free(spark, sf_dir):
     # ever re-scan the corpus, at any scale
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_pca_deflate"].fn(spark, sf_dir)
     plan = formatted_plan(df).lower()
@@ -947,7 +948,7 @@ def test_quantile_sketch_two_scans_window_group_limit(spark, sf_dir):
     # keyed exchanges are the two event_type hash partitionings.
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_quantile_sketch"].fn(spark, sf_dir)
     plan = formatted_plan(df)
@@ -964,7 +965,7 @@ def test_kmv_distinct_one_scan_shared_partitioning(spark, sf_dir):
     # |event_types|-row orderBy.
     import re
 
-    from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+    from .plan_helpers import formatted_plan
 
     df = REGISTRY["q_kmv_distinct"].fn(spark, sf_dir)
     plan = formatted_plan(df)

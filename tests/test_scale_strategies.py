@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from facebook_ad_library_data_pipeline_spark.catalog import load_table
 from facebook_ad_library_data_pipeline_spark.operators.skew import salted_join
-from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
+
+from .plan_helpers import formatted_plan
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -74,7 +75,8 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     the `skew=true` marker on the sort-merge join after the hot
     partition is split into advisory-sized chunks.
 
-    When to prefer which (measured here + scripts/skew_evidence.py):
+    When to prefer which (measured here + SCALE_EVIDENCE.md "Skew
+    mitigation"):
 
     * AQE skew-join handles the straggler WITHOUT touching the query —
       but only when the join's output feeds no keyed re-shuffle: if a
@@ -90,7 +92,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     90% of fact rows on one key; thresholds lowered so the few-MB hot
     partition qualifies locally (at 100 TB the defaults - 256 MB
     threshold, 5x factor - qualify on their own)."""
-    from facebook_ad_library_data_pipeline_spark.plans.explain import executed_plan
+    from .plan_helpers import executed_plan
 
     def run(agg_keyed: bool) -> bool:
         scoped = spark.newSession()

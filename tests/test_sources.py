@@ -8,20 +8,14 @@ import json
 
 from pyspark.sql import functions as F
 
-from facebook_ad_library_data_pipeline_spark.catalog import SCHEMAS, load_table
-from facebook_ad_library_data_pipeline_spark.plans.explain import formatted_plan
-from facebook_ad_library_data_pipeline_spark.sources.readers import (
-    infer_schema_sidecar,
-    read_csv,
-    read_json,
-    read_parquet,
-    schema_drift,
-)
+from facebook_ad_library_data_pipeline_spark.catalog import load_table
 from facebook_ad_library_data_pipeline_spark.sources.writers import (
     write_parquet,
     write_quarantine_json,
     write_report_csv,
 )
+
+from .plan_helpers import formatted_plan
 
 
 def test_parquet_roundtrip_partitioned_with_pruning(spark, sf_dir, tmp_path):
@@ -29,7 +23,7 @@ def test_parquet_roundtrip_partitioned_with_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "orders_part")
     write_parquet(orders, out, partition_by=["o_orderstatus"])
 
-    back = read_parquet(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == orders.count()
 
     pruned = back.filter(F.col("o_orderstatus") == "O")
@@ -45,7 +39,7 @@ def test_json_roundtrip_with_declared_schema(spark, sf_dir, tmp_path):
     schema = "event_id long, event_type string, value double"
     from pyspark.sql.types import _parse_datatype_string
 
-    back = read_json(spark, out, _parse_datatype_string(schema))
+    back = spark.read.schema(_parse_datatype_string(schema)).json(out)
     assert back.count() == 50
     assert set(back.columns) == {"event_id", "event_type", "value"}
 
@@ -81,28 +75,15 @@ def test_quarantine_json_carries_error(spark, tmp_path):
     assert rows == [{"ad_pos": 1, "validation_error": "end_date_ts must be >= start_date_ts"}]
 
 
-def test_schema_drift_sidecar(spark, tmp_path):
-    out = str(tmp_path / "drift")
-    spark.createDataFrame(
-        [(1, "a", 2.0)], "id long, name string, extra double"
-    ).write.json(out)
-    observed = infer_schema_sidecar(spark, out, "json")
-    declared = SCHEMAS["documents"]
-    drift = schema_drift(declared, observed)
-    assert "extra" in drift["added"]
-    assert "text" in drift["removed"]
-
-
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from facebook_ad_library_data_pipeline_spark.sources.readers import read_orc
     from facebook_ad_library_data_pipeline_spark.sources.writers import write_orc
     from facebook_ad_library_data_pipeline_spark.catalog import load_table
-    from facebook_ad_library_data_pipeline_spark.plans.explain import pushed_filters
+    from .plan_helpers import pushed_filters
 
     orders = load_table(spark, sf_dir, "orders")
     out = str(tmp_path / "orders_orc")
     write_orc(orders, out, partition_by=["o_orderstatus"])
-    back = read_orc(spark, out)
+    back = spark.read.orc(out)
     assert back.count() == orders.count()
     f = back.filter(F.col("o_totalprice") > 1000).filter(F.col("o_orderstatus") == "O")
     # value predicate pushed to the ORC scan; partition column pruned
