@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.dedup import dedup_keep_first
-from ..operators.dedup_near import JACCARD_THRESHOLD, SHINGLE_DF_CAP, shared_jaccard_pairs
+from ..operators.dedup_near import (
+    CAPPED_PAIRS_CTE_SQL,
+    JACCARD_THRESHOLD,
+    REACH_CTE_SQL,
+    shared_jaccard_pairs,
+)
 from ..registry import query
 
 MIN_TOKENS = 20
@@ -34,23 +39,7 @@ WITH scored AS (
         SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         FROM scored
     ) WHERE rn = 1
-), toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (SELECT doc_id,
-              CASE WHEN len(t) >= 3
-                   THEN list_distinct(list_transform(generate_series(1, len(t) - 2),
-                                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE [] END AS shingles
-       FROM toks),
-ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh),
--- exk replays candidate_pairs' SHINGLE_DF_CAP hot-shingle exclusion
--- (same as dedup_near's shared CTE): inter is capped on BOTH sides,
--- n stays UNcapped -- matching the Spark pipeline exactly.
-exk AS (SELECT doc_id, n, s FROM ex
-        QUALIFY count(*) OVER (PARTITION BY s) <= {SHINGLE_DF_CAP}),
-pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter,
-                 any_value(a.n) AS n1, any_value(b.n) AS n2
-          FROM exk a JOIN exk b ON a.s = b.s AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
+), {CAPPED_PAIRS_CTE_SQL},
 losers AS (SELECT DISTINCT d2 FROM pairs
            WHERE inter * 1.0 / (n1 + n2 - inter) >= {JACCARD_THRESHOLD}),
 kept AS (
@@ -217,32 +206,7 @@ def q_quality_top_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- canonical doc per near-dup cluster
 
 _CANONICAL_ORACLE = f"""
-WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (SELECT doc_id,
-              CASE WHEN len(t) >= 3
-                   THEN list_distinct(list_transform(generate_series(1, len(t) - 2),
-                                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE [] END AS shingles
-       FROM toks),
-ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh),
--- exk replays candidate_pairs' SHINGLE_DF_CAP hot-shingle exclusion
--- (same as dedup_near's shared CTE): inter is capped on BOTH sides,
--- n stays UNcapped -- matching the Spark pipeline exactly.
-exk AS (SELECT doc_id, n, s FROM ex
-        QUALIFY count(*) OVER (PARTITION BY s) <= {SHINGLE_DF_CAP}),
-pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter,
-                 any_value(a.n) AS n1, any_value(b.n) AS n2
-          FROM exk a JOIN exk b ON a.s = b.s AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
-          WHERE inter * 1.0 / (n1 + n2 - inter) >= {JACCARD_THRESHOLD}),
-sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-reach AS (
-    SELECT doc_id AS node, doc_id AS r FROM documents
-    UNION
-    SELECT s.dst AS node, reach.r
-    FROM reach JOIN sym s ON reach.node = s.src
-),
+{REACH_CTE_SQL},
 labels AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node),
 members AS (
     SELECT l.component, d.doc_id, d.source, d.n_chars,

@@ -79,6 +79,42 @@ JOIN sizes sb ON d2 = sb.doc_id
 WHERE inter * 1.0 / (sa.n + sb.n - inter) >= {JACCARD_THRESHOLD}
 """
 
+# The capped-shingle candidate pairs with both distinct-shingle counts
+# (pairs: d1, d2, inter, n1, n2) that the curation and component
+# oracles build on.
+CAPPED_PAIRS_CTE_SQL = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+sh AS (SELECT doc_id,
+              CASE WHEN len(t) >= 3
+                   THEN list_distinct(list_transform(generate_series(1, len(t) - 2),
+                                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+                   ELSE [] END AS shingles
+       FROM toks),
+ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh),
+-- exk replays candidate_pairs' SHINGLE_DF_CAP hot-shingle exclusion
+-- (same as dedup_near's shared CTE): inter is capped on BOTH sides,
+-- n stays UNcapped -- matching the Spark pipeline exactly.
+exk AS (SELECT doc_id, n, s FROM ex
+        QUALIFY count(*) OVER (PARTITION BY s) <= {SHINGLE_DF_CAP}),
+pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter,
+                 any_value(a.n) AS n1, any_value(b.n) AS n2
+          FROM exk a JOIN exk b ON a.s = b.s AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id)"""
+
+# The near-dup reach fixpoint that components' two oracles and
+# curation's canonical-doc oracle build on: Jaccard edges over capped
+# shingles, made symmetric, then (node, r) for every r that reaches
+# node (component = min r).
+REACH_CTE_SQL = f"""WITH RECURSIVE {CAPPED_PAIRS_CTE_SQL},
+edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
+          WHERE inter * 1.0 / (n1 + n2 - inter) >= {JACCARD_THRESHOLD}),
+sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
+reach AS (
+    SELECT doc_id AS node, doc_id AS r FROM documents
+    UNION
+    SELECT s.dst AS node, reach.r
+    FROM reach JOIN sym s ON reach.node = s.src
+)"""
+
 
 def exploded_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, n, s): one row per DISTINCT shingle per doc, with the

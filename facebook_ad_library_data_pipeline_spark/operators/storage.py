@@ -92,14 +92,24 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events re-laid-out as parquet partitioned by event_type, once
-    per (application, sf_dir)."""
+def lineage_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Events partitioned by event_type, one file per partition, rows
+    sorted by ts WITHIN each file (repartition("event_type") puts each
+    type in exactly one task, so each partition directory gets exactly
+    one file — pinned by q_file_metadata_lineage's n_files column).
+    The pruned scan and dynamic partition pruning skip its directories.
+    Built once per (application, sf_dir)."""
 
     def build(out: Path) -> None:
-        load_table(spark, sf_dir, "events").write.partitionBy("event_type").parquet(str(out))
+        (
+            load_table(spark, sf_dir, "events")
+            .repartition("event_type")
+            .sortWithinPartitions("ts")
+            .write.partitionBy("event_type")
+            .parquet(str(out))
+        )
 
-    return build_once(spark, f"part_events_{sf_tag(sf_dir)}", build)
+    return build_once(spark, f"metalineage_{sf_tag(sf_dir)}", build)
 
 
 _PRUNED_ORACLE = """
@@ -119,7 +129,7 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     row filtering — plan-asserted), so the scan reads 1 of 5
     partitions. This is the layout every append-only event table
     should have at 100 TB (usually date + one coarse dimension)."""
-    events = spark.read.parquet(partitioned_events_dir(spark, sf_dir))
+    events = spark.read.parquet(lineage_events_dir(spark, sf_dir))
     return (
         events.filter(F.col("event_type") == "purchase")
         .groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -245,7 +255,7 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, asserted in tests/test_plans.py), so the fact scan reads only
     the gold partitions' directories. THE mechanism that makes
     fact-to-dim star joins read 2 of 10,000 date partitions at 100 TB."""
-    events = spark.read.parquet(partitioned_events_dir(spark, sf_dir))
+    events = spark.read.parquet(lineage_events_dir(spark, sf_dir))
     dim = spark.read.parquet(tier_dim_dir(spark, sf_dir))
     return (
         events.join(F.broadcast(dim.filter(F.col("tier") == "gold")), "event_type")
@@ -903,25 +913,6 @@ def q_parquet_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------ file-metadata lineage
-
-def lineage_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Events re-written one file per event_type partition, rows
-    sorted by ts WITHIN each file (repartition("event_type") puts each
-    type in exactly one task, so each partition directory gets exactly
-    one file — pinned by the query's n_files column). Built once per
-    (application, sf_dir)."""
-
-    def build(out: Path) -> None:
-        (
-            load_table(spark, sf_dir, "events")
-            .repartition("event_type")
-            .sortWithinPartitions("ts")
-            .write.partitionBy("event_type")
-            .parquet(str(out))
-        )
-
-    return build_once(spark, f"metalineage_{sf_tag(sf_dir)}", build)
-
 
 _LINEAGE_ORACLE = f"""
 SELECT event_type AS lineage_partition,

@@ -689,7 +689,7 @@ def q_python_datasink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_id set), every batch's file set is complete and exclusive (a row
     written by an uncommitted attempt or dropped by abort() moves
     n_rows/sum_cents), and batch membership equals the source's
-    admission order (mtime-ordered slices under maxFilesPerTrigger=1).
+    admission order (mtime-ordered slices, one per micro-batch).
     Trigger.AvailableNow drains the bounded source and respects the
     per-trigger file cap, so the run is self-terminating with exactly
     4 batches."""
@@ -708,19 +708,15 @@ def _stream_sink_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructT
     import tempfile
     from pathlib import Path
 
-    from ..streaming.incremental import split_events_dir_ntile
+    from ..streaming.incremental import split_events_dir_ntile, split_stream
 
     register_synth_stream_sink(spark)
-    src = split_events_dir_ntile(spark, sf_dir)
     run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     try:
         out = run_dir / "rows"
         out.mkdir()
-        schema = spark.read.parquet(src).schema
         ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            split_stream(spark, split_events_dir_ntile(spark, sf_dir))
             .selectExpr(
                 "user_id",
                 "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents",

@@ -1,16 +1,21 @@
-"""Incremental materialized-view maintenance: a streaming foreachBatch
-sink that appends PER-BATCH PARTIAL aggregates, with the final view
-reconstructed by merging partials — the two-level partial→merge pattern
-that lets a 100 TB daily rollup absorb new data without rescanning
-history (same algebra as the HLL/CMS partial-merge sketches, applied to
-a materialized table).
+"""The streaming family's split sources and their one reader, plus
+incremental materialized-view maintenance over them.
 
-Unlike the other streams (single micro-batch on the bounded source),
-this one FORCES multiple micro-batches (`maxFilesPerTrigger=1` over a
-4-file copy of events), so the merge path is genuinely exercised: four
-partial files land, and the merged view must equal the batch rollup —
-which is exactly what the DuckDB oracle checks. All money flows as
-integer cents, so partial merging is order-independent.
+`split_events_dir_ntile` and `split_events_dir_ts_ordered` rewrite
+`events` as four files once per application (the ts-ordered one adds a
+sentinel file); `split_stream` streams either one file per micro-batch,
+so every consumer sees real micro-batches in a known order. The file
+source admits files by (mtime, path), and both builders stamp
+increasing mtimes.
+
+`q_stream_incremental_rollup` is a streaming foreachBatch sink that
+appends PER-BATCH PARTIAL aggregates, with the final view reconstructed
+by merging partials — the two-level partial→merge pattern that lets a
+100 TB daily rollup absorb new data without rescanning history (same
+algebra as the HLL/CMS partial-merge sketches, applied to a materialized
+table). Four partial files land, and the merged view must equal the
+batch rollup — which is exactly what the DuckDB oracle checks. All
+money flows as integer cents, so partial merging is order-independent.
 """
 
 from __future__ import annotations
@@ -24,23 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..catalog import load_table
+from ..catalog import SCHEMAS, load_table
 from ..registry import query
 from ..session import build_once, conf_scope, once, sf_tag, work_dir
 
 N_SOURCE_FILES = 4
-
-
-def split_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events re-written as N files (once per application), so
-    maxFilesPerTrigger=1 yields N real micro-batches."""
-
-    def build(out: Path) -> None:
-        load_table(spark, sf_dir, "events").repartition(N_SOURCE_FILES).write.parquet(str(out))
-
-    return build_once(spark, f"split_{sf_tag(sf_dir)}", build)
-
-
 SENTINEL_USER_ID = -1
 SENTINEL_OFFSET_DAYS = 40
 
@@ -51,10 +44,11 @@ def split_events_dir_ntile(spark: SparkSession, sf_dir: str) -> str:
     assignment: `ntile(4) OVER (ORDER BY ts, event_id)` in DuckDB
     names the micro-batch each row arrives in. The shape a
     change-feed oracle needs (which batch touched which group), where
-    the range-partitioned variant above is NOT replayable in SQL
-    (Spark picks sampled range boundaries). Slice i gets mtime base+i,
-    so the file source (which admits files by mtime) consumes the
-    slices in order."""
+    the range-partitioned ts-ordered split below is NOT replayable in
+    SQL (Spark picks sampled range boundaries). Slices are
+    ts-contiguous, so no row arrives behind a watermark. Slice i gets
+    mtime base+i, so the file source (which admits files by mtime)
+    consumes the slices in order."""
 
     def build(out: Path) -> None:
         from pyspark.sql import Window
@@ -141,6 +135,18 @@ def split_events_dir_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
     return build_once(spark, f"split_ts_{sf_tag(sf_dir)}", build)
 
 
+def split_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a split layout (its dir, or a glob of its
+    files), one file per micro-batch. The split builders write the
+    `load_table` rows of `events`, so the declared catalog schema is the
+    files' schema and no footer probe is needed."""
+    return (
+        spark.readStream.schema(SCHEMAS["events"])
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
+
+
 def _partial_rollup(batch: DataFrame) -> DataFrame:
     return (
         batch.groupBy(
@@ -176,15 +182,9 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned view merges the partials. Four partial sets must merge
     to exactly the batch rollup (the oracle). Fresh sink+checkpoint per
     call keeps the result deterministic under repetition."""
-    src = split_events_dir(spark, sf_dir)
+    stream = split_stream(spark, split_events_dir_ntile(spark, sf_dir))
     run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     sink = str(run_dir / "partials")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
 
     def append_partial(batch_df: DataFrame, epoch_id: int) -> None:
         # foreachBatch delivers AT-LEAST-once: a crash between the sink
@@ -300,14 +300,8 @@ def _reload_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructType]:
     src = split_events_dir_ntile(spark, sf_dir)
     run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     sink = str(run_dir / "table")
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     q = (
-        stream.writeStream.foreachBatch(
+        split_stream(spark, src).writeStream.foreachBatch(
             lambda bdf, bid: _write_reload_batch(bdf, bid, sink)
         )
         .option("checkpointLocation", str(run_dir / "_checkpoint"))
@@ -319,7 +313,7 @@ def _reload_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructType]:
         # Replay batch 2 (slice-03 under the mtime admission order):
         # same rows, same batch id, same writer — as a restarted query
         # re-delivering an uncommitted epoch would.
-        replay = spark.read.schema(schema).parquet(f"{src}/slice-03.parquet")
+        replay = spark.read.schema(SCHEMAS["events"]).parquet(f"{src}/slice-03.parquet")
         _write_reload_batch(replay, 2, sink)
 
         result = (

@@ -44,10 +44,12 @@ def enrich_with_segment(events: DataFrame, customers: DataFrame) -> DataFrame:
     )
 
 
-def view_purchase_pairs(views: DataFrame, purchases: DataFrame) -> DataFrame:
+def conversion_join(views: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
     """Same-user view→purchase conversions within 30 minutes: an
-    interval (event-time range) join. Column-renamed sides so the
-    condition is unambiguous in both batch and stream."""
+    interval (event-time range) join of type ``how``. Column-renamed
+    sides so the condition is unambiguous in both batch and stream;
+    user_id is coalesced so a null-padded purchase (full outer) still
+    carries its owner — for inner and left joins it is the view's."""
     v = views.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
@@ -63,7 +65,21 @@ def view_purchase_pairs(views: DataFrame, purchases: DataFrame) -> DataFrame:
         (F.col("v_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select("view_id", "purchase_id", F.col("v_user").alias("user_id"))
+        how,
+    ).select(
+        "view_id",
+        "purchase_id",
+        F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),
+    )
+
+
+def watermarked_sides(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(views, purchases) of one event stream, each watermarked 1 hour:
+    the stream-stream joins' state retention bound."""
+    return tuple(
+        events.filter(F.col("event_type") == t).withWatermark("ts", "1 hour")
+        for t in ("view", "purchase")
+    )
 
 
 # ------------------------------------------------------------- batch twins
@@ -98,9 +114,10 @@ def q_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id) carries the shuffle; the time range is a post-join
     residual — never a cross join."""
     ev = load_table(spark, sf_dir, "events")
-    return view_purchase_pairs(
+    return conversion_join(
         ev.filter(F.col("event_type") == "view"),
         ev.filter(F.col("event_type") == "purchase"),
+        "inner",
     )
 
 
@@ -126,39 +143,13 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0, +30 min]. The watermark + range bound state-store retention.
     The batch twin's oracle is the stream's oracle (integer keys only —
     no float representation risk across the join)."""
-    events = load_events_stream(spark, sf_dir)
-    views = events.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
-    purchases = events.filter(F.col("event_type") == "purchase").withWatermark("ts", "1 hour")
-    out = view_purchase_pairs(views, purchases)
+    views, purchases = watermarked_sides(load_events_stream(spark, sf_dir))
+    out = conversion_join(views, purchases, "inner")
     run_stream_to_memory(out, "stream_stream_join_out", output_mode="append")
     return spark.table("stream_stream_join_out")
 
 
 # ------------------------------------------- left-outer stream-stream join
-
-
-def left_conversion_join(views: DataFrame, purchases: DataFrame) -> DataFrame:
-    """views LEFT OUTER purchases on the same user/interval condition as
-    view_purchase_pairs: every view emits — converted views with their
-    purchase ids, unconverted ones null-padded."""
-    v = views.select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    return v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select("view_id", "purchase_id", F.col("v_user").alias("user_id"))
-
 
 _LEFT_PAIRS_ORACLE = """
 SELECT a.event_id AS view_id, b.event_id AS purchase_id, a.user_id AS user_id
@@ -176,9 +167,10 @@ def q_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-key shuffle + residual range as the inner twin — the outer
     side adds no plan cost, only null padding."""
     ev = load_table(spark, sf_dir, "events")
-    return left_conversion_join(
+    return conversion_join(
         ev.filter(F.col("event_type") == "view"),
         ev.filter(F.col("event_type") == "purchase"),
+        "left_outer",
     )
 
 
@@ -233,10 +225,8 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     match can arrive, then emitted null-padded exactly once (Spark's
     no-data final micro-batch performs the flush on the bounded
     source). Oracle-backed via the eviction rule above."""
-    events = load_events_stream(spark, sf_dir)
-    views = events.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
-    purchases = events.filter(F.col("event_type") == "purchase").withWatermark("ts", "1 hour")
-    out = left_conversion_join(views, purchases)
+    views, purchases = watermarked_sides(load_events_stream(spark, sf_dir))
+    out = conversion_join(views, purchases, "left_outer")
     run_stream_to_memory(out, "stream_left_outer_join_out", output_mode="append")
     return spark.table("stream_left_outer_join_out")
 
@@ -286,32 +276,6 @@ WHERE b.ts < wm.w
 """
 
 
-def full_conversion_join(views: DataFrame, purchases: DataFrame) -> DataFrame:
-    """views FULL OUTER purchases on the user/interval condition —
-    coalesced user_id so both null-padded shapes carry their owner."""
-    v = views.select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    return v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    ).select(
-        "view_id",
-        "purchase_id",
-        F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),
-    )
-
-
 @query("q_stream_full_outer_join", oracle=_STREAM_FULL_ORACLE, tags=("streaming", "join", "interval"))
 def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-outer stream-stream interval join — both sides' unmatched
@@ -319,10 +283,8 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (views once wm > v_ts + 30 min, purchases once wm > p_ts), matched
     pairs immediately. Completes the streaming outer-join matrix with
     q_stream_stream_join (inner) and q_stream_left_outer_join."""
-    events = load_events_stream(spark, sf_dir)
-    views = events.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
-    purchases = events.filter(F.col("event_type") == "purchase").withWatermark("ts", "1 hour")
-    out = full_conversion_join(views, purchases)
+    views, purchases = watermarked_sides(load_events_stream(spark, sf_dir))
+    out = conversion_join(views, purchases, "full_outer")
     run_stream_to_memory(out, "stream_full_outer_join_out", output_mode="append")
     return spark.table("stream_full_outer_join_out")
 
@@ -356,17 +318,9 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is marked matched and never re-emitted), which a batch EXISTS
     reproduces exactly — making this the one stream-stream join whose
     oracle needs NO watermark rule."""
-    events = load_events_stream(spark, sf_dir)
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .withWatermark("ts", "1 hour")
-        .select("event_id", "user_id", "ts")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-    )
+    views, purchases = watermarked_sides(load_events_stream(spark, sf_dir))
+    views = views.select("event_id", "user_id", "ts")
+    purchases = purchases.select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
     out = views.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))

@@ -28,10 +28,10 @@ from pyspark.sql import functions as F
 from ..operators.quality import _ERR_SQL, with_validation_error
 from ..registry import query
 from ..session import once, work_dir
-from .incremental import split_events_dir_ntile
+from .incremental import split_events_dir_ntile, split_stream
 
 # Batch membership is the exact ntile(4) the split builder wrote
-# (mtime-ordered slices under maxFilesPerTrigger=1 — the same admission
+# (mtime-ordered slices, one per micro-batch — the same admission
 # contract q_python_datasink_stream and the change-feed oracle pin).
 _STREAM_OBSERVE_ORACLE = f"""
 WITH sliced AS (
@@ -77,12 +77,8 @@ def q_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _observed_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, int, int, int]]:
-    src = split_events_dir_ntile(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     observed = with_validation_error(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        split_stream(spark, split_events_dir_ntile(spark, sf_dir))
     ).observe(
         "val_metrics",
         F.count(F.lit(1)).alias("rows_total"),

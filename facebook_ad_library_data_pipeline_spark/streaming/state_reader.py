@@ -35,6 +35,8 @@ from .events import (
     run_stream_to_memory,
     tumbling_counts,
 )
+from .incremental import split_events_dir_ntile, split_stream
+from .joins import conversion_join, watermarked_sides
 
 # Each checkpoint builder runs its stream once per (application,
 # sf_dir) through session.build_once: the state read must see a
@@ -137,31 +139,22 @@ def join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     operator, multi-batch so mid-stream eviction really runs) to
     completion against an explicit checkpoint dir.
 
-    The source must be the TS-ORDERED (ntile) split, not the random
-    one: with random batch assignment a tail row can arrive AFTER the
-    watermark passed its timestamp and be dropped as late, making the
-    final retained state depend on which file each row landed in —
-    true behavior, but not replayable by a SQL oracle over `events`
-    (caught by the r09 sf0.1 sweep: 5 of 72 tail views missing). With
+    The source must be TS-ORDERED, as the ntile split is: with a
+    batch assignment not ordered by ts (a round-robin split) a tail
+    row can arrive AFTER the watermark passed its timestamp and be
+    dropped as late, making the final retained state depend on which
+    file each row landed in — true behavior, but not replayable by a
+    SQL oracle over `events` (caught by the r09 sf0.1 sweep: 5 of 72
+    tail views missing). With
     ts-contiguous batches no row is ever late and the retained set is
     exactly the watermark rule."""
-    from .incremental import split_events_dir_ntile
-    from .joins import view_purchase_pairs
 
     def build(path: Path) -> None:
         ckpt = str(path)
-        src = split_events_dir_ntile(spark, sf_dir)
-        schema = spark.read.parquet(src).schema
-        ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        views, purchases = watermarked_sides(
+            split_stream(spark, split_events_dir_ntile(spark, sf_dir))
         )
-        views = ev.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
-        purchases = ev.filter(F.col("event_type") == "purchase").withWatermark(
-            "ts", "1 hour"
-        )
-        out = view_purchase_pairs(views, purchases)
+        out = conversion_join(views, purchases, "inner")
         run_stream_to_memory(
             out,
             "state_read_join_src",
@@ -248,18 +241,11 @@ def changelog_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the tumbling agg over the EXACT-ntile 4-slice source with
     RocksDB changelog checkpointing on, so the per-batch state deltas
     (PUTs) are replayable as a change feed."""
-    from .incremental import split_events_dir_ntile
 
     def build(path: Path) -> None:
         ckpt = str(path)
         scoped = rocksdb_changelog_session(spark)
-        src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
-        ev = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+        ev = split_stream(scoped, split_events_dir_ntile(scoped, sf_dir))
         agg = tumbling_counts(ev.withWatermark("ts", "1 hour"))
         run_stream_to_memory(
             agg,
@@ -343,7 +329,6 @@ def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     MapState per-type counts) over the ts-ordered ntile split to
     completion against an explicit checkpoint dir."""
     from ..vendorpath import ensure_protobuf
-    from .incremental import split_events_dir_ntile
     from .stateful import user_engagement_tws
 
     def build(path: Path) -> None:
@@ -354,13 +339,7 @@ def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         # q_state_reshard does — same mechanics changelog_checkpoint
         # has always exercised.
         scoped = rocksdb_changelog_session(spark)
-        src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
-        ev = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+        ev = split_stream(scoped, split_events_dir_ntile(scoped, sf_dir))
         out = user_engagement_tws(ev)
         run_stream_to_memory(
             out,
@@ -546,7 +525,6 @@ def q_state_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .incremental import split_events_dir_ntile
     from .stateful import (
         TWS_INIT_OUTPUT_SCHEMA,
         WarmStartProcessor,
@@ -571,11 +549,8 @@ def _reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
     )
     src = split_events_dir_ntile(scoped, sf_dir)
-    schema = scoped.read.parquet(f"{src}/slice-01.parquet").schema
     tail = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/slice-0[34].parquet")
+        split_stream(scoped, f"{src}/slice-0[34].parquet")
         # guide §4/§2.3: WarmStart folds value only
         .select("user_id", "value")
     )
@@ -663,8 +638,6 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import time
 
-    from .incremental import split_events_dir_ntile
-
     def build(path: Path) -> None:
         ckpt = str(path)
         scoped = rocksdb_changelog_session(spark)
@@ -673,14 +646,9 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         scoped.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
         scoped.conf.set("spark.sql.shuffle.partitions", str(_SNAP_SHARDS))
         src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
 
         def run_phase(path_glob: str, hold_for_zip: int | None) -> None:
-            ev = (
-                scoped.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(path_glob)
-            )
+            ev = split_stream(scoped, path_glob)
             agg = tumbling_counts(ev.withWatermark("ts", "1 hour"))
             q = (
                 agg.writeStream.outputMode("complete")
@@ -840,7 +808,6 @@ def list_timer_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     run_stream_to_memory)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .incremental import split_events_dir_ntile
     from .stateful import _tws_scoped_session
 
     def build(path: Path) -> None:
@@ -849,12 +816,8 @@ def list_timer_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             [StructField("user_id", LongType()), StructField("n", LongType())]
         )
         scoped = _tws_scoped_session(spark)
-        src = split_events_dir_ntile(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
         ev = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            split_stream(scoped, split_events_dir_ntile(scoped, sf_dir))
             .withWatermark("ts", "0 seconds")
             # guide §4/§2.3: the processor folds value only; ts stays for
             # the EventTime watermark, but event_id/event_type/props need

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 from ..registry import query
 from ..session import once
 from .events import load_events_stream, rocksdb_changelog_session, run_stream_to_memory
+from .incremental import split_events_dir_ntile, split_events_dir_ts_ordered, split_stream
 
 
 class _RowEmitter:
@@ -357,17 +358,9 @@ def q_stream_group_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream for a one-batch-quiet user just splits that user into
     two sessions. A timeout that never fires still drops rows (the
     open session never emits) and reddens the hash."""
-    from .incremental import split_events_dir_ts_ordered
-
     scoped = spark.newSession()
     src = split_events_dir_ts_ordered(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-    )
+    events = split_stream(scoped, src).withWatermark("ts", "0 seconds")
     out = user_timeout_stream(events)
     total = scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
 
@@ -657,7 +650,7 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
 # The remaining typed-state surface: ListState (retained per-key event
 # history — the state shape order statistics need, which no running
 # scalar can maintain) with a TTL config on the state variable, driven
-# across FOUR real micro-batches (maxFilesPerTrigger=1 over the 4-file
+# across FOUR real micro-batches (split_stream over the 4-slice ntile
 # split source) so cross-batch appendList→get round-trips through the
 # state store are genuinely exercised, not simulated in one batch.
 
@@ -734,10 +727,10 @@ def user_value_history_tws(events: DataFrame) -> DataFrame:
     )
 
 
-# Slice-independence is the oracle's precondition: the 4-way split is
-# round-robin (not SQL-reproducible), but every emitted column depends
-# only on the SET of a user's values once all four batches are folded —
-# counts, integer-cent sums, and order statistics of the full history.
+# Slice-independence is the oracle's precondition: every emitted column
+# depends only on the SET of a user's values once all four batches are
+# folded — counts, integer-cent sums, and order statistics of the full
+# history — so the oracle never names the slice a row arrived in.
 _TWS_LIST_ORACLE = """
 SELECT user_id,
        count(*) AS n_events,
@@ -761,16 +754,9 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly increasing, since a user absent from a batch emits
     nothing) carries the complete history and must hash-match the
     whole-table oracle. RocksDB provider, as the production backend."""
-    from .incremental import split_events_dir
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_value_history_tws(events)
+    src = split_events_dir_ntile(scoped, sf_dir)
+    out = user_value_history_tws(split_stream(scoped, src))
     # ProcessingTime time mode (TTL's clock) makes the operator request
     # a batch every batch — the bounded query never self-quiesces, so
     # drain on an observable fixpoint instead: every source row folded
@@ -894,16 +880,9 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-of-source, which makes the final fire's content exact). Every
     output row came out of handleExpiredTimer; per user the kept row
     (max n_events) must hash-match the whole-table aggregate."""
-    from .incremental import split_events_dir
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_timer_finalize_tws(events)
+    src = split_events_dir_ntile(scoped, sf_dir)
+    out = user_timer_finalize_tws(split_stream(scoped, src))
     total = scoped.read.parquet(src).count()
 
     run_stream_to_memory(
@@ -1089,16 +1068,9 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy twin. The sentinel row (user_id -1) exists only in the
     derived split source, never in `events`, and emits nothing: its
     own window's end sits past the final watermark."""
-    from .incremental import split_events_dir_ts_ordered
     scoped = _tws_scoped_session(spark)
     src = split_events_dir_ts_ordered(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-    )
+    events = split_stream(scoped, src).withWatermark("ts", "0 seconds")
     out = user_window_close_tws(events)
     total = (
         scoped.read.parquet(src).filter(F.col("user_id") >= 0).count()
@@ -1216,7 +1188,6 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the whole-table aggregate — backfill + stream with no gap and
     no double count — which is exactly what a production cutover from
     batch history to live ingestion has to guarantee."""
-    from .incremental import split_events_dir
     from ..catalog import load_table
     scoped = _tws_scoped_session(spark)
     backfill = (
@@ -1231,12 +1202,8 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
     )
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
     events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        split_stream(scoped, split_events_dir_ntile(scoped, sf_dir))
         .filter(F.col("event_id") % 2 == 1)
         # projection discipline: see user_engagement_tws (the filter
         # column is consumed JVM-side, the processor folds value only)
@@ -1406,16 +1373,8 @@ def q_stream_tws_map_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the whole-table aggregate; total_value is conserved
     across spills by construction, so any protocol fault in
     values()/keys()/removeKey shows up as a red hash."""
-    from .incremental import split_events_dir
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = user_spill_map_tws(events)
+    out = user_spill_map_tws(split_stream(scoped, split_events_dir_ntile(scoped, sf_dir)))
     run_stream_to_memory(
         out, "stream_tws_spill_out", output_mode="update", partitions="16"
     )
@@ -1578,7 +1537,7 @@ FROM t JOIN a USING (user_id)
 
 def q_stream_tws_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded per-key reservoir sampling over four REAL micro-batches
-    (maxFilesPerTrigger=1 over the 4-file split source): every batch
+    (split_stream over the 4-slice ntile split): every batch
     merges its rows into the ≤K-row per-user bottom-k state, so
     cross-batch put→get round-trips and the truncation path are
     genuinely exercised. Final emit per user (max n_events, strictly
@@ -1593,17 +1552,8 @@ def q_stream_tws_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     a distinct-count sketch). Order-independence of the bottom-k set
     is what makes an exact oracle possible at all — a coin-flip
     reservoir could only be invariant-checked."""
-    from .incremental import split_events_dir
-
     scoped = _tws_scoped_session(spark)
-    src = split_events_dir(scoped, sf_dir)
-    schema = scoped.read.parquet(src).schema
-    events = (
-        scoped.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = bounded_reservoir_tws(events)
+    out = bounded_reservoir_tws(split_stream(scoped, split_events_dir_ntile(scoped, sf_dir)))
     run_stream_to_memory(
         out, "stream_tws_res_out", output_mode="update", partitions="16"
     )

@@ -879,7 +879,8 @@ def test_stream_reservoir_single_keyed_exchange_hash_jvm_side(spark, sf_dir):
 
     from facebook_ad_library_data_pipeline_spark.streaming import stateful
     from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
-        split_events_dir,
+        split_events_dir_ntile,
+        split_stream,
     )
 
     if not stateful.tws_runtime_available():
@@ -888,13 +889,7 @@ def test_stream_reservoir_single_keyed_exchange_hash_jvm_side(spark, sf_dir):
     prev = scoped.conf.get("spark.sql.shuffle.partitions")
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        src = split_events_dir(scoped, sf_dir)
-        schema = scoped.read.parquet(src).schema
-        events = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+        events = split_stream(scoped, split_events_dir_ntile(scoped, sf_dir))
         out = stateful.bounded_reservoir_tws(events)
         q = (
             out.writeStream.outputMode("update")

@@ -148,14 +148,14 @@ def test_stop_removes_work_dir(sf_dir):
         import sys
         from pathlib import Path
 
-        from facebook_ad_library_data_pipeline_spark.operators.storage import partitioned_events_dir
+        from facebook_ad_library_data_pipeline_spark.operators.storage import lineage_events_dir
         from facebook_ad_library_data_pipeline_spark.session import get_spark, work_dir
         from facebook_ad_library_data_pipeline_spark.streaming.events import load_events_stream
-        from facebook_ad_library_data_pipeline_spark.streaming.incremental import split_events_dir
+        from facebook_ad_library_data_pipeline_spark.streaming.incremental import split_events_dir_ntile
 
         spark = get_spark("work_dir_lifetime")
         d = work_dir(spark)
-        for layout in (partitioned_events_dir, split_events_dir):
+        for layout in (lineage_events_dir, split_events_dir_ntile):
             out = Path(layout(spark, sys.argv[1]))
             assert out.parent == d and any(out.iterdir()), (layout.__name__, out, d)
         # the stream source is a symlink into sf_dir: removing the work

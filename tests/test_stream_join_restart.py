@@ -27,7 +27,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from facebook_ad_library_data_pipeline_spark.catalog import SCHEMAS, load_table
-from facebook_ad_library_data_pipeline_spark.streaming.joins import left_conversion_join
+from facebook_ad_library_data_pipeline_spark.streaming.joins import conversion_join, watermarked_sides
 
 
 def _write_single_file(df, dest_dir: Path, name: str, mtime: int) -> None:
@@ -45,11 +45,8 @@ def _write_single_file(df, dest_dir: Path, name: str, mtime: int) -> None:
 
 def _run_join_stream(spark, src_dir: Path, out_dir: Path, ckpt: Path) -> None:
     events = spark.readStream.schema(SCHEMAS["events"]).parquet(str(src_dir))
-    views = events.filter(F.col("event_type") == "view").withWatermark("ts", "1 hour")
-    purchases = events.filter(F.col("event_type") == "purchase").withWatermark(
-        "ts", "1 hour"
-    )
-    out = left_conversion_join(views, purchases)
+    views, purchases = watermarked_sides(events)
+    out = conversion_join(views, purchases, "left_outer")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     q = (

@@ -77,11 +77,11 @@ def test_incremental_rollup_merges_real_micro_batches(spark, sf_dir):
     from facebook_ad_library_data_pipeline_spark.catalog import load_table
     from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
         N_SOURCE_FILES,
-        split_events_dir,
+        split_events_dir_ntile,
     )
 
-    src = split_events_dir(spark, sf_dir)
-    n_files = len(glob.glob(f"{src}/part-*.parquet"))
+    src = split_events_dir_ntile(spark, sf_dir)
+    n_files = len(glob.glob(f"{src}/slice-*.parquet"))
     assert n_files == N_SOURCE_FILES
 
     merged = {
@@ -125,17 +125,17 @@ def test_incremental_rollup_checkpoint_resume_and_replay_idempotence(
 
     from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
         _partial_rollup,
-        split_events_dir,
+        split_events_dir_ntile,
+        split_stream,
     )
 
-    full_src = split_events_dir(spark, sf_dir)
-    files = sorted(glob.glob(f"{full_src}/part-*.parquet"))
+    full_src = split_events_dir_ntile(spark, sf_dir)
+    files = sorted(glob.glob(f"{full_src}/slice-*.parquet"))
     assert len(files) >= 2
     src = str(tmp_path / "src")
     sink = str(tmp_path / "partials")
     ckpt = str(tmp_path / "ckpt")
     (tmp_path / "src").mkdir()
-    schema = spark.read.parquet(full_src).schema
 
     def append_partial(batch_df, epoch_id):
         _partial_rollup(batch_df).write.mode("overwrite").parquet(
@@ -144,9 +144,7 @@ def test_incremental_rollup_checkpoint_resume_and_replay_idempotence(
 
     def run_to_completion():
         q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            split_stream(spark, src)
             .writeStream.foreachBatch(append_partial)
             .option("checkpointLocation", ckpt)
             .start()
@@ -748,7 +746,8 @@ def test_tws_checkpoint_restart_recovers_state(spark, sf_dir, tmp_path):
     from facebook_ad_library_data_pipeline_spark.catalog import load_table
     from facebook_ad_library_data_pipeline_spark.streaming import stateful
     from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
-        split_events_dir,
+        split_events_dir_ntile,
+        split_stream,
     )
     from facebook_ad_library_data_pipeline_spark.vendorpath import ensure_protobuf
 
@@ -763,21 +762,16 @@ def test_tws_checkpoint_restart_recovers_state(spark, sf_dir, tmp_path):
         "RocksDBStateStoreProvider",
     )
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    full_src = split_events_dir(scoped, sf_dir)
-    files = sorted(glob.glob(f"{full_src}/part-*.parquet"))
+    full_src = split_events_dir_ntile(scoped, sf_dir)
+    files = sorted(glob.glob(f"{full_src}/slice-*.parquet"))
     assert len(files) >= 2
     src = tmp_path / "src"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    schema = scoped.read.parquet(full_src).schema
 
     def run_to_completion(emits):
         # memory sink cannot recover from a checkpoint; foreachBatch can
-        stream = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
+        stream = split_stream(scoped, str(src))
 
         def capture(batch_df, epoch_id):
             emits.extend(batch_df.collect())
@@ -1030,25 +1024,21 @@ def test_checkpoint_pins_shuffle_partitions(spark, sf_dir, tmp_path):
         tumbling_counts,
     )
     from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
-        split_events_dir,
+        split_events_dir_ntile,
+        split_stream,
     )
 
     scoped = spark.newSession()
-    full_src = split_events_dir(scoped, sf_dir)
-    files = sorted(glob.glob(f"{full_src}/part-*.parquet"))
+    full_src = split_events_dir_ntile(scoped, sf_dir)
+    files = sorted(glob.glob(f"{full_src}/slice-*.parquet"))
     src = tmp_path / "src"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    schema = scoped.read.parquet(full_src).schema
     sink: dict = {}
 
     def run(n_partitions: str):
         scoped.conf.set("spark.sql.shuffle.partitions", n_partitions)
-        stream = (
-            scoped.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
+        stream = split_stream(scoped, str(src))
         agg = tumbling_counts(stream.withWatermark("ts", "1 hour"))
 
         def capture(batch_df, epoch_id):
@@ -1179,6 +1169,76 @@ def test_split_sources_deterministic_and_complete(spark, sf_dir):
     assert os.path.getmtime(f"{src2}/zz-sentinel.parquet") > max(
         os.path.getmtime(p) for p in parts
     )
+
+
+def test_split_layouts_have_the_declared_events_schema(spark, sf_dir):
+    """split_stream declares SCHEMAS["events"] instead of reading a
+    footer, so every file of both split layouts (the ts-ordered
+    sentinel included) must carry exactly those names and types."""
+    import glob
+
+    from facebook_ad_library_data_pipeline_spark.catalog import SCHEMAS
+    from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
+        split_events_dir_ntile,
+        split_events_dir_ts_ordered,
+    )
+
+    want = [(f.name, f.dataType) for f in SCHEMAS["events"].fields]
+    for build in (split_events_dir_ntile, split_events_dir_ts_ordered):
+        files = sorted(glob.glob(f"{build(spark, sf_dir)}/*.parquet"))
+        assert files, build.__name__
+        for f in files:
+            got = [(c.name, c.dataType) for c in spark.read.parquet(f).schema.fields]
+            assert got == want, f
+
+
+def test_split_stream_launches_no_job(spark, sf_dir):
+    """Building the split reader runs no Spark job on any split layout
+    or slice glob: the schema is declared, not probed."""
+    from facebook_ad_library_data_pipeline_spark.catalog import SCHEMAS
+    from facebook_ad_library_data_pipeline_spark.streaming.incremental import (
+        split_events_dir_ntile,
+        split_events_dir_ts_ordered,
+        split_stream,
+    )
+
+    ntile = split_events_dir_ntile(spark, sf_dir)
+    paths = [ntile, f"{ntile}/slice-0[34].parquet", split_events_dir_ts_ordered(spark, sf_dir)]
+    sc = spark.sparkContext
+    group = "test_streaming.split_stream"
+    sc.setJobGroup(group, "split_stream under test")
+    try:
+        streams = [split_stream(spark, path) for path in paths]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for stream in streams:
+        assert stream.isStreaming and stream.schema == SCHEMAS["events"]
+
+
+def test_split_reader_rule_lives_in_split_stream():
+    """The one-file-per-batch rule and the declared split schema stay in
+    one place: no package module sets maxFilesPerTrigger or probes a
+    parquet footer for a schema outside incremental.split_stream."""
+    import inspect
+    import re
+    from pathlib import Path
+
+    import facebook_ad_library_data_pipeline_spark as pkg
+    from facebook_ad_library_data_pipeline_spark.streaming import incremental
+
+    root = Path(pkg.__file__).parent
+    lines, start = inspect.getsourcelines(incremental.split_stream)
+    allowed = range(start, start + len(lines))
+    rule = re.compile(r"maxFilesPerTrigger|read\.parquet\([^)]*\)\.schema")
+    hits = [
+        f"{path.relative_to(root)}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), start=1)
+        if rule.search(line)
+        and not (path == Path(incremental.__file__) and n in allowed)
+    ]
+    assert hits == [], hits
 
 
 def test_group_timeout_fold_protocol():
