@@ -359,13 +359,7 @@ def load_all() -> dict[str, Query]:
     reordered per _PRIORITY (see note there: the correctness driver only
     checks the first ~50 entries)."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Tolerate only the listed module itself being absent
-            # (incremental build); never mask a broken transitive import.
-            if e.name != mod:
-                raise
+        importlib.import_module(mod)
     # A typo'd _PRIORITY entry would silently drop that query from the
     # driver's window (it just wouldn't match REGISTRY) — fail loudly
     # instead.

@@ -14,9 +14,10 @@ shuffle partitions = task slots (on a real cluster this is
 
 Session contract: a query never leaves the caller's conf changed. A
 query-local setting goes on a ``newSession()`` child or a reader/writer
-option; a stream start that needs one uses ``conf_scope``. The one
-exception: ``catalog.load_table`` and ``events.load_events_stream`` set
-``spark.sql.session.timeZone=UTC`` and
+option; a stream that needs its own shuffle partitions passes them to
+``streaming.events.run_stream``, the one caller of ``conf_scope``. The
+one exception: ``catalog.load_table`` and ``events.load_events_stream``
+set ``spark.sql.session.timeZone=UTC`` and
 ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's session.
 Neither setting has a reader-option form, the frames they return carry
 the caller's session (so a child session would not do), and
@@ -123,9 +124,10 @@ def conf_scope(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
     each key exactly: its old value, or ``unset`` if it had none (a
     get-then-set restore would turn "unset" into an explicit value).
 
-    For stream starts only: ``DataStreamWriter.start()`` clones the
-    session, so the started query keeps the settings and the caller's
-    conf is back as it was before the drain begins."""
+    The bounded-stream runner's (``streaming.events.run_stream``):
+    ``DataStreamWriter.start()`` clones the session, so the started
+    query keeps the settings and the caller's conf is back as it was
+    before the drain begins."""
     prev = {k: spark.conf.get(k, None) for k in settings}
     for k, v in settings.items():
         spark.conf.set(k, v)

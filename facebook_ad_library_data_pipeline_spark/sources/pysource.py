@@ -552,8 +552,7 @@ class SyntheticJsonlStreamWriter(DataSourceStreamWriter):
         # published old manifest references deleted files (a
         # manifest-scoped reader of the abandoned stream would fail);
         # publishing first degrades that window to harmless
-        # unreferenced orphans, invisible to manifest-scoped readers
-        # and reclaimable by vacuum_sink_dir().
+        # unreferenced orphans, invisible to manifest-scoped readers.
         prior: list = []
         if os.path.exists(final):
             try:
@@ -602,59 +601,6 @@ def register_synth_stream_sink(spark: SparkSession) -> None:
         (__name__, "stream-sink"),
         lambda: spark.dataSource.register(SyntheticJsonlStreamSink),
     )
-
-
-def vacuum_sink_dir(path: str) -> dict:
-    """Maintenance op for the Python-sink manifest layout: reclaim
-    files the commit protocol deliberately leaves on disk but OUT of
-    every manifest (abort-path survivors when the driver died before
-    abort ran, publish-first republish orphans, torn `.tmp` manifests
-    from a crash mid-publish). The protocol's safety half is
-    "manifest-scoped readers never see a partial file"; this is the
-    ops half — list-vs-manifest cleanup, the moral twin of
-    Delta/Iceberg VACUUM over our flat layout.
-
-    Scans `path` for `_MANIFEST` (batch sink) and `_MANIFEST-*`
-    (stream sink, one per batch), unions their `files` lists, and
-    unlinks every `*.jsonl` not referenced plus every `_MANIFEST*.tmp`
-    (a tmp manifest is by construction never published — os.replace
-    either landed, making the final the source of truth, or didn't,
-    making the tmp a torn write). Manifests themselves and referenced
-    files are never touched, so the op is idempotent and safe to run
-    concurrently with readers (readers only open manifest-listed
-    files; we only delete unlisted ones).
-
-    Returns {"referenced": n, "removed": [paths], "kept": n} for
-    audit logging — the reconciliation record a 100 TB deployment's
-    scheduled vacuum job would emit."""
-    import glob as _glob
-    import json as _json
-    import os
-
-    referenced: set[str] = set()
-    for mf in _glob.glob(os.path.join(path, "_MANIFEST*")):
-        if mf.endswith(".tmp"):
-            continue
-        try:
-            referenced.update(_json.loads(open(mf).read()).get("files", []))
-        except (OSError, ValueError):
-            # torn/unreadable FINAL manifest: conservative — leave its
-            # (unknown) files alone by treating nothing as orphaned
-            # this run; surface via the report instead of deleting
-            return {"referenced": -1, "removed": [], "kept": -1,
-                    "error": f"unreadable manifest: {mf}"}
-    removed: list[str] = []
-    kept = 0
-    for f in sorted(_glob.glob(os.path.join(path, "*.jsonl"))):
-        if f in referenced:
-            kept += 1
-        else:
-            os.remove(f)
-            removed.append(f)
-    for t in sorted(_glob.glob(os.path.join(path, "_MANIFEST*.tmp"))):
-        os.remove(t)
-        removed.append(t)
-    return {"referenced": len(referenced), "removed": removed, "kept": kept}
 
 
 # Batch membership is the exact ntile(4) the split builder wrote, so
@@ -708,6 +654,7 @@ def _stream_sink_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructT
     import tempfile
     from pathlib import Path
 
+    from ..streaming.events import run_stream
     from ..streaming.incremental import split_events_dir_ntile, split_stream
 
     register_synth_stream_sink(spark)
@@ -722,14 +669,12 @@ def _stream_sink_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructT
                 "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents",
             )
         )
-        q = (
+        run_stream(
             ev.writeStream.format("synth_jsonl_stream_sink")
             .option("path", str(out))
             .option("checkpointLocation", str(run_dir / "ckpt"))
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
         per_batch = []
         # skip a leftover `.tmp` from a commit hard-killed between the

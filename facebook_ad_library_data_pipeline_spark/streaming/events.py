@@ -14,10 +14,13 @@ windows shuffle on the session key only.
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import SCHEMAS, _events_nanos_schema, events_ts_unit, load_table
 from ..functions.money import money_sum
@@ -192,18 +195,73 @@ def rocksdb_changelog_session(spark: SparkSession) -> SparkSession:
     return scoped
 
 
+def run_stream(
+    writer: DataStreamWriter,
+    *,
+    partitions: str | None = None,
+    until: Callable[[StreamingQuery], bool] | None = None,
+) -> StreamingQuery:
+    """Start the caller's configured ``writer``, drain the bounded
+    stream, stop it and return the stopped query (``recentProgress``
+    stays readable). The one place a bounded stream's lifecycle lives.
+
+    ``partitions`` sets ``spark.sql.shuffle.partitions`` around the
+    start only: start() clones the session, so the query keeps them and
+    the caller's conf is restored before the drain begins.
+
+    Without ``until`` the drain is ``processAllAvailable()``, which
+    also returns once an AvailableNow query has stopped itself.
+    Operators in ProcessingTime time mode (state TTL, timers) ask for
+    another batch every batch, so such a query never quiesces: then
+    ``until(q)`` decides when everything is in, checked between
+    ``awaitTermination`` waits. A query that dies first raises its own
+    exception, not a downstream mismatch on a partial sink. Before an
+    ``until`` drain stops the query it waits for the running trigger
+    to end, so the stop does not land inside a state-store commit."""
+    if partitions is None:
+        q = writer.start()
+    else:
+        # writer._spark is the session start() clones
+        with conf_scope(writer._spark, {"spark.sql.shuffle.partitions": partitions}):
+            q = writer.start()
+    try:
+        if until is None:
+            q.processAllAvailable()
+        else:
+            deadline = time.monotonic() + 300
+            while not until(q):
+                # awaitTermination raises the query's own exception
+                if q.awaitTermination(0.3) and not until(q):
+                    raise RuntimeError(f"stream {q.name!r} stopped before draining")
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"stream {q.name!r} did not drain in 300 s")
+            # Stop once a trigger has ended: while idle, or just after a
+            # batch, when the next one is still planning and far from
+            # its state-store commit. A ProcessingTime batch runs for
+            # seconds; the idle gap between two lasts milliseconds.
+            seen = q.lastProgress
+            while (
+                q.isActive
+                and q.status["isTriggerActive"]
+                and q.lastProgress == seen
+                and time.monotonic() < deadline
+            ):
+                q.awaitTermination(0.01)
+    finally:
+        q.stop()
+    return q
+
+
 def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
     partitions: str = "4",
-    available_now: bool = False,
-    drained=None,
-    drain_timeout_s: float = 300.0,
+    until: Callable[[StreamingQuery], bool] | None = None,
     checkpoint_location: str | None = None,
 ) -> None:
     """Drive a streaming aggregation to completion against the bounded
-    file source (processAllAvailable) and land it in a memory sink.
+    file source (``run_stream``) and land it in the memory sink ``name``.
 
     Streaming state stores cost per shuffle partition (one store each,
     re-opened and committed EVERY micro-batch); with the local bounded
@@ -214,53 +272,12 @@ def run_stream_to_memory(
     2.7→2.3). Default 4 here is a local-mode runtime knob (callers
     override); on a real cluster partitions scale with executors and
     state size, not this default."""
-    spark = stream_df.sparkSession
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint_location is not None:
         # callers that re-open the checkpoint afterwards (the
         # state_reader family) pass an explicit durable location
         writer = writer.option("checkpointLocation", checkpoint_location)
-    if available_now:
-        # Trigger.AvailableNow: the query drains what exists and STOPS
-        # ITSELF — the backfill path; await its self-termination
-        # instead of processAllAvailable.
-        writer = writer.trigger(availableNow=True)
-    # start() clones the session: the query keeps its partitions and
-    # the caller's conf is restored before the drain begins
-    with conf_scope(spark, {"spark.sql.shuffle.partitions": partitions}):
-        q = writer.start()
-    try:
-        if drained is not None:
-            # Operators in ProcessingTime time mode (state TTL, timers)
-            # ask the engine for another batch EVERY batch — the query
-            # never self-quiesces, so neither processAllAvailable nor
-            # AvailableNow termination returns on a bounded source.
-            # Poll the caller's sink-visibility predicate instead: it
-            # decides "all source rows folded", then we stop the query.
-            import time as _time
-
-            deadline = _time.monotonic() + drain_timeout_s
-            while q.isActive and not drained():
-                if _time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"stream {name!r} did not drain in {drain_timeout_s}s"
-                    )
-                _time.sleep(0.3)
-            if not q.isActive and not drained():
-                # The query died before the sink fixpoint: surface ITS
-                # error now, not a downstream mismatch on a partial sink.
-                exc = q.exception()
-                if exc is not None:
-                    raise exc
-                raise RuntimeError(
-                    f"stream {name!r} stopped before draining (no exception)"
-                )
-        elif available_now:
-            q.awaitTermination()
-        else:
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    run_stream(writer, partitions=partitions, until=until)
 
 
 @query("q_stream_tumbling", oracle=_TUMBLING_ORACLE, tags=("streaming",))
@@ -491,8 +508,15 @@ def q_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     processAllAvailable — what's under test is the self-terminating
     trigger path."""
     events = load_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    agg = tumbling_counts(events)
-    run_stream_to_memory(agg, "stream_available_now_out", available_now=True)
+    writer = (
+        tumbling_counts(events)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("stream_available_now_out")
+        .trigger(availableNow=True)
+    )
+    # the trigger stopping itself is what ends the drain
+    run_stream(writer, partitions="4", until=lambda q: not q.isActive)
     return spark.table("stream_available_now_out")
 
 

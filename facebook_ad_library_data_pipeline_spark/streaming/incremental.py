@@ -31,7 +31,8 @@ from pyspark.sql.types import StructType
 
 from ..catalog import SCHEMAS, load_table
 from ..registry import query
-from ..session import build_once, conf_scope, once, sf_tag, work_dir
+from ..session import build_once, once, sf_tag, work_dir
+from .events import run_stream
 
 N_SOURCE_FILES = 4
 SENTINEL_USER_ID = -1
@@ -195,18 +196,13 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{sink}/epoch={epoch_id}"
         )
 
-    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
-        q = (
-            stream.writeStream.foreachBatch(append_partial)
-            .option("checkpointLocation", str(run_dir / "_checkpoint"))
-            .start()
+    try:
+        run_stream(
+            stream.writeStream.foreachBatch(append_partial).option(
+                "checkpointLocation", str(run_dir / "_checkpoint")
+            ),
+            partitions="8",
         )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    try:
         partials = spark.read.parquet(sink)  # epoch= dirs discovered as a column
         merged = partials.groupBy("day", "event_type").agg(
             F.sum("n").alias("n"),
@@ -300,16 +296,13 @@ def _reload_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructType]:
     src = split_events_dir_ntile(spark, sf_dir)
     run_dir = Path(tempfile.mkdtemp(dir=work_dir(spark)))
     sink = str(run_dir / "table")
-    q = (
-        split_stream(spark, src).writeStream.foreachBatch(
-            lambda bdf, bid: _write_reload_batch(bdf, bid, sink)
-        )
-        .option("checkpointLocation", str(run_dir / "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        run_stream(
+            split_stream(spark, src)
+            .writeStream.foreachBatch(lambda bdf, bid: _write_reload_batch(bdf, bid, sink))
+            .option("checkpointLocation", str(run_dir / "_checkpoint"))
+            .trigger(availableNow=True)
+        )
         # Replay batch 2 (slice-03 under the mtime admission order):
         # same rows, same batch id, same writer — as a restarted query
         # re-delivering an uncommitted epoch would.
@@ -327,5 +320,4 @@ def _reload_rollup(spark: SparkSession, sf_dir: str) -> tuple[list, StructType]:
         )
         return result.collect(), result.schema
     finally:
-        q.stop()
         shutil.rmtree(run_dir, ignore_errors=True)

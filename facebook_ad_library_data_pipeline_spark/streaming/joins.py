@@ -21,7 +21,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -44,12 +44,22 @@ def enrich_with_segment(events: DataFrame, customers: DataFrame) -> DataFrame:
     )
 
 
+def _converts_within_30_min() -> Column:
+    """The view→purchase interval condition: same user, purchase in
+    [view ts, view ts + 30 min], over sides renamed to v_user/v_ts and
+    p_user/p_ts so it is unambiguous in both batch and stream."""
+    return (
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES"))
+    )
+
+
 def conversion_join(views: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
     """Same-user view→purchase conversions within 30 minutes: an
-    interval (event-time range) join of type ``how``. Column-renamed
-    sides so the condition is unambiguous in both batch and stream;
-    user_id is coalesced so a null-padded purchase (full outer) still
-    carries its owner — for inner and left joins it is the view's."""
+    interval (event-time range) join of type ``how``. user_id is
+    coalesced so a null-padded purchase (full outer) still carries its
+    owner — for inner and left joins it is the view's."""
     v = views.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
@@ -60,13 +70,7 @@ def conversion_join(views: DataFrame, purchases: DataFrame, how: str) -> DataFra
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
     )
-    return v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        how,
-    ).select(
+    return v.join(p, _converts_within_30_min(), how).select(
         "view_id",
         "purchase_id",
         F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),
@@ -319,16 +323,14 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces exactly — making this the one stream-stream join whose
     oracle needs NO watermark rule."""
     views, purchases = watermarked_sides(load_events_stream(spark, sf_dir))
-    views = views.select("event_id", "user_id", "ts")
+    views = views.select(
+        "event_id", F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts")
+    )
     purchases = purchases.select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-    out = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("ts"))
-        & (F.col("p_ts") <= F.col("ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_semi",
-    ).select(
-        F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("view_ts")
+    out = views.join(purchases, _converts_within_30_min(), "left_semi").select(
+        F.col("event_id").alias("view_id"),
+        F.col("v_user").alias("user_id"),
+        F.col("v_ts").alias("view_ts"),
     )
     run_stream_to_memory(out, "stream_semi_join_out", output_mode="append")
     return spark.table("stream_semi_join_out")

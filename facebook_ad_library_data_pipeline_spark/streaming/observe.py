@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.quality import _ERR_SQL, with_validation_error
 from ..registry import query
 from ..session import once, work_dir
+from .events import run_stream
 from .incremental import split_events_dir_ntile, split_stream
 
 # Batch membership is the exact ntile(4) the split builder wrote
@@ -89,13 +90,11 @@ def _observed_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, int, int
     )
     ckpt = tempfile.mkdtemp(dir=work_dir(spark))
     try:
-        q = (
+        q = run_stream(
             observed.writeStream.format("noop")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         rows = []
         for p in q.recentProgress:
             if p["numInputRows"] == 0:

@@ -10,8 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.quality import with_validation_error
-from ..session import conf_scope
-from .events import load_events_stream
+from .events import load_events_stream, run_stream
 
 
 def split_sink_batch(out_dir: str):
@@ -39,14 +38,8 @@ def split_sink_batch(out_dir: str):
 
 def run_streaming_quality_split(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Drive the bounded events stream through the dual-sink split."""
-    with conf_scope(spark, {"spark.sql.shuffle.partitions": "32"}):
-        q = (
-            load_events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(split_sink_batch(out_dir))
-            .option("checkpointLocation", f"{out_dir}/_checkpoint")
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_stream(
+        load_events_stream(spark, sf_dir)
+        .writeStream.foreachBatch(split_sink_batch(out_dir))
+        .option("checkpointLocation", f"{out_dir}/_checkpoint")
+    )

@@ -32,6 +32,7 @@ from .events import (
     _TUMBLING_ORACLE,
     load_events_stream,
     rocksdb_changelog_session,
+    run_stream,
     run_stream_to_memory,
     tumbling_counts,
 )
@@ -629,14 +630,13 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     racing it against fast micro-batches yields only a FINAL-version
     snapshot (no roll-forward to demonstrate). Deterministic fix:
     build in two phases. Phase 1 streams only ntile slices 1-2
-    (versions 1-2) and holds the quiesced query open until every
+    (versions 1-2) and holds the query open until every
     shard's version-2 snapshot (2.zip) has landed; phase 2 restarts
     the SAME checkpoint over the full slice glob, appending versions
     3-4 as changelog-only commits. Every shard then has 2.zip plus
     changelogs through 4 — snapshotStartBatchId=1 is a guaranteed
     genuine snapshot-load + 2-changelog replay."""
     import glob
-    import time
 
     def build(path: Path) -> None:
         ckpt = str(path)
@@ -647,55 +647,33 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         scoped.conf.set("spark.sql.shuffle.partitions", str(_SNAP_SHARDS))
         src = split_events_dir_ntile(scoped, sf_dir)
 
-        def run_phase(path_glob: str, hold_for_zip: int | None) -> None:
+        def run_phase(path_glob: str, until=None) -> None:
             ev = split_stream(scoped, path_glob)
             agg = tumbling_counts(ev.withWatermark("ts", "1 hour"))
-            q = (
+            run_stream(
                 agg.writeStream.outputMode("complete")
                 .format("memory")
                 .queryName("state_read_snap_src")
-                .option("checkpointLocation", ckpt)
-                .start()
+                .option("checkpointLocation", ckpt),
+                until=until,
             )
-            try:
-                q.processAllAvailable()
-                if hold_for_zip is None:
-                    return
-                # snapshots upload asynchronously and only while the
-                # providers are loaded — hold the quiesced query open
-                # until every shard has the phase-final version's zip.
-                # The maintenance interval is JVM-wide, captured from
-                # the FIRST state-store query in the process
-                # (session.py pins 2s; a cold driver session that ran
-                # other streams first keeps the 60s default — hence
-                # the 150s deadline, paid once per application).
-                deadline = time.monotonic() + 150
-                have: set[str] = set()
-                while time.monotonic() < deadline:
-                    have = {
-                        z.rsplit("/", 2)[-2]
-                        for z in glob.glob(
-                            f"{ckpt}/state/0/*/{hold_for_zip}.zip"
-                        )
-                    }
-                    if len(have) >= _SNAP_SHARDS:
-                        return
-                    time.sleep(0.3)
-                raise TimeoutError(
-                    f"{len(have)}/{_SNAP_SHARDS} shards with a "
-                    f"{hold_for_zip}.zip snapshot after 150s at {ckpt}: "
-                    f"{sorted(have)}"
-                )
-            finally:
-                q.stop()
 
-        # phase 1: slices 1-2 only -> versions 1-2; await 2.zip on
-        # every shard
-        run_phase(f"{src}/slice-0[12].parquet", hold_for_zip=2)
+        # phase 1: slices 1-2 only -> versions 1-2. Snapshots upload
+        # asynchronously and only while the providers are loaded, so
+        # hold the query open until every shard has 2.zip. The
+        # maintenance interval is JVM-wide, captured from the FIRST
+        # state-store query in the process (session.py pins 2s; a cold
+        # driver session that ran other streams first keeps the 60s
+        # default — paid once per application, inside run_stream's
+        # deadline).
+        run_phase(
+            f"{src}/slice-0[12].parquet",
+            until=lambda _q: len(glob.glob(f"{ckpt}/state/0/*/2.zip")) >= _SNAP_SHARDS,
+        )
         # phase 2: widen the glob; slices 3-4 arrive as new files ->
         # versions 3-4 (changelog commits; their snapshots are
         # irrelevant). Complete-mode final state == full rollup.
-        run_phase(f"{src}/slice-0*.parquet", hold_for_zip=None)
+        run_phase(f"{src}/slice-0*.parquet")
 
     return build_once(spark, f"ckpt_snapshot_{sf_tag(sf_dir)}", build)
 
@@ -805,7 +783,7 @@ def list_timer_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     commit-log entry, leaving a checkpoint whose statestore reads
     resolve to the previous batch (the sink-polling drain is for
     ProcessingTime operators, which never quiesce — see
-    run_stream_to_memory)."""
+    events.run_stream)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from .stateful import _tws_scoped_session

@@ -369,7 +369,7 @@ def q_stream_group_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_group_timeout_out",
         output_mode="update",
         partitions="8",
-        drained=lambda: all_counted(
+        until=lambda _q: all_counted(
             scoped, "stream_group_timeout_out", ("user_id", "session_id"), total
         ),
     )
@@ -547,7 +547,7 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     Sharing contract (r10-advice hardening): the family's correctness
     depends on SEQUENTIAL use — two family streams running concurrently
     would race on shuffle.partitions (set around each
-    run_stream_to_memory start) and could collide on sink view names. That invariant was
+    run_stream start) and could collide on sink view names. That invariant was
     implicit in the harness (driver and bench both run queries one at a
     time); it is now ASSERTED at entry — any active streaming query on
     the shared session raises before a second stream can start. Sink
@@ -769,7 +769,7 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_tws_list_out",
         output_mode="update",
         partitions="16",
-        drained=lambda: all_counted(scoped, "stream_tws_list_out", ("user_id",), total),
+        until=lambda _q: all_counted(scoped, "stream_tws_list_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_list_out")
     return keep_latest_per_user(latest)
@@ -890,7 +890,7 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_tws_timer_out",
         output_mode="update",
         partitions="16",
-        drained=lambda: all_counted(scoped, "stream_tws_timer_out", ("user_id",), total),
+        until=lambda _q: all_counted(scoped, "stream_tws_timer_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_timer_out")
     return keep_latest_per_user(latest)
@@ -1081,7 +1081,7 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_tws_event_timer_out",
         output_mode="update",
         partitions="16",
-        drained=lambda: all_counted(
+        until=lambda _q: all_counted(
             scoped, "stream_tws_event_timer_out", ("user_id", "window_start"), total
         ),
     )

@@ -707,42 +707,3 @@ def test_stream_sink_republish_publishes_before_cleanup(tmp_path, monkeypatch):
         "manifest is published — a crash here must leave the published "
         "manifest's files intact"
     )
-
-
-def test_vacuum_sink_dir(tmp_path):
-    """vacuum_sink_dir: removes unreferenced .jsonl orphans and torn
-    .tmp manifests, keeps every manifest-listed file, idempotent."""
-    from facebook_ad_library_data_pipeline_spark.sources.pysource import (
-        SyntheticJsonlStreamWriter,
-        _SinkFileCommit,
-        vacuum_sink_dir,
-    )
-
-    w = SyntheticJsonlStreamWriter(str(tmp_path))
-    kept = tmp_path / "part-live.jsonl"
-    kept.write_text('{"user_id": 1, "cents": 100}\n')
-    w.commit([_SinkFileCommit(path=str(kept), n_rows=1)], 0)
-    orphan = tmp_path / "part-orphan.jsonl"  # abort survivor / crash debris
-    orphan.write_text('{"user_id": 2, "cents": 999}\n')
-    torn = tmp_path / "_MANIFEST-00001.tmp"  # crash mid-publish
-    torn.write_text('{"files": [')
-
-    report = vacuum_sink_dir(str(tmp_path))
-    assert kept.exists() and not orphan.exists() and not torn.exists()
-    assert sorted(report["removed"]) == sorted([str(orphan), str(torn)])
-    assert report["kept"] == 1 and report["referenced"] == 1
-
-    # idempotent: a second pass finds nothing to do
-    report2 = vacuum_sink_dir(str(tmp_path))
-    assert report2["removed"] == [] and kept.exists()
-
-    # unreadable FINAL manifest: conservative no-op with an error report
-    bad = tmp_path / "_MANIFEST-00002"
-    bad.write_text("{torn json")
-    orphan2 = tmp_path / "part-maybe.jsonl"
-    orphan2.write_text("{}\n")
-    report3 = vacuum_sink_dir(str(tmp_path))
-    assert "error" in report3 and orphan2.exists(), (
-        "an unreadable manifest must disable deletion, not risk "
-        "removing files it might reference"
-    )

@@ -1241,6 +1241,36 @@ def test_split_reader_rule_lives_in_split_stream():
     assert hits == [], hits
 
 
+def test_stream_lifecycle_lives_in_run_stream():
+    """Every bounded stream starts, drains and stops in one function: no
+    package module calls processAllAvailable, awaitTermination, a
+    sleep, conf_scope or a stream writer's start() outside
+    events.run_stream."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import facebook_ad_library_data_pipeline_spark as pkg
+    from facebook_ad_library_data_pipeline_spark.streaming import events
+
+    root = Path(pkg.__file__).parent
+    lines, start = inspect.getsourcelines(events.run_stream)
+    allowed = range(start, start + len(lines))
+    banned = {"processAllAvailable", "awaitTermination", "sleep", "conf_scope", "start"}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in banned and not (
+                path == Path(events.__file__) and node.lineno in allowed
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}: {name}")
+    assert hits == [], hits
+
+
 def test_group_timeout_fold_protocol():
     """_timeout_finalize via a fake GroupState: the data path folds and
     slides the event-time deadline without emitting; the hasTimedOut
