@@ -136,15 +136,6 @@ def _recon_sq_error(emb: Column, books_col: Column, code: Column, dim: int) -> C
     return total
 
 
-def pq_codes_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector packed code + reconstruction error. Codes are
-    engine-trained state (codebooks), so the detail stays out of the
-    registered query's hash-checked output; tests read it here."""
-    emb = _emb_double(spark, sf_dir)
-    books = fit_codebooks(spark, sf_dir)
-    return encode(emb, spark, books).select("vec_id", "label", "code", "recon_sq_error")
-
-
 # Engine-independent invariants over engine-state codes (the
 # ann_recall pinned-flag move): row conservation (count recomputed by
 # the oracle), code range within 2^(4·M) by bit-packing construction,
@@ -167,7 +158,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed code must fit the 8×4-bit layout, and mean reconstruction
     error must beat the zero-vector baseline — the engine-independent
     skeleton of "the corpus compressed losslessly in count and sanely
-    in value". Per-vector codes: pq_codes_detail (tests/test_pq.py)."""
+    in value". Per-vector codes and errors are engine-trained state,
+    so they stay out of the hash; tests/test_pq.py checks them."""
     emb = _emb_double(spark, sf_dir)
     books = fit_codebooks(spark, sf_dir)
     enc = encode(emb, spark, books)

@@ -51,17 +51,6 @@ def redaction_counts(text: Column | str) -> list[Column]:
     return [F.regexp_count(col, F.lit(pat)).alias(f"{name}_hits") for name, pat, _ in REDACT_RULES]
 
 
-def redact(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Generic scrub: replace `text_col` with its redacted form and
-    append per-rule hit counts (the audit columns a compliance report
-    aggregates)."""
-    return df.select(
-        *[c for c in df.columns if c != text_col],
-        redact_col(text_col).alias(text_col),
-        *redaction_counts(F.col(text_col)),
-    )
-
-
 # The driver query runs the account-id rule against customer names
 # (TPC-H names embed a customer number — exactly the "internal
 # identifier in free text" case) and reports the per-segment audit:
@@ -82,8 +71,8 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Identifier-redaction audit over customer names: mask `#NNNNNN`
     account ids and report per-segment how many rows carried one plus
     a deterministic redacted sample (min over the redacted strings).
-    The full rule set (email/phone/IP/id) is exercised on fixture
-    corpora in tests/test_redact.py; this query proves the native
+    The full rule set (email/phone/IP/id) is exercised on a fixture
+    corpus in tests/test_redact_splits.py; this query proves the native
     regexp pipeline end-to-end against real table data."""
     cust = load_table(spark, sf_dir, "customer")
     id_pat = REDACT_RULES[3][1]

@@ -5,30 +5,78 @@ The image path is REAL end-to-end with zero native dependencies:
 ``bmp.py`` implements an uncompressed 24-bit BMP codec in pure numpy,
 ``png.py`` a non-interlaced 8-bit RGB PNG codec on stdlib zlib (all
 five row filters), and ``jpeg.py`` a baseline-sequential JPEG codec
-(Huffman + 8×8 DCT, Annex K tables) — the stub that survived rounds
-1-5 is gone. The pixel-stats queries encode deterministic fixture
-pixels to actual BMP/PNG/JPEG bytes, decode them back inside
-``mapInPandas``, and emit true per-channel pixel statistics that a
-DuckDB oracle reproduces in closed form (for JPEG via DC-only fixture
-blocks, whose lossy round trip is exactly predictable).
+(Huffman + 8×8 DCT, Annex K tables). The pixel-stats queries encode
+deterministic fixture pixels to actual BMP/PNG/JPEG bytes, decode them
+back in a row function, and emit true per-channel pixel statistics
+that a DuckDB oracle reproduces in closed form (for JPEG via DC-only
+fixture blocks, whose lossy round trip is exactly predictable).
+
+Every codec query of the family (here and in ``phash.py``) is a row
+function run by ``fixture_rows``, the family's one ``mapInPandas``;
+``per_doc`` runs one over the fanned-out documents ``doc_id`` scan.
 
 At scale: binary payloads ride in parquet; feature extraction is an
-embarrassingly parallel mapInPandas over whatever partitioning the scan
+embarrassingly parallel map over whatever partitioning the scan
 produced — no shuffle at all.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from ..catalog import fan_out, load_table
 from ..registry import query
 from .bmp import decode_bmp24, encode_bmp24
 from .jpeg import decode_jpeg, encode_jpeg_rgb444
 from .png import decode_png_rgb, encode_png_rgb
+from .wav import decode_wav_pcm16, encode_wav_pcm16
+
+
+def fixture_rows(
+    df: DataFrame, rows_of: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """The family's one Arrow-batched map: ``rows_of(*row)`` runs on
+    each input row's values, in ``df``'s column order, and returns the
+    tuples that row yields, in ``schema``'s column order. Each batch's
+    frame carries the schema's column names, so a batch that yields no
+    rows still has every column."""
+    names = DataType.fromDDL(schema).names
+
+    def batches(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in pdfs:
+            rows = [
+                out for row in pdf.itertuples(index=False, name=None) for out in rows_of(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
+
+
+def per_doc(
+    spark: SparkSession, sf_dir: str, rows_of: Callable[[int], Iterable[tuple]], schema: str
+) -> DataFrame:
+    """``fixture_rows`` over the documents ``doc_id`` scan. fan_out
+    spreads the narrow single-split local scan across cores before the
+    CPU-heavy Python codec (a no-op at real scale, where
+    maxPartitionBytes already yields many splits)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
+    return fixture_rows(docs, rows_of, schema)
+
+
+def channel_means(img) -> list[float]:
+    """Per-channel means of an array whose last axis is the channel
+    (pixels (H, W, C) or samples (N, C)): exact integer sums divided by
+    the element count, one correctly rounded IEEE division each, so the
+    double is the oracle's ``avg`` bit for bit."""
+    flat = img.reshape(-1, img.shape[-1]).astype("int64")
+    return [int(s) / flat.shape[0] for s in flat.sum(axis=0)]
+
 
 def decode_image_compressed(payload: bytes):
     """Format-sniffing image decode over the three real codecs: BMP
@@ -85,45 +133,31 @@ FEATURE_SCHEMA = "doc_id long, n_bytes long, mean_byte double, std_byte double, 
 )
 
 
-def extract_byte_features(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Arrow-batched feature extractor: deterministic byte statistics as
-    the stand-in for pixel statistics (a real decoder would slot in at
-    the marked line). Pure pandas/numpy per batch — no driver round-trip.
+def extract_byte_features(doc_id: int, payload: bytes) -> list[tuple]:
+    """Feature extractor: deterministic byte statistics as the stand-in
+    for pixel statistics (a real decoder would slot in at the marked
+    line).
 
     The floats are formed from EXACT INTEGER MOMENTS (s1=Σb, s2=Σb²,
     per-bin counts — all exact in int64) through the same expression
     tree the DuckDB oracle uses (s1/n; sqrt(max(0, s2/n − (s1/n)²));
     count/n). Division and sqrt are IEEE correctly-rounded, so the
     doubles match bit-for-bit across engines — the same no-libm rule
-    as q_top_terms, making this mapInPandas path fully hash-checkable
-    (it was the repo's last rows-only multimodal query)."""
+    as q_top_terms, making this Python path fully hash-checkable."""
     import math
 
     import numpy as np
-    import pandas as pd
 
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8)
-            # <-- real image/audio decode would replace `arr` here
-            n = int(arr.size)
-            s1 = int(arr.sum())
-            s2 = int((arr.astype(np.int64) ** 2).sum())
-            mean = s1 / n if n else 0.0
-            var = (s2 / n - (s1 / n) * (s1 / n)) if n else 0.0
-            counts = np.bincount(arr >> 4, minlength=N_HIST_BINS)
-            row = {
-                "doc_id": doc_id,
-                "n_bytes": n,
-                "mean_byte": mean,
-                "std_byte": math.sqrt(max(0.0, var)),
-            }
-            row.update(
-                {f"hist_{i}": int(counts[i]) / max(n, 1) for i in range(N_HIST_BINS)}
-            )
-            rows.append(row)
-        yield pd.DataFrame(rows)
+    arr = np.frombuffer(payload, dtype=np.uint8)
+    # <-- real image/audio decode would replace `arr` here
+    n = int(arr.size)
+    s1 = int(arr.sum())
+    s2 = int((arr.astype(np.int64) ** 2).sum())
+    mean = s1 / n if n else 0.0
+    var = (s2 / n - (s1 / n) * (s1 / n)) if n else 0.0
+    counts = np.bincount(arr >> 4, minlength=N_HIST_BINS)
+    hist = [int(counts[i]) / max(n, 1) for i in range(N_HIST_BINS)]
+    return [(doc_id, n, mean, math.sqrt(max(0.0, var)), *hist)]
 
 
 _HIST_SQL = ",\n           ".join(
@@ -161,14 +195,14 @@ FROM documents d LEFT JOIN m ON d.doc_id = m.doc_id
 
 @query("q_multimodal_features", oracle=_FEATURES_ORACLE, tags=("llm", "multimodal"))
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads: real Arrow
-    batch plumbing + explicit schema; deterministic byte features
+    """Feature extraction over binary payloads through fixture_rows'
+    Arrow batches and explicit schema; deterministic byte features
     (mean/std/16-bin high-nibble histogram) built from exact integer
     moments so the DuckDB oracle reproduces every double bit-for-bit
     (see extract_byte_features)."""
     docs = load_table(spark, sf_dir, "documents")
     payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return payloads.mapInPandas(extract_byte_features, schema=FEATURE_SCHEMA)
+    return fixture_rows(payloads, extract_byte_features, FEATURE_SCHEMA)
 
 
 # Fixture image geometry: width 15 forces BMP row padding (45 -> 48
@@ -195,32 +229,16 @@ PIXEL_STATS_SCHEMA = (
 )
 
 
-def _bmp_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+def _bmp_roundtrip_stats(doc_id: int) -> list[tuple]:
     """Encode fixture pixels to REAL BMP bytes, decode them back with
     the pure-numpy codec, and emit stats computed from the DECODED
     array only — any codec defect (stride, bottom-up rows, BGR order)
     breaks the oracle match."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_bmp24(synth_pixels(int(doc_id)))
-            img = decode_bmp24(payload)
-            h, w, _ = img.shape
-            means = img.reshape(-1, 3).mean(axis=0)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "width": w,
-                    "height": h,
-                    "payload_bytes": len(payload),
-                    "mean_r": float(means[0]),
-                    "mean_g": float(means[1]),
-                    "mean_b": float(means[2]),
-                }
-            )
-        yield pd.DataFrame(rows)
+    doc_id = int(doc_id)
+    payload = encode_bmp24(synth_pixels(doc_id))
+    img = decode_bmp24(payload)
+    h, w, _ = img.shape
+    return [(doc_id, w, h, len(payload), *channel_means(img))]
 
 
 _PIXEL_STATS_ORACLE = f"""
@@ -249,8 +267,7 @@ def q_multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-numpy codec (bmp.py), and report per-channel means from the
     decoded array. DuckDB computes the same stats in closed form — a
     codec bug (padding, row order, channel order) fails the hash."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_bmp_roundtrip_stats, schema=PIXEL_STATS_SCHEMA)
+    return per_doc(spark, sf_dir, _bmp_roundtrip_stats, PIXEL_STATS_SCHEMA)
 
 
 PNG_STATS_SCHEMA = (
@@ -259,34 +276,17 @@ PNG_STATS_SCHEMA = (
 )
 
 
-def _png_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+def _png_roundtrip_stats(doc_id: int) -> list[tuple]:
     """Encode fixture pixels to REAL PNG bytes (zlib IDAT, filter types
     cycling 0-4 by row), decode them back with the stdlib codec, and
     emit stats from the DECODED array only — a defect in any of the
     five filter reconstructions, the chunk CRCs, or the zlib framing
     breaks the oracle match. (Unlike BMP, the payload byte size is
     compressor-dependent, so the oracle checks pixel stats, not size.)"""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_png_rgb(synth_pixels(int(doc_id)))
-            img = decode_image_compressed(payload)
-            h, w, _ = img.shape
-            means = img.reshape(-1, 3).mean(axis=0)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "width": w,
-                    "height": h,
-                    "n_px": int(h * w),
-                    "mean_r": float(means[0]),
-                    "mean_g": float(means[1]),
-                    "mean_b": float(means[2]),
-                }
-            )
-        yield pd.DataFrame(rows)
+    doc_id = int(doc_id)
+    img = decode_image_compressed(encode_png_rgb(synth_pixels(doc_id)))
+    h, w, _ = img.shape
+    return [(doc_id, w, h, h * w, *channel_means(img))]
 
 
 _PNG_STATS_ORACLE = f"""
@@ -315,12 +315,8 @@ def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     all five row filters exercised) and decode them back through
     decode_image_compressed's format sniffing. DuckDB reproduces the
     per-channel means in closed form. At scale the shape is identical
-    to the BMP path: embarrassingly parallel mapInPandas; fan_out
-    spreads the narrow single-split local scan across cores before the
-    CPU-heavy codec (a no-op at real scale, where maxPartitionBytes
-    already yields many splits)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_png_roundtrip_stats, schema=PNG_STATS_SCHEMA)
+    to the BMP path: per_doc's embarrassingly parallel map."""
+    return per_doc(spark, sf_dir, _png_roundtrip_stats, PNG_STATS_SCHEMA)
 
 
 # JPEG fixture geometry: 16x16 = 2x2 blocks of 8x8, each uniform gray
@@ -349,32 +345,16 @@ JPEG_STATS_SCHEMA = (
 )
 
 
-def _jpeg_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+def _jpeg_roundtrip_stats(doc_id: int) -> list[tuple]:
     """Encode fixture pixels to REAL baseline JPEG bytes (Huffman +
     DCT + quantization), decode them back with the pure-numpy decoder,
     and emit stats from the DECODED array only — a defect anywhere in
     the entropy coding, zigzag, dequantization, IDCT, or color
     conversion shifts the means off the closed form."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_jpeg_rgb444(synth_jpeg_pixels(int(doc_id)))
-            img = decode_image_compressed(payload)
-            h, w, _ = img.shape
-            means = img.reshape(-1, 3).mean(axis=0)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "width": w,
-                    "height": h,
-                    "mean_r": float(means[0]),
-                    "mean_g": float(means[1]),
-                    "mean_b": float(means[2]),
-                }
-            )
-        yield pd.DataFrame(rows)
+    doc_id = int(doc_id)
+    img = decode_image_compressed(encode_jpeg_rgb444(synth_jpeg_pixels(doc_id)))
+    h, w, _ = img.shape
+    return [(doc_id, w, h, *channel_means(img))]
 
 
 # decoded uniform block value: clamp(2*round_half_away((v-128)/2)+128)
@@ -408,12 +388,10 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decode them back through format sniffing. DC-only blocks make
     the quantization round trip exactly predictable, so DuckDB computes
     the decoded channel means in closed form. Same 100 TB shape as the
-    other decoders: embarrassingly parallel mapInPandas; fan_out
-    spreads the narrow local scan across cores first (profiled 5.2 s ->
-    sub-second at sf0.1 — the Python Huffman+DCT codec is the hot
-    loop, so core count is the whole game)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_jpeg_roundtrip_stats, schema=JPEG_STATS_SCHEMA)
+    other decoders: per_doc's embarrassingly parallel map (fan_out
+    profiled 5.2 s -> sub-second at sf0.1 — the Python Huffman+DCT
+    codec is the hot loop, so core count is the whole game)."""
+    return per_doc(spark, sf_dir, _jpeg_roundtrip_stats, JPEG_STATS_SCHEMA)
 
 
 _FRAME_ORACLE = """
@@ -460,11 +438,10 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A minimal real video container: magic + frame count, then one
 # length-prefixed BMP frame per entry. Both halves of the round trip
 # run the actual codecs in-tree (bmp.py), so "video decode" here means
-# real container parsing + real per-frame image decode — the last
-# stubbed multimodal path (r06 verdict item 5). A production pipeline
-# swaps decode_bmp24 for an H.264 keyframe decoder; the Spark-side
-# plumbing (binary payload → mapInPandas → sampled frame features) is
-# identical.
+# real container parsing + real per-frame image decode. A production
+# pipeline swaps decode_bmp24 for an H.264 keyframe decoder; the
+# Spark-side plumbing (binary payload → row function → sampled frame
+# features) is identical.
 VIDEO_MAGIC = b"SGVC"
 VIDEO_FRAME_W = 16
 VIDEO_FRAME_H = 16
@@ -532,46 +509,21 @@ VIDEO_STATS_SCHEMA = (
 )
 
 
-def _video_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Encode each doc's fixture frames into a real SGVC container,
-    then DECODE: parse the container, keep every VIDEO_SAMPLE_EVERYth
-    frame, BMP-decode it, emit exact per-channel means (integer sums /
-    pixel count — bit-identical to the oracle's closed form)."""
-    import pandas as pd
-
-    n_px = VIDEO_FRAME_W * VIDEO_FRAME_H
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            nf = _video_n_frames(doc_id)
-            payload = encode_video_container(
-                [encode_bmp24(_video_fixture_pixels(doc_id, i)) for i in range(nf)]
-            )
-            for idx, fb in decode_video_container(payload):
-                if idx % VIDEO_SAMPLE_EVERY:
-                    continue
-                px = decode_bmp24(fb).astype("int64")
-                s = px.sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "frame_idx": idx,
-                        "n_frames": nf,
-                        "width": VIDEO_FRAME_W,
-                        "height": VIDEO_FRAME_H,
-                        "mean_r": int(s[0]) / n_px,
-                        "mean_g": int(s[1]) / n_px,
-                        "mean_b": int(s[2]) / n_px,
-                    }
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "frame_idx", "n_frames", "width", "height",
-                "mean_r", "mean_g", "mean_b",
-            ],
-        )
+def _video_roundtrip_stats(doc_id: int) -> list[tuple]:
+    """Encode the doc's fixture frames into a real SGVC container, then
+    DECODE: parse the container, keep every VIDEO_SAMPLE_EVERYth frame,
+    BMP-decode it, and yield one row of exact per-channel means per
+    sampled frame."""
+    doc_id = int(doc_id)
+    nf = _video_n_frames(doc_id)
+    payload = encode_video_container(
+        [encode_bmp24(_video_fixture_pixels(doc_id, i)) for i in range(nf)]
+    )
+    return [
+        (doc_id, idx, nf, VIDEO_FRAME_W, VIDEO_FRAME_H, *channel_means(decode_bmp24(fb)))
+        for idx, fb in decode_video_container(payload)
+        if idx % VIDEO_SAMPLE_EVERY == 0
+    ]
 
 
 def _video_mean_sql(c: int) -> str:
@@ -620,10 +572,8 @@ def q_video_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multimodal matrix: image decode (BMP/PNG/JPEG) AND video
     container+frame decode are now codec-real; q_frame_sample remains
     as the codec-free chunk/digest plumbing twin. 100 TB shape:
-    embarrassingly parallel mapInPandas, no shuffle; fan_out spreads
-    the narrow doc_id scan across cores before the Python codec."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_video_roundtrip_stats, schema=VIDEO_STATS_SCHEMA)
+    per_doc's embarrassingly parallel map, no shuffle."""
+    return per_doc(spark, sf_dir, _video_roundtrip_stats, VIDEO_STATS_SCHEMA)
 
 
 # ------------------------------------------------- audio (WAV) decode
@@ -631,8 +581,8 @@ def q_video_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Completes the image/audio/video triad with a REAL audio codec
 # (multimodal/wav.py: RIFF/WAVE PCM16, pure stdlib+numpy). Same
 # fixture discipline as the image/video queries: deterministic stereo
-# int16 waveforms encoded to actual WAV bytes, decoded back inside
-# mapInPandas, exact integer sample statistics the oracle reproduces
+# int16 waveforms encoded to actual WAV bytes, decoded back in a row
+# function, exact integer sample statistics the oracle reproduces
 # in closed form.
 AUDIO_RATE = 8000
 AUDIO_BASE_SAMPLES = 200
@@ -662,37 +612,12 @@ AUDIO_STATS_SCHEMA = (
 )
 
 
-def _audio_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    from .wav import decode_wav_pcm16, encode_wav_pcm16
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            payload = encode_wav_pcm16(_audio_fixture_samples(doc_id), AUDIO_RATE)
-            samples, rate = decode_wav_pcm16(payload)
-            s = samples.astype("int64")
-            n = s.shape[0]
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "n_samples": n,
-                    "sample_rate": rate,
-                    "mean_l": int(s[:, 0].sum()) / n,
-                    "mean_r": int(s[:, 1].sum()) / n,
-                    "peak_l": int(abs(s[:, 0]).max()),
-                    "peak_r": int(abs(s[:, 1]).max()),
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_samples", "sample_rate",
-                "mean_l", "mean_r", "peak_l", "peak_r",
-            ],
-        )
+def _audio_roundtrip_stats(doc_id: int) -> list[tuple]:
+    doc_id = int(doc_id)
+    payload = encode_wav_pcm16(_audio_fixture_samples(doc_id), AUDIO_RATE)
+    samples, rate = decode_wav_pcm16(payload)
+    peak_l, peak_r = (int(p) for p in abs(samples.astype("int64")).max(axis=0))
+    return [(doc_id, samples.shape[0], rate, *channel_means(samples), peak_l, peak_r)]
 
 
 def _audio_chan_sql(c: int) -> str:
@@ -730,11 +655,9 @@ def q_audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample statistics DuckDB reproduces in closed form. With this the
     multimodal matrix covers image (BMP/PNG/JPEG), video (SGVC
     container), AND audio with in-tree codecs. Same 100 TB shape:
-    binary payloads in parquet, embarrassingly parallel mapInPandas,
-    no shuffle; fan_out spreads the narrow scan before the Python
-    codec."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_audio_roundtrip_stats, schema=AUDIO_STATS_SCHEMA)
+    binary payloads in parquet, per_doc's embarrassingly parallel map,
+    no shuffle."""
+    return per_doc(spark, sf_dir, _audio_roundtrip_stats, AUDIO_STATS_SCHEMA)
 
 
 # ------------------------------------------------- image resize
@@ -760,30 +683,11 @@ RESIZE_SCHEMA = (
 )
 
 
-def _resize_roundtrip_stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    n_px = RESIZE_W * RESIZE_H
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            decoded = decode_bmp24(encode_bmp24(synth_pixels(doc_id)))
-            small = resize_nearest(decoded, RESIZE_H, RESIZE_W).astype("int64")
-            s = small.sum(axis=(0, 1))
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "width": RESIZE_W,
-                    "height": RESIZE_H,
-                    "mean_r": int(s[0]) / n_px,
-                    "mean_g": int(s[1]) / n_px,
-                    "mean_b": int(s[2]) / n_px,
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"]
-        )
+def _resize_roundtrip_stats(doc_id: int) -> list[tuple]:
+    doc_id = int(doc_id)
+    decoded = decode_bmp24(encode_bmp24(synth_pixels(doc_id)))
+    small = resize_nearest(decoded, RESIZE_H, RESIZE_W)
+    return [(doc_id, RESIZE_W, RESIZE_H, *channel_means(small))]
 
 
 def _resize_mean_sql(c: int) -> str:
@@ -823,6 +727,5 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. Covers the mandated decode → RESIZE → feature shape (a
     thumbnail/embedding-preprocessing pass); swap resize_nearest for a
     filtered resampler without touching the Spark plumbing. Same
-    mapInPandas posture as every decode query."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return docs.mapInPandas(_resize_roundtrip_stats, schema=RESIZE_SCHEMA)
+    per_doc posture as every decode query."""
+    return per_doc(spark, sf_dir, _resize_roundtrip_stats, RESIZE_SCHEMA)

@@ -22,10 +22,10 @@ by the SAME closed-form arithmetic in both engines, so the oracle
 replays decode-equivalent pixels, block sums, every bit, and the
 group verdicts.
 
-Scale: decode + hash is a pure map (mapInPandas after fan_out — the
-multimodal codec discipline, measured linear in SCALE_EVIDENCE.md
-"Python-codec family is linear");
-grouping is one shuffle on the 64-bit key. At 100 TB this is exactly
+Scale: decode + hash is a pure map (media.per_doc — the multimodal
+codec discipline, measured linear in SCALE_EVIDENCE.md "Python-codec
+family is linear"); grouping is one shuffle on the hash key
+(hash_groups, shared by the three modalities). At 100 TB this is exactly
 the production shape: hash every image once, group by hash.
 
 Reference anchor: the reference downloads ad media URLs
@@ -35,14 +35,12 @@ multimodal dedup extends dedup_near.py's family to images.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, load_table
 from ..registry import query
 from .bmp import decode_bmp24, encode_bmp24
+from .media import decode_video_container, encode_video_container, per_doc
 from .wav import decode_wav_pcm16, encode_wav_pcm16
 
 AH_SIDE = 32  # fixture image side (32×32)
@@ -71,6 +69,29 @@ def synth_ahash_pixels(doc_id: int):
     return np.clip(img, 0, 255).astype(np.uint8)
 
 
+def hash_groups(hashes: DataFrame, key: list[str]) -> DataFrame:
+    """The dedup verdict over (doc_id, *key) hash rows: group on the
+    hash key, then each row gets its group's size (``n_same``) and
+    whether it is the group's lowest doc_id (``is_canonical``,
+    keep-lowest-id as in every other dedup operator). One exchange on
+    the key; the eager localCheckpoint runs the Python hash map once
+    for both the group and the join back."""
+    hashes = hashes.localCheckpoint(eager=True)
+    grouped = hashes.groupBy(*key).agg(
+        F.count(F.lit(1)).alias("n_same"),
+        F.min("doc_id").alias("canonical"),
+    )
+    # no broadcast hint: the group table has one row per DISTINCT
+    # hash — tiny here (≤128 fixtures), corpus-sized at 100 TB where
+    # dup rates are low; AQE broadcasts when it actually fits
+    return hashes.join(grouped, key).select(
+        "doc_id",
+        *key,
+        F.col("n_same").cast("long").alias("n_same"),
+        (F.col("doc_id") == F.col("canonical")).alias("is_canonical"),
+    )
+
+
 def block_bits(img, block: int):
     """Row-major average-hash bit vector of an HxWx3 uint8 array: g3 =
     r+g+b per pixel, (side/block)² block sums, bit = blocksum·n_blocks
@@ -90,7 +111,7 @@ def block_bits(img, block: int):
 
 def ahash(img) -> tuple[int, int]:
     """Integer-exact 64-bit average hash of a 32×32×3 array, packed as
-    (hi, lo) 32-bit halves. Shared by the query's mapInPandas and the
+    (hi, lo) 32-bit halves. Shared by the query's row function and the
     unit pins (no-drift contract)."""
     import numpy as np
 
@@ -100,18 +121,10 @@ def ahash(img) -> tuple[int, int]:
     return hi, lo
 
 
-def _ahash_rows(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_bmp24(synth_ahash_pixels(int(doc_id)))
-            hi, lo = ahash(decode_bmp24(payload))
-            rows.append(
-                {"doc_id": int(doc_id), "ahash_hi": hi, "ahash_lo": lo}
-            )
-        yield pd.DataFrame(rows)
+def _ahash_rows(doc_id: int) -> list[tuple]:
+    doc_id = int(doc_id)
+    payload = encode_bmp24(synth_ahash_pixels(doc_id))
+    return [(doc_id, *ahash(decode_bmp24(payload)))]
 
 
 _AHASH_ORACLE = f"""
@@ -172,30 +185,11 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every bit of both halves, so a codec defect (stride, BGR, row
     order), a block indexed column-major, or a threshold off-by-one
     flips hashes and group verdicts. Plan: pure map for decode+hash
-    (fan_out then mapInPandas, no shuffle), one exchange on the hash
-    key, then the group table joins back (AQE broadcasts it when the
-    distinct-image count fits)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    hashes = docs.mapInPandas(
-        _ahash_rows, schema="doc_id long, ahash_hi long, ahash_lo long"
-    )
-    hashes = hashes.localCheckpoint(eager=True)  # feeds group + verdict
-    grouped = hashes.groupBy("ahash_hi", "ahash_lo").agg(
-        F.count(F.lit(1)).alias("n_same"),
-        F.min("doc_id").alias("canonical"),
-    )
-    # no broadcast hint: the group table has one row per DISTINCT
-    # image — tiny here (≤128 fixtures), corpus-sized at 100 TB where
-    # dup rates are low; AQE broadcasts when it actually fits
-    return hashes.join(
-        grouped, ["ahash_hi", "ahash_lo"]
-    ).select(
-        "doc_id",
-        "ahash_hi",
-        "ahash_lo",
-        F.col("n_same").cast("long").alias("n_same"),
-        (F.col("doc_id") == F.col("canonical")).alias("is_canonical"),
-    )
+    (per_doc, no shuffle), one exchange on the hash key, then the
+    group table joins back (AQE broadcasts it when the distinct-image
+    count fits)."""
+    hashes = per_doc(spark, sf_dir, _ahash_rows, "doc_id long, ahash_hi long, ahash_lo long")
+    return hash_groups(hashes, ["ahash_hi", "ahash_lo"])
 
 
 # ------------------------------------------------- audio envelope hash
@@ -236,18 +230,10 @@ def envelope_hash(samples) -> int:
     return int((bits << np.arange(AU_WINDOWS)).sum())
 
 
-def _audio_hash_rows(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_wav_pcm16(synth_audio_samples(int(doc_id)))
-            samples, _rate = decode_wav_pcm16(payload)
-            rows.append(
-                {"doc_id": int(doc_id), "ehash": envelope_hash(samples)}
-            )
-        yield pd.DataFrame(rows)
+def _audio_hash_rows(doc_id: int) -> list[tuple]:
+    doc_id = int(doc_id)
+    samples, _rate = decode_wav_pcm16(encode_wav_pcm16(synth_audio_samples(doc_id)))
+    return [(doc_id, envelope_hash(samples))]
 
 
 _AUDIO_HASH_ORACLE = f"""
@@ -299,19 +285,8 @@ def q_audio_envelope_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin. The oracle replays samples, window energies, every bit, and
     the verdicts in closed form. Plan: pure map for decode+hash, one
     exchange on the hash key."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    hashes = docs.mapInPandas(_audio_hash_rows, schema="doc_id long, ehash long")
-    hashes = hashes.localCheckpoint(eager=True)  # feeds group + verdict
-    grouped = hashes.groupBy("ehash").agg(
-        F.count(F.lit(1)).alias("n_same"),
-        F.min("doc_id").alias("canonical"),
-    )
-    return hashes.join(grouped, "ehash").select(
-        "doc_id",
-        "ehash",
-        F.col("n_same").cast("long").alias("n_same"),
-        (F.col("doc_id") == F.col("canonical")).alias("is_canonical"),
-    )
+    hashes = per_doc(spark, sf_dir, _audio_hash_rows, "doc_id long, ehash long")
+    return hash_groups(hashes, ["ehash"])
 
 
 # ------------------------------------------------- video clip fingerprint
@@ -357,28 +332,11 @@ def frame_hash16(img) -> int:
     return int((bits << np.arange(bits.size)).sum())
 
 
-def _video_fp_rows(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    from .media import decode_video_container, encode_video_container
-
-    for pdf in batches:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            payload = encode_video_container(
-                [encode_bmp24(fr) for fr in synth_video_frames(int(doc_id))]
-            )
-            hashes = [
-                frame_hash16(decode_bmp24(fb))
-                for _idx, fb in decode_video_container(payload)
-            ]
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "clip_sig": "|".join(str(h) for h in hashes),
-                }
-            )
-        yield pd.DataFrame(rows)
+def _video_fp_rows(doc_id: int) -> list[tuple]:
+    doc_id = int(doc_id)
+    payload = encode_video_container([encode_bmp24(fr) for fr in synth_video_frames(doc_id)])
+    hashes = [frame_hash16(decode_bmp24(fb)) for _idx, fb in decode_video_container(payload)]
+    return [(doc_id, "|".join(str(h) for h in hashes))]
 
 
 _VIDEO_FP_ORACLE = f"""
@@ -439,16 +397,5 @@ def q_video_clip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     robustness at the clip level). The oracle replays every frame's
     bits and the ordered join in closed form. Plan: pure map for the
     codec chain, one exchange on the signature."""
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
-    sigs = docs.mapInPandas(_video_fp_rows, schema="doc_id long, clip_sig string")
-    sigs = sigs.localCheckpoint(eager=True)  # feeds group + verdict
-    grouped = sigs.groupBy("clip_sig").agg(
-        F.count(F.lit(1)).alias("n_same"),
-        F.min("doc_id").alias("canonical"),
-    )
-    return sigs.join(grouped, "clip_sig").select(
-        "doc_id",
-        "clip_sig",
-        F.col("n_same").cast("long").alias("n_same"),
-        (F.col("doc_id") == F.col("canonical")).alias("is_canonical"),
-    )
+    sigs = per_doc(spark, sf_dir, _video_fp_rows, "doc_id long, clip_sig string")
+    return hash_groups(sigs, ["clip_sig"])

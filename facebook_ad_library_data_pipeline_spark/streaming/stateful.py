@@ -560,9 +560,7 @@ def _tws_scoped_session(spark: SparkSession) -> SparkSession:
     tracking (trackTotalNumberOfRows): numRowsTotal is an observability
     metric no registered query reads — every drain fixpoint polls the
     memory SINK — and maintaining the count costs a store scan on every
-    commit of every partition of every micro-batch. The evidence
-    scripts that DO read numRowsTotal (tws_scale/ttl_decay/
-    event_timer_state) build their own sessions with tracking left on.
+    commit of every partition of every micro-batch.
     """
     from ..vendorpath import ensure_protobuf
 

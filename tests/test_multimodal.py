@@ -324,3 +324,30 @@ def test_resize_nearest_general_geometry():
     ix = [(x * 5) // 2 for x in range(2)]
     expect = src[np.array(iy)[:, None], np.array(ix)[None, :]]
     assert np.array_equal(out, expect)
+
+
+def test_fixture_map_and_dedup_verdict_live_in_one_place():
+    """The family has one Arrow-batched map and one dedup verdict: no
+    multimodal module calls mapInPandas outside media.fixture_rows or
+    localCheckpoint outside phash.hash_groups."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    from facebook_ad_library_data_pipeline_spark.multimodal import media, phash
+
+    def lines_of(fn):
+        lines, start = inspect.getsourcelines(fn)
+        return Path(inspect.getsourcefile(fn)), range(start, start + len(lines))
+
+    allowed = {"mapInPandas": lines_of(media.fixture_rows), "localCheckpoint": lines_of(phash.hash_groups)}
+    hits = []
+    for path in sorted(Path(media.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                name = node.func.attr
+                if name in allowed and not (
+                    path == allowed[name][0] and node.lineno in allowed[name][1]
+                ):
+                    hits.append(f"{path.name}:{node.lineno}: {name}")
+    assert hits == [], hits

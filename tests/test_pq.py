@@ -10,9 +10,14 @@ REGISTRY = load_all()
 
 
 def test_pq_codes_pack_and_reconstruct(spark, sf_dir):
-    from facebook_ad_library_data_pipeline_spark.functions.pq import pq_codes_detail
+    from facebook_ad_library_data_pipeline_spark.functions.pq import (
+        _emb_double,
+        encode,
+        fit_codebooks,
+    )
 
-    rows = pq_codes_detail(spark, sf_dir).collect()
+    codes = encode(_emb_double(spark, sf_dir), spark, fit_codebooks(spark, sf_dir))
+    rows = codes.select("code", "recon_sq_error").collect()
     from facebook_ad_library_data_pipeline_spark.catalog import load_table
 
     assert len(rows) == load_table(spark, sf_dir, "embeddings").count()

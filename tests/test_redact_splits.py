@@ -6,7 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from facebook_ad_library_data_pipeline_spark.functions.redact import redact
+from facebook_ad_library_data_pipeline_spark.functions.redact import (
+    redact_col,
+    redaction_counts,
+)
 from facebook_ad_library_data_pipeline_spark.functions.similarity import (
     NEARDUP_COS,
     band_col,
@@ -30,7 +33,8 @@ def test_redact_rules_fixture(spark):
         (5, "clean text with no identifiers at all"),
     ]
     df = spark.createDataFrame(rows, ["id", "text"])
-    out = {r["id"]: r for r in redact(df).collect()}
+    scrubbed = df.select("id", redact_col("text").alias("text"), *redaction_counts("text"))
+    out = {r["id"]: r for r in scrubbed.collect()}
 
     assert out[1]["email_hits"] == 2
     assert "[EMAIL]" in out[1]["text"] and "@" not in out[1]["text"]
