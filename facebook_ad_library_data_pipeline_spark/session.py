@@ -146,7 +146,10 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
 
     All knobs are configuration, not custom Catalyst code (SURVEY.md §4):
     UTC session tz, AQE + partition coalescing + skew-join handling,
-    Arrow for pandas interchange, shuffle partitions = task slots.
+    Arrow for pandas interchange, shuffle partitions = task slots, and a
+    codegen class cache big enough that a repeated query mix compiles
+    each generated class once per application (no per-pass recompiles
+    for the JIT to warm up again).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or default_cpus()
     # Task retries: local mode takes maxFailures from the MASTER STRING
@@ -210,6 +213,14 @@ def get_spark(app_name: str = "facebook_ad_library_data_pipeline_spark") -> Spar
         # without loopback-TCP handshake/port churn — measured A/B in
         # OPTIMIZATION_r16.md §8.
         .config("spark.python.unix.domain.socket.enabled", "true")
+        # Janino-compiled classes are cached per (context classloader,
+        # generated source). The static default of 100 entries is split
+        # by Guava into 4 LRU segments of 25; the ads_etl mix compiles
+        # 94 classes (under the driver thread's loader and the executor
+        # task loader), so every warm pass recompiled 15-19 evicted
+        # classes (4 and 2 slots) and the JIT profiled and compiled them
+        # afresh. 1000 = 4 x 250, about 10x the largest measured mix.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -71,7 +71,8 @@ def duck():
 def oracle_checks(spark, sf_dir, duck):
     """``oracle_checks(name)``: the outcome of ``oracle_sweep.check_query``
     for ``name``, computed the first time a test asks for it and shared
-    by ``test_oracle_match`` and ``test_oracle_pandas_dtypes_compatible``."""
+    by ``test_oracle_match``, ``test_oracle_pandas_dtypes_compatible``
+    and the multimodal pixel-stats tests."""
     from .oracle_sweep import check_query
 
     checked: dict[str, dict] = {}

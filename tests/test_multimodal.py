@@ -60,13 +60,10 @@ def test_synth_pixels_match_closed_form():
     assert img[3, 7, 1] == (42 * 7 + 3 * 31 + 7 * 13 + 5) % 256
 
 
-def test_pixel_stats_oracle_match(spark, sf_dir, duck):
-    from facebook_ad_library_data_pipeline_spark.registry import load_all
-
-    from .oracle_harness import assert_matches_oracle
-
-    q = load_all()["q_multimodal_pixel_stats"]
-    assert_matches_oracle(q.fn(spark, sf_dir), q.oracle, duck)
+def test_pixel_stats_oracle_match(oracle_checks):
+    failed = oracle_checks("q_multimodal_pixel_stats")["match"]
+    if failed is not None:
+        raise failed
 
 
 # ------------------------------------------------------------------ PNG
@@ -120,13 +117,10 @@ def test_decode_image_compressed_sniffs_formats():
         decode_image_compressed(b"GIF89a not supported")
 
 
-def test_png_pixel_stats_oracle_match(spark, sf_dir, duck):
-    from facebook_ad_library_data_pipeline_spark.registry import load_all
-
-    from .oracle_harness import assert_matches_oracle
-
-    q = load_all()["q_png_pixel_stats"]
-    assert_matches_oracle(q.fn(spark, sf_dir), q.oracle, duck)
+def test_png_pixel_stats_oracle_match(oracle_checks):
+    failed = oracle_checks("q_png_pixel_stats")["match"]
+    if failed is not None:
+        raise failed
 
 
 # ----------------------------------------------------------------- JPEG
@@ -187,13 +181,10 @@ def test_jpeg_fixture_is_gray_and_blockwise():
     assert len(np.unique(img[0:8, 0:8])) == 1
 
 
-def test_jpeg_pixel_stats_oracle_match(spark, sf_dir, duck):
-    from facebook_ad_library_data_pipeline_spark.registry import load_all
-
-    from .oracle_harness import assert_matches_oracle
-
-    q = load_all()["q_jpeg_pixel_stats"]
-    assert_matches_oracle(q.fn(spark, sf_dir), q.oracle, duck)
+def test_jpeg_pixel_stats_oracle_match(oracle_checks):
+    failed = oracle_checks("q_jpeg_pixel_stats")["match"]
+    if failed is not None:
+        raise failed
 
 
 def test_video_container_contract():

@@ -1,6 +1,7 @@
 """Session policy: host-sized defaults, the exact restore of
-``conf_scope`` and the per-application memo ``once`` (no JVM), and the
-lifetime of ``work_dir`` (one subprocess application)."""
+``conf_scope`` and the per-application memo ``once`` (no JVM), the
+lifetime of ``work_dir`` (one subprocess application), and a codegen
+class cache that holds a repeated query mix."""
 
 from __future__ import annotations
 
@@ -180,3 +181,25 @@ def test_stop_removes_work_dir(sf_dir):
     )
     assert run.returncode == 0, run.stderr[-4000:]
     assert "stopped" in run.stdout
+
+
+def test_generated_kernels_compile_once(spark):
+    """A mix of distinct generated classes bigger than Spark's default
+    codegen cache (100 entries in 4 LRU segments of 25) compiles each
+    class once: re-running it adds no Janino compiles. 60 one-kernel
+    queries make 120 entries, one per query under the driver thread's
+    classloader and one under the executor task loader."""
+    from pyspark.sql import functions as F
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def run_mix() -> int:
+        before = compiles.getCount()
+        for i in range(60):
+            df = spark.range(4).select((F.col("id") * 7 + i).alias("x"))
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    assert run_mix() > 0
+    assert run_mix() == 0
