@@ -14,10 +14,11 @@ shuffle partitions = task slots (on a real cluster this is
 
 Session contract: a query never leaves the caller's conf changed. A
 query-local setting goes on a ``newSession()`` child or a reader/writer
-option; a stream that needs its own shuffle partitions passes them to
-``streaming.events.run_stream``, the one caller of ``conf_scope``. The
-one exception: ``catalog.load_table`` and ``events.load_events_stream``
-set ``spark.sql.session.timeZone=UTC`` and
+option. Every stream starts in ``streaming.events.run_stream``, the one
+caller of ``conf_scope``, at shuffle partitions = the session's task
+slots; only a checkpoint builder whose output names its shard count
+passes its own. The one exception: ``catalog.load_table`` and
+``events.load_events_stream`` set ``spark.sql.session.timeZone=UTC`` and
 ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's session.
 Neither setting has a reader-option form, the frames they return carry
 the caller's session (so a child session would not do), and

@@ -205,9 +205,13 @@ def run_stream(
     stream, stop it and return the stopped query (``recentProgress``
     stays readable). The one place a bounded stream's lifecycle lives.
 
-    ``partitions`` sets ``spark.sql.shuffle.partitions`` around the
-    start only: start() clones the session, so the query keeps them and
-    the caller's conf is restored before the drain begins.
+    The query runs at ``spark.sql.shuffle.partitions`` = ``partitions``,
+    which is also its number of state stores, each loaded and committed
+    every micro-batch. It defaults to the session's task slots
+    (``defaultParallelism``); only a builder whose checkpoint output
+    names its shard count passes one. The setting wraps the start only:
+    start() clones the session, so the query keeps it and the caller's
+    conf is restored before the drain begins.
 
     Without ``until`` the drain is ``processAllAvailable()``, which
     also returns once an AvailableNow query has stopped itself.
@@ -218,12 +222,11 @@ def run_stream(
     exception, not a downstream mismatch on a partial sink. Before an
     ``until`` drain stops the query it waits for the running trigger
     to end, so the stop does not land inside a state-store commit."""
+    spark = writer._spark  # the session start() clones
     if partitions is None:
+        partitions = str(spark.sparkContext.defaultParallelism)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": partitions}):
         q = writer.start()
-    else:
-        # writer._spark is the session start() clones
-        with conf_scope(writer._spark, {"spark.sql.shuffle.partitions": partitions}):
-            q = writer.start()
     try:
         if until is None:
             q.processAllAvailable()
@@ -256,22 +259,13 @@ def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    partitions: str = "4",
+    partitions: str | None = None,
     until: Callable[[StreamingQuery], bool] | None = None,
     checkpoint_location: str | None = None,
 ) -> None:
     """Drive a streaming aggregation to completion against the bounded
-    file source (``run_stream``) and land it in the memory sink ``name``.
-
-    Streaming state stores cost per shuffle partition (one store each,
-    re-opened and committed EVERY micro-batch); with the local bounded
-    source the per-store fixed cost dominates any parallelism win —
-    measured at sf0.1: stream-stream join 19.3 s at 32 partitions vs
-    5.1 s at 8 vs 2.7 s at 4; every streaming query in the bench got
-    faster 8→4 (r06 sweep: tumbling 1.6→1.0, incremental rollup
-    2.7→2.3). Default 4 here is a local-mode runtime knob (callers
-    override); on a real cluster partitions scale with executors and
-    state size, not this default."""
+    file source (``run_stream``, which also takes ``partitions`` and
+    ``until``) and land it in the memory sink ``name``."""
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint_location is not None:
         # callers that re-open the checkpoint afterwards (the
@@ -516,7 +510,7 @@ def q_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
     )
     # the trigger stopping itself is what ends the drain
-    run_stream(writer, partitions="4", until=lambda q: not q.isActive)
+    run_stream(writer, until=lambda q: not q.isActive)
     return spark.table("stream_available_now_out")
 
 

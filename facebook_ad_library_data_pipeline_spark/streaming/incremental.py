@@ -200,8 +200,7 @@ def q_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream(
             stream.writeStream.foreachBatch(append_partial).option(
                 "checkpointLocation", str(run_dir / "_checkpoint")
-            ),
-            partitions="8",
+            )
         )
         partials = spark.read.parquet(sink)  # epoch= dirs discovered as a column
         merged = partials.groupBy("day", "event_type").agg(

@@ -42,6 +42,12 @@ from .joins import conversion_join, watermarked_sides
 # Each checkpoint builder runs its stream once per (application,
 # sf_dir) through session.build_once: the state read must see a
 # FINISHED query's checkpoint, and repeat readers share the stream cost.
+# Every stream runs at the session's task slots (events.run_stream),
+# except where a reader's output names the checkpoint's shard count:
+# those builders pin it with the named constants below.
+
+# q_state_metadata reports this shard count
+_TUMBLING_SHARDS = 4
 
 
 def tumbling_checkpoint(spark: SparkSession, sf_dir: str) -> str:
@@ -56,7 +62,7 @@ def tumbling_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             agg,
             "state_read_src",
             output_mode="complete",
-            partitions="4",
+            partitions=str(_TUMBLING_SHARDS),
             checkpoint_location=ckpt,
         )
 
@@ -99,11 +105,11 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _project_tumbling_state(state)
 
 
-_STATE_META_ORACLE = """
+_STATE_META_ORACLE = f"""
 SELECT 'stateStoreSave' AS operator_name,
        0 AS min_partition_id,
-       3 AS max_partition_id,
-       4 AS n_shards
+       {_TUMBLING_SHARDS - 1} AS max_partition_id,
+       {_TUMBLING_SHARDS} AS n_shards
 """
 
 
@@ -114,7 +120,8 @@ def q_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     a checkpoint contains and how their state is sharded — what an
     operator needs before rescaling/repairing a production checkpoint.
     Pinned oracle: the tumbling agg is one stateStoreSave operator
-    sharded across the 4 shuffle partitions the stream ran with."""
+    sharded across the _TUMBLING_SHARDS (4) shuffle partitions the
+    stream ran with."""
     ckpt = tumbling_checkpoint(spark, sf_dir)
     meta = spark.read.format("state-metadata").option("path", ckpt).load()
     return (
@@ -160,7 +167,6 @@ def join_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             out,
             "state_read_join_src",
             output_mode="append",
-            partitions="4",
             checkpoint_location=ckpt,
         )
 
@@ -252,7 +258,6 @@ def changelog_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             agg,
             "state_read_cdf_src",
             output_mode="complete",
-            partitions="4",
             checkpoint_location=ckpt,
         )
 
@@ -325,6 +330,10 @@ def q_state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- typed-state (TWS) read
 
 
+# q_state_reshard migrates this checkpoint's state to _RESHARD_SHARDS
+_TWS_SHARDS = 8
+
+
 def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     """Drive the typed-state engagement processor (ValueState totals +
     MapState per-type counts) over the ts-ordered ntile split to
@@ -346,7 +355,7 @@ def tws_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             out,
             "state_read_tws_src",
             output_mode="update",
-            partitions="8",
+            partitions=str(_TWS_SHARDS),
             checkpoint_location=ckpt,
         )
 
@@ -485,7 +494,8 @@ if _tws_available():
 # checkpoint), and the continuation folds slices 3-4 at 16 partitions;
 # the continued totals must equal the whole-table aggregate — the
 # proof that the re-shard lost nothing and double-counted nothing.
-_RESHARD_ORACLE = """
+_RESHARD_SHARDS = 16
+_RESHARD_ORACLE = f"""
 WITH sliced AS (
   SELECT user_id, value,
          ntile(4) OVER (ORDER BY ts, event_id) AS slice
@@ -497,7 +507,7 @@ SELECT user_id,
            AS total_value,
        CAST(sum(CASE WHEN slice <= 2 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_seeded,
-       CAST(16 AS BIGINT) AS n_shards_new
+       CAST({_RESHARD_SHARDS} AS BIGINT) AS n_shards_new
 FROM sliced
 GROUP BY user_id
 HAVING sum(CASE WHEN slice >= 3 THEN 1 ELSE 0 END) > 0
@@ -567,7 +577,7 @@ def _reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "state_reshard_out",
         output_mode="update",
-        partitions="16",
+        partitions=str(_RESHARD_SHARDS),
         checkpoint_location=new_ckpt,
     )
     from .stateful import keep_latest_per_user
@@ -611,7 +621,7 @@ if _tws_available():
 # ------------------------------------- per-shard SNAPSHOT restore
 
 # One source of truth for the snapshot checkpoint's shard count: the
-# builder's shuffle.partitions conf, the snapshot-await threshold, and
+# builder's stream partitions, the snapshot-await threshold, and
 # q_state_snapshot_shard's per-shard read range all derive from this
 # (r10 advice: three drifting literals meant a mismatch either timed
 # the await out or silently read a shard subset until the oracle
@@ -644,7 +654,6 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         # queue a snapshot on EVERY commit (the maintenance tick then
         # uploads whichever version is queued when it fires)
         scoped.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
-        scoped.conf.set("spark.sql.shuffle.partitions", str(_SNAP_SHARDS))
         src = split_events_dir_ntile(scoped, sf_dir)
 
         def run_phase(path_glob: str, until=None) -> None:
@@ -655,6 +664,7 @@ def snapshot_checkpoint(spark: SparkSession, sf_dir: str) -> str:
                 .format("memory")
                 .queryName("state_read_snap_src")
                 .option("checkpointLocation", ckpt),
+                partitions=str(_SNAP_SHARDS),
                 until=until,
             )
 
@@ -812,7 +822,6 @@ def list_timer_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             out,
             "state_read_listtimer_src",
             output_mode="update",
-            partitions="8",
             checkpoint_location=ckpt,
         )
         # the readers open the CHECKPOINT, never this sink — drop the view

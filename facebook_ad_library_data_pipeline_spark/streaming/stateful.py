@@ -235,10 +235,7 @@ def q_stream_stateful_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata, so arg_max is well-defined)."""
     events = load_events_stream(spark, sf_dir)
     out = user_state_stream(events)
-    # 8 partitions: each stateful partition spins a Python worker + a
-    # state store; measured at sf0.1 (1500 user keys) 8 partitions beat
-    # 32 (2.1s vs 3.0s) — per-store overhead dominates tiny state
-    run_stream_to_memory(out, "stream_stateful_user_out", output_mode="update", partitions="8")
+    run_stream_to_memory(out, "stream_stateful_user_out", output_mode="update")
     latest = spark.table("stream_stateful_user_out")
     # update mode appends a row per (batch, user); keep the last emit
     return keep_latest_per_user(latest)
@@ -368,7 +365,6 @@ def q_stream_group_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_group_timeout_out",
         output_mode="update",
-        partitions="8",
         until=lambda _q: all_counted(
             scoped, "stream_group_timeout_out", ("user_id", "session_id"), total
         ),
@@ -627,18 +623,7 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
     scoped = _tws_scoped_session(spark)
     events = load_events_stream(scoped, sf_dir)
     out = user_engagement_tws(events)
-    # 16 partitions for the WHOLE tws family: unlike the built-in
-    # streaming aggs (store fixed cost dominates ⇒ fewer is faster,
-    # see run_stream_to_memory), tws cost is per-KEY protocol
-    # round-trips to the state server, which parallelize across
-    # partitions. Measured family total at sf0.1 (same session,
-    # 6 queries): 4p=72s*, 8p=63/56s, 16p=53/53s, 32p=72s — 16 is the
-    # knee where round-trip parallelism still beats per-partition
-    # store+worker fixed cost on local[32]. (*4p from an earlier
-    # sweep, same protocol.)
-    run_stream_to_memory(
-        out, "stream_tws_out", output_mode="update", partitions="16"
-    )
+    run_stream_to_memory(out, "stream_tws_out", output_mode="update")
     latest = _snap_sink(scoped, "stream_tws_out")
     return keep_latest_per_user(latest)
 
@@ -766,7 +751,6 @@ def q_stream_tws_list_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_list_out",
         output_mode="update",
-        partitions="16",
         until=lambda _q: all_counted(scoped, "stream_tws_list_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_list_out")
@@ -887,7 +871,6 @@ def q_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_timer_out",
         output_mode="update",
-        partitions="16",
         until=lambda _q: all_counted(scoped, "stream_tws_timer_out", ("user_id",), total),
     )
     latest = _snap_sink(scoped, "stream_tws_timer_out")
@@ -1078,7 +1061,6 @@ def q_stream_tws_event_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "stream_tws_event_timer_out",
         output_mode="update",
-        partitions="16",
         until=lambda _q: all_counted(
             scoped, "stream_tws_event_timer_out", ("user_id", "window_start"), total
         ),
@@ -1214,9 +1196,7 @@ def q_stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
         initialState=backfill,
     )
-    run_stream_to_memory(
-        out, "stream_tws_init_out", output_mode="update", partitions="16"
-    )
+    run_stream_to_memory(out, "stream_tws_init_out", output_mode="update")
     latest = _snap_sink(scoped, "stream_tws_init_out")
     return keep_latest_per_user(latest)
 
@@ -1373,9 +1353,7 @@ def q_stream_tws_map_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     values()/keys()/removeKey shows up as a red hash."""
     scoped = _tws_scoped_session(spark)
     out = user_spill_map_tws(split_stream(scoped, split_events_dir_ntile(scoped, sf_dir)))
-    run_stream_to_memory(
-        out, "stream_tws_spill_out", output_mode="update", partitions="16"
-    )
+    run_stream_to_memory(out, "stream_tws_spill_out", output_mode="update")
     latest = _snap_sink(scoped, "stream_tws_spill_out")
     return keep_latest_per_user(latest)
 
@@ -1552,9 +1530,7 @@ def q_stream_tws_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     reservoir could only be invariant-checked."""
     scoped = _tws_scoped_session(spark)
     out = bounded_reservoir_tws(split_stream(scoped, split_events_dir_ntile(scoped, sf_dir)))
-    run_stream_to_memory(
-        out, "stream_tws_res_out", output_mode="update", partitions="16"
-    )
+    run_stream_to_memory(out, "stream_tws_res_out", output_mode="update")
     latest = _snap_sink(scoped, "stream_tws_res_out")
     return keep_latest_per_user(latest)
 

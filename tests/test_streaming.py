@@ -1083,32 +1083,47 @@ def test_checkpoint_pins_shuffle_partitions(spark, sf_dir, tmp_path):
 
 
 def test_stream_partitions_scoped_to_start(spark, sf_dir, tmp_path):
-    """run_stream_to_memory sets shuffle partitions only around
-    writer.start(): the started query (which clones the session) keeps
-    them — its first offset log records "3" — while the caller's conf
-    is the same after the drain as before it."""
+    """run_stream sets shuffle partitions only around writer.start(): the
+    started query (which clones the session) keeps them — its first
+    offset log records the ``partitions`` passed, or the session's task
+    slots when none are, whatever the caller's conf says — while the
+    caller's conf is the same after the drain as before it."""
     import json
 
     from facebook_ad_library_data_pipeline_spark.streaming.events import (
         load_events_stream,
-        run_stream_to_memory,
+        run_stream,
         tumbling_counts,
     )
 
-    before = dict(spark.conf.getAll)
+    key = "spark.sql.shuffle.partitions"
+    slots = str(spark.sparkContext.defaultParallelism)
     agg = tumbling_counts(load_events_stream(spark, sf_dir).withWatermark("ts", "1 hour"))
-    ckpt = tmp_path / "ckpt"
+    prev = spark.conf.get(key)
+    # (partitions passed, caller's conf, what the stream must run at)
+    cases = [("3", prev, "3"), (None, "7", slots)]
     try:
-        run_stream_to_memory(
-            agg, "partitions_scope_out", partitions="3", checkpoint_location=str(ckpt)
-        )
-        assert spark.table("partitions_scope_out").count() > 0
+        for i, (partitions, caller, want) in enumerate(cases):
+            spark.conf.set(key, caller)
+            before = dict(spark.conf.getAll)
+            ckpt = tmp_path / f"ckpt{i}"
+            writer = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName("partitions_scope_out")
+                .option("checkpointLocation", str(ckpt))
+            )
+            try:
+                run_stream(writer, partitions=partitions)
+                assert spark.table("partitions_scope_out").count() > 0
+            finally:
+                spark.catalog.dropTempView("partitions_scope_out")
+            # offset log: a version line, then the batch metadata JSON
+            meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+            assert meta["conf"][key] == want, (partitions, caller)
+            assert dict(spark.conf.getAll) == before
     finally:
-        spark.catalog.dropTempView("partitions_scope_out")
-    # offset log: a version line, then the batch metadata JSON
-    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
-    assert meta["conf"]["spark.sql.shuffle.partitions"] == "3"
-    assert dict(spark.conf.getAll) == before
+        spark.conf.set(key, prev)
 
 
 def test_split_sources_deterministic_and_complete(spark, sf_dir):
@@ -1245,29 +1260,60 @@ def test_stream_lifecycle_lives_in_run_stream():
     """Every bounded stream starts, drains and stops in one function: no
     package module calls processAllAvailable, awaitTermination, a
     sleep, conf_scope or a stream writer's start() outside
-    events.run_stream."""
+    events.run_stream. Its partition rule lives there too: no string
+    outside it and session.get_spark names spark.sql.shuffle.partitions,
+    and only the four checkpoint builders whose output names a shard
+    count pass ``partitions=`` (through run_stream_to_memory, which
+    forwards it)."""
     import ast
     import inspect
     from pathlib import Path
 
     import facebook_ad_library_data_pipeline_spark as pkg
-    from facebook_ad_library_data_pipeline_spark.streaming import events
+    from facebook_ad_library_data_pipeline_spark import session
+    from facebook_ad_library_data_pipeline_spark.streaming import events, state_reader
 
-    root = Path(pkg.__file__).parent
-    lines, start = inspect.getsourcelines(events.run_stream)
-    allowed = range(start, start + len(lines))
+    def lines_of(*fns):
+        out = set()
+        for fn in fns:
+            lines, start = inspect.getsourcelines(fn)
+            path = Path(inspect.getsourcefile(fn))
+            out.update((path, n) for n in range(start, start + len(lines)))
+        return out
+
+    runner = lines_of(events.run_stream)
+    conf_key = runner | lines_of(session.get_spark)
+    pinned = lines_of(
+        events.run_stream_to_memory,
+        state_reader.tumbling_checkpoint,
+        state_reader.tws_checkpoint,
+        state_reader._reshard,
+        state_reader.snapshot_checkpoint,
+    )
     banned = {"processAllAvailable", "awaitTermination", "sleep", "conf_scope", "start"}
+    root = Path(pkg.__file__).parent
     hits = []
     for path in sorted(root.rglob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            if name in banned and not (
-                path == Path(events.__file__) and node.lineno in allowed
+        tree = ast.parse(path.read_text())
+        docstrings = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+        for node in ast.walk(tree):
+            at = (path, getattr(node, "lineno", 0))
+            where = f"{path.relative_to(root)}:{at[1]}"
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in banned and at not in runner:
+                    hits.append(f"{where}: {name}")
+                if any(k.arg == "partitions" for k in node.keywords) and at not in pinned:
+                    hits.append(f"{where}: partitions=")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "spark.sql.shuffle.partitions" in node.value
+                and id(node) not in docstrings
+                and at not in conf_key
             ):
-                hits.append(f"{path.relative_to(root)}:{node.lineno}: {name}")
+                hits.append(f"{where}: spark.sql.shuffle.partitions")
     assert hits == [], hits
 
 
